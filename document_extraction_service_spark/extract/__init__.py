@@ -2,5 +2,5 @@
 
 Each module is independently unit-testable without a SparkSession
 (SURVEY §5.2 item 2); `pipeline.extract_document` composes them and is
-the single function the pandas UDFs wrap.
+the single function the Arrow UDF (udfs.py) wraps.
 """

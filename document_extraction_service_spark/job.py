@@ -25,9 +25,15 @@ Scale design (north_rule requirements, mapped):
     snapshot-id fingerprints, snapshot-checkpoint resume) is
     iceberg_sink.run_job_iceberg, exercised end-to-end by
     tests/test_iceberg.py whenever SPARK_GRAFT_ICEBERG_JARS is set.
-  * metrics: n_ok/n_failed derived from the lineage aggregation over
-    the committed output (a column-pruned scan; .observe() was measured
-    2x slower on the write stage and removed).
+  * metrics: n_ok/n_failed/n_truncated/n_fallback come from the lineage
+    aggregation over the committed output (a column-pruned scan;
+    .observe() was measured 2x slower on the write stage and removed),
+    collected once as Arrow and written back as a single-task
+    LocalTableScan.  The returned dict carries plan_ms, write_ms
+    (wall_ms = plan + write) and lineage_ms.  Without --resume or
+    --wet a run launches only the write job, the lineage aggregation
+    and the lineage write: bucket dirs are listed on the driver
+    (session.py), never by a listing job.
 """
 
 from __future__ import annotations
@@ -38,6 +44,7 @@ import hashlib
 import os
 import time
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -319,24 +326,28 @@ def run_job(
         )
     )
     # the lineage table is <= n_buckets rows by construction: collect
-    # it ONCE (driver-safe, the finished_buckets contract), total it in
-    # Python, and write the collected rows back — one pass over the
-    # committed output instead of two (the previous cache + agg +
-    # cached write ran the totals aggregation as its own job)
-    lineage_rows = lineage.collect()
-    spark.createDataFrame(lineage_rows, lineage.schema).write.mode(
+    # it ONCE as Arrow (driver-safe, the finished_buckets contract),
+    # total it on the driver, and write the collected table back — one
+    # pass over the committed output instead of two.  An Arrow table
+    # becomes a LocalTableScan, written by one task as one file with no
+    # Python worker; a list of Rows would be pickled through a Python
+    # RDD instead (128 rows at local[4] on 4 vCPUs: 0.23 -> 0.085 s).
+    lineage_tbl = lineage.toArrow()
+    spark.createDataFrame(lineage_tbl, lineage.schema).coalesce(1).write.mode(
         "append"
     ).parquet(lineage_path)
     lineage_ms = int((time.time() - t_written) * 1000)
 
-    n_rows = sum(r["n_ok"] + r["n_failed"] for r in lineage_rows)
+    totals = {c: pc.sum(lineage_tbl[c]).as_py() or 0
+              for c in ("n_ok", "n_failed", "n_truncated", "n_fallback")}
+    n_rows = totals["n_ok"] + totals["n_failed"]
     return {
         "run_id": run_id,
         "input_fingerprint": fp,
         "n_rows": n_rows,
-        "n_ok": sum(r["n_ok"] for r in lineage_rows),
-        "n_truncated": sum(r["n_truncated"] for r in lineage_rows),
-        "n_fallback": sum(r["n_fallback"] for r in lineage_rows),
+        "n_ok": totals["n_ok"],
+        "n_truncated": totals["n_truncated"],
+        "n_fallback": totals["n_fallback"],
         "wall_ms": wall_ms,
         "plan_ms": int((t_plan - t0) * 1000),
         "write_ms": int((t_written - t_plan) * 1000),

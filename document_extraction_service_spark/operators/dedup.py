@@ -456,6 +456,14 @@ def _vnorm(col):
 BLOCK_PAIR_CHUNK = 32
 
 
+def _chunk_ids(docs: str):
+    """0 .. n_chunks-1 over a docs array cut into BLOCK_PAIR_CHUNK-wide
+    slices.  The end is floored at 0: for an empty array,
+    sequence(0, -1) would count DOWN to [0, -1]."""
+    last = F.ceil(F.size(docs) / BLOCK_PAIR_CHUNK).cast("int") - 1
+    return F.sequence(F.lit(0), F.greatest(F.lit(0), last))
+
+
 def _chunked_block_pairs(posts: DataFrame, carry: list) -> DataFrame:
     """Bounded-block docs-array table -> (carry..., a, b) candidate
     pair rows, generated at FULL EXECUTOR WIDTH (r7).
@@ -477,15 +485,7 @@ def _chunked_block_pairs(posts: DataFrame, carry: list) -> DataFrame:
     partition the `a` side and the b > a condition is unchanged."""
     n_parts = posts.sparkSession.sparkContext.defaultParallelism * 2
     chunks = (
-        posts.withColumn(
-            "ci",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.ceil(F.size("docs") / BLOCK_PAIR_CHUNK).cast("int") - 1,
-                )
-            ),
-        )
+        posts.withColumn("ci", F.explode(_chunk_ids("docs")))
         .withColumn(
             "a_chunk",
             F.slice(

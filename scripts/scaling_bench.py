@@ -312,7 +312,7 @@ This VM alternates between a quiet mode and a degraded mode on a
 round-3 controlled run, the IDENTICAL job binary on the IDENTICAL
 150k-row input measured 921 docs/s and 5,390 docs/s ten minutes apart
 at local[32], while local[8] swung far less and local[2] barely moved.
-A six-run diagnostic (scripts/diag32.py) in a quiet window measured
+A six-run diagnostic (a one-off script, since removed; see git history) in a quiet window measured
 every local[32] run at 5,100-7,400 docs/s with /proc/stat steal ~0%
 and sys CPU 5-23%, for BOTH snappy and zstd write codecs — i.e. no
 code-level or codec-level 32-wide pathology remains; slow samples are
@@ -326,7 +326,7 @@ are recorded); quiet host ~0.25s, degraded windows multiply it.
 Interpret any slow local[{max(CORES)}] sample against its probe pair.
 
 Quiet-window evidence for the {max(CORES)}-wide engine itself
-(scripts/diag32.py, six consecutive 150k-row local[32] runs in one
+(the same diagnostic, six consecutive 150k-row local[32] runs in one
 quiet window, reproducible): wall 20.3-29.2s = 5,131-7,407 docs/s,
 /proc/stat steal ~0%, for both snappy and zstd write codecs — i.e.
 1.4-2.0x the local[8] stable band (3,490-3,866 docs/s) on every one

@@ -10,6 +10,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pyspark.sql import SparkSession
 
+    from document_extraction_service_spark.session import PARTITION_DISCOVERY_THRESHOLD
+
     s = (
         SparkSession.builder.master("local[2]")
         .appName("des_spark_tests")
@@ -17,6 +19,9 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # as build_session: bucket-dir reads list on the driver
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(PARTITION_DISCOVERY_THRESHOLD))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
         .getOrCreate()

@@ -150,3 +150,51 @@ def test_write_options_env_override(monkeypatch):
     assert got["parquet.block.size"] == "16777216"
     # untouched defaults survive the merge
     assert got["parquet.enable.dictionary"] == "false"
+
+
+def test_job_budget_bucketed_input(spark, dirs, tmp_path):
+    """run_job over input in all DEFAULT_BUCKETS bucket=NN dirs launches
+    only its own work: the extraction write, the lineage aggregation and
+    one single-task lineage write planned as a LocalTableScan.  No job
+    lists the bucket dirs (one task per dir), and the lineage rows never
+    pass through a Python worker."""
+    import pyarrow.parquet as pq
+
+    from document_extraction_service_spark import fixtures as fx
+    from document_extraction_service_spark.job import DEFAULT_BUCKETS
+
+    inp = tmp_path / "bucketed"
+    for b in range(DEFAULT_BUCKETS):
+        (inp / f"bucket={b}").mkdir(parents=True)
+        pq.write_table(fx.arrow_table(1, lo=b), str(inp / f"bucket={b}" / "part-0.parquet"))
+    out, lin = dirs
+    sc = spark.sparkContext
+    sc.setJobGroup("job-budget", "run_job over 128 bucket dirs")
+    try:
+        m = run_job(spark, str(inp), out, lin, "t-budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["n_rows"] == DEFAULT_BUCKETS
+
+    tracker = sc.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup("job-budget"))
+    tasks = {j: [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds]
+             for j in jobs}
+    assert not any(DEFAULT_BUCKETS in t for t in tasks.values()), tasks
+
+    # the SQL status store maps every job to its query; it is fed by
+    # the listener bus, so drain that first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    queries = []  # (job ids, physical plan) in execution order
+    for e in to_java(spark._jsparkSession.sharedState().statusStore().executionsList()):
+        mine = set(to_java(e.jobs().keySet())) & jobs
+        if mine:
+            queries.append((mine, e.physicalPlanDescription()))
+    assert set().union(*(q[0] for q in queries)) == jobs, "a job outside any query"
+    assert len(queries) == 3, [p.splitlines()[:4] for _, p in queries]
+    (write_jobs, write_plan), (_, agg_plan), (lin_jobs, lin_plan) = queries
+    assert "ArrowEvalPython" in write_plan and len(write_jobs) == 1
+    assert "HashAggregate" in agg_plan
+    assert [tasks[j] for j in lin_jobs] == [[1]]
+    assert "LocalTableScan" in lin_plan and "ExistingRDD" not in lin_plan

@@ -313,6 +313,30 @@ def test_chunked_block_pairs_equals_plain_double_explode(spark):
     assert len(p) == n * (n - 1) // 2 + 3 + BLOCK_PAIR_CHUNK * (BLOCK_PAIR_CHUNK - 1) // 2
 
 
+def test_chunked_block_pairs_empty_block(spark):
+    """An empty docs array is one empty chunk, never the descending
+    sequence(0, -1), and yields no pairs."""
+    from pyspark.sql import functions as F
+
+    from document_extraction_service_spark.operators.dedup import (
+        BLOCK_PAIR_CHUNK,
+        _chunk_ids,
+        _chunked_block_pairs,
+    )
+
+    sizes = (0, 1, BLOCK_PAIR_CHUNK, BLOCK_PAIR_CHUNK + 1)
+    posts = spark.createDataFrame(
+        [(blk, [(blk * 100 + i, 0.0) for i in range(size)]) for blk, size in enumerate(sizes)],
+        "blk int, docs array<struct<vec_id: long, x: double>>",
+    )
+    ids = {r["blk"]: r["ci"] for r in posts.select("blk", _chunk_ids("docs").alias("ci")).collect()}
+    assert ids == {0: [0], 1: [0], 2: [0], 3: [0, 1]}
+    pairs = _chunked_block_pairs(posts, ["blk"]).groupBy("blk").count()
+    n = BLOCK_PAIR_CHUNK
+    assert {r["blk"]: r["count"] for r in pairs.collect()} == {
+        2: n * (n - 1) // 2, 3: (n + 1) * n // 2}
+
+
 def test_embedding_pipeline_recall_vs_exact(spark):
     """The scale path (sign-LSH candidates -> exact verify -> CC) must
     recover most exact within-label near-dup pairs: every exact pair it

@@ -10,33 +10,48 @@ from pyspark.sql import functions as F
 from document_extraction_service_spark import fixtures as fx
 from document_extraction_service_spark.extract.pipeline import extract_document
 from document_extraction_service_spark.fixtures import pages_df
+from document_extraction_service_spark.schema import PAGES_SCHEMA
 from document_extraction_service_spark.udfs import with_extraction
 
 N = 120
 
+# Rows the fixture mix draws rarely or never below N: the null-html
+# text fallback, null and empty payloads, a UTF-16 BOM page, and the
+# adversarial kinds 0, 1 and 3 (ids 17/64/97 below N are kinds 2/4/2).
+EDGE_ROWS = [
+    {"url": "https://edge.example/fallback", "warc_ts": None, "html": None,
+     "text": "Only the crawl text survives. It has two sentences.", "lang": "en"},
+    {"url": "https://edge.example/null", "warc_ts": None, "html": None,
+     "text": None, "lang": None},
+    {"url": "https://edge.example/empty", "warc_ts": None, "html": b"",
+     "text": None, "lang": "de"},
+    {"url": "https://edge.example/utf16", "warc_ts": None,
+     "html": b"\xff\xfe" + ("<html><body><h1>Grüße</h1><p>Ein kurzer Absatz "
+                            "aus Köln mit genug Wörtern.</p></body></html>").encode("utf-16-le"),
+     "text": None, "lang": None},
+] + [fx.gen_page(i) for i in (200, 151, 713)]
+
 
 @pytest.fixture(scope="module")
 def extracted_rows(spark):
-    df = with_extraction(pages_df(spark, N, partitions=4))
-    return {r["url"]: r for r in df.collect()}
+    pages = pages_df(spark, N, partitions=4).unionByName(
+        spark.createDataFrame(EDGE_ROWS, PAGES_SCHEMA))
+    return {r["url"]: r for r in with_extraction(pages).collect()}
 
 
 def test_row_count_and_schema(extracted_rows, spark):
-    assert len(extracted_rows) == N
+    assert len(extracted_rows) == N + len(EDGE_ROWS)
     df = with_extraction(pages_df(spark, 5, partitions=1))
     assert [f.name for f in df.schema.fields] == ["url", "warc_ts", "extraction", "status"]
 
 
 def test_spark_equals_pure_python(extracted_rows):
     """Row-for-row: Spark UDF output == direct call of the same function."""
-    for i in range(N):
-        row = fx.gen_page(i)
-        want = extract_document(row["html"], row["url"], row["lang"])
+    for row in [fx.gen_page(i) for i in range(N)] + EDGE_ROWS:
+        want = extract_document(row["html"], row["url"], row["lang"], row["text"])
         got = extracted_rows[row["url"]]
         assert got["extraction"]["extracted_text"] == want["extraction"]["extracted_text"]
-        assert got["status"]["ok"] == want["status"]["ok"]
-        assert got["status"]["n_tables"] == want["status"]["n_tables"]
-        assert got["status"]["n_images"] == want["status"]["n_images"]
+        assert got["status"].asDict() == want["status"]
         # deep compare via JSON round-trip (Row -> dict)
         assert json.loads(json.dumps(got["extraction"].asDict(recursive=True))) == json.loads(
             json.dumps(want["extraction"], ensure_ascii=False)
@@ -60,21 +75,14 @@ def test_html_not_in_output_plan(spark):
     assert "html" not in df.columns
 
 
-def test_error_rows_captured(spark):
-    import pandas as pd
-
-    from document_extraction_service_spark.schema import PAGES_SCHEMA
-
-    pdf = pd.DataFrame(
-        {
-            "url": ["https://x/bad"],
-            "warc_ts": [None],
-            "html": [None],
-            "text": [None],
-            "lang": [None],
-        }
-    )
-    df = with_extraction(spark.createDataFrame(pdf, schema=PAGES_SCHEMA))
-    r = df.collect()[0]
-    assert r["status"]["ok"] is True  # None html -> empty page, still ok
-    assert r["extraction"]["extracted_text"] == ""
+def test_error_rows_captured(extracted_rows):
+    """Null, empty and re-encoded payloads come back ok through the
+    Arrow boundary, each on its own path."""
+    got = {row["url"].rsplit("/", 1)[1]: extracted_rows[row["url"]] for row in EDGE_ROWS[:4]}
+    assert all(r["status"]["ok"] and r["status"]["error"] is None for r in got.values())
+    assert got["fallback"]["status"]["fallback"]
+    assert got["fallback"]["extraction"]["extracted_text"] == EDGE_ROWS[0]["text"]
+    for kind in ("null", "empty"):  # None html -> empty page, still ok
+        assert not got[kind]["status"]["fallback"]
+        assert got[kind]["extraction"]["extracted_text"] == ""
+    assert "Köln" in got["utf16"]["extraction"]["extracted_text"]
