@@ -54,7 +54,7 @@ from .udfs import extraction_col
 DEFAULT_BUCKETS = 128
 
 # Parquet writer options for the output table, A/B-tuned at local[32]
-# with scripts/write_ab.py (VERDICT r2 next-round #1: the nested-struct
+# by a one-off script in git history (VERDICT r2 #1: the nested-struct
 # encode was the 32-wide limiter).  Findings (48k pages, interleaved
 # reps, medians): dictionary encoding OFF saves encode CPU at ZERO size
 # cost — extracted text/sentences/urls are near-unique, so parquet
@@ -62,24 +62,11 @@ DEFAULT_BUCKETS = 128
 # write time (~5%) and bytes (-25%), which at 100 TB is a quarter of
 # the output IO.  Row-group size was a wash at this file size; JSON
 # pre-serialization of the struct was ~8% faster but breaks the typed
-# struct-per-url output contract (north_star) — rejected.  Overridable
-# per-run via SPARK_GRAFT_WRITE_OPTS="k=v,k=v" for benchmarking.
+# struct-per-url output contract (north_star) — rejected.
 DEFAULT_WRITE_OPTS: dict[str, str] = {
     "compression": "zstd",
     "parquet.enable.dictionary": "false",
 }
-
-
-def write_options() -> dict[str, str]:
-    env = os.environ.get("SPARK_GRAFT_WRITE_OPTS", "")
-    if not env:
-        return dict(DEFAULT_WRITE_OPTS)
-    out = dict(DEFAULT_WRITE_OPTS)
-    for item in env.split(","):
-        if "=" in item:
-            k, _, v = item.partition("=")
-            out[k.strip()] = v.strip()
-    return out
 
 
 def input_fingerprint(spec: str, n_buckets: int = DEFAULT_BUCKETS) -> str:
@@ -267,9 +254,8 @@ def run_job(
         # per-write (not session-conf) so bucket-level idempotence holds
         # under any session: replays overwrite only the buckets they carry
         .option("partitionOverwriteMode", "dynamic")
+        .options(**DEFAULT_WRITE_OPTS)
     )
-    for k, v in write_options().items():
-        writer = writer.option(k, v)
     writer.partitionBy("bucket").parquet(output_path)
     t_written = time.time()
     wall_ms = int((time.time() - t0) * 1000)

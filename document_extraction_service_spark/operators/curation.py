@@ -15,7 +15,6 @@ survives past the per-doc scoring projection).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .tables import read_table
@@ -34,17 +33,8 @@ from .textstats import (
 QUALITY_MIN = 0.5   # floored score threshold (same floored value both engines)
 
 
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
-
-
 def curate_corpus(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.trim(F.col("text"))))
     # canonical row per fp in ONE combine-enabled shuffle (r7): struct
     # comparison is lexicographic and doc_id leads, so min(struct)
@@ -154,7 +144,7 @@ def curate_sample_stratified(spark, sf_dir):
     state, embarrassingly parallel at 10^12 rows.  (Production would use
     xxhash64 for speed; md5 keeps the oracle exact in SQL — same
     engine-independent-hash reasoning as text_fingerprint.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     frac = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long") / F.lit(4294967296.0)
@@ -229,7 +219,7 @@ def curate_quality_gate(spark, sf_dir):
     expressions, no shuffle): at 10^12 rows the gate costs what the
     scan costs, and the reason column aggregates into the per-rule
     drop report every corpus card publishes."""
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     reason = gate_reason()
     return d.select(
         "doc_id",
@@ -276,7 +266,7 @@ def curate_gate_report(spark, sf_dir):
     all publish one): docs and word mass per gate outcome.  One scan +
     one tiny aggregation (5 possible keys) with map-side combine; at
     10^12 rows the shuffle moves at most a few partial rows per task."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     reason = gate_reason()
     return (
         d.select(
@@ -330,7 +320,7 @@ def curate_decontaminate(spark, sf_dir):
     10^12-row side never shuffles its grams.  Output is only the
     contaminated docs (sparse by construction — a shared 4-gram from a
     ~30-word vocabulary is ~1e-4 per gram — so the result is small)."""
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     grams = d.select(
         "doc_id", F.explode(_contam_ngrams()).alias("g")
     )
@@ -384,7 +374,7 @@ def curate_token_budget(spark, sf_dir):
     docs."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     n_words = F.size(F.split(F.trim(F.col("text")), " "))
     n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
     en_hits = _marker_hits("en")
@@ -497,7 +487,7 @@ def curate_domain_mixture(spark, sf_dir):
     Deterministic: rates are floored to 1e-6 (identical double
     arithmetic both engines); the keep decision is a pure function of
     doc_id."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     per_doc = d.select(
         "doc_id", "lang",
         F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
@@ -589,7 +579,7 @@ def curate_pack_sequences(spark, sf_dir):
     deterministic and engine-exact."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     per_doc = d.select(
         "doc_id",
         (F.col("doc_id") % PACK_SHARDS).alias("shard"),
@@ -663,7 +653,7 @@ def curate_epoch_plan(spark, sf_dir):
     already paid by every curation query; the plan itself is
     constant-size.  Integer arithmetic except the floored epochs
     ratio (identical double division both engines)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     per_doc = d.select(
         "lang",
         F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
@@ -759,7 +749,7 @@ def curate_dsir(spark, sf_dir):
     own shard key.  ONE corpus scan total (r7: the bucketed gram
     stream is checkpointed and reused by the score pass), zero
     sort-merge joins."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     grams = d.select("doc_id", F.explode(_word_ngrams(2)).alias("gram"))
     # the bucketed gram stream feeds BOTH the count pass and the
     # scoring join: localCheckpoint (lazy) builds the ngram arrays and
@@ -849,7 +839,7 @@ def curate_gopher_rules(spark, sf_dir):
     string/array arithmetic on the row, zero shuffles, zero Python.
     The words array is materialized ONCE as a column and HOF lambdas
     only reference it (never re-derive it — gotcha #19)."""
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     w = d.select(
         "doc_id",
         F.split(F.trim(F.col("text")), " ").alias("words"),
@@ -961,7 +951,7 @@ def curate_c4_filters(spark, sf_dir):
     derive per-LINE scalars inside the lambda (gotcha #19 applies to
     derived ARRAYS indexed per element, not scalar work on the
     lambda variable)."""
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     w = d.select(
         "doc_id", F.split(F.trim(F.col("text")), " ").alias("words")
     )
@@ -1052,7 +1042,7 @@ def curate_length_dist(spark, sf_dir):
     sort).  Deterministic: integer arithmetic only."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     n = F.size(F.split(F.trim(F.col("text")), " "))
     t = d.select(n.alias("n_tokens")).select(
         F.expr(_len_bucket_case("n_tokens")).cast("long").alias("bucket"),

@@ -24,10 +24,10 @@ against the exact-Jaccard ground truth (recall/precision).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tables import read_table
+from .tables import read_table, table_rows
 
 SHINGLE_K = 3          # 3-word shingles
 JACCARD_THRESHOLD = 0.5
@@ -57,15 +57,6 @@ EMB_BLOCK_CAP = 1024
 # Bucket bound for the embedding pipeline's sign-LSH candidate stage
 # (same postings pattern; a degenerate bucket is not near-dup signal).
 EMB_PIPE_BUCKET_CAP = 256
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
 
 
 def _shingle_array():
@@ -115,7 +106,7 @@ def dedup_exact(spark, sf_dir):
     """Exact dedup by content hash (hash-groupBy; O6 generalized).
     Returns every doc with its fingerprint and duplicate-group size —
     at 10^12 rows this is a single shuffle on the hash key."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.trim(F.col("text"))))
     counts = (
         d.select(F.col("doc_id"), fp.alias("fp"))
@@ -139,7 +130,7 @@ SELECT f.doc_id, f.fp, c.n_same, c.canonical_id FROM f JOIN c USING (fp)
 def dedup_ngram_jaccard(spark, sf_dir):
     """Exact n-gram Jaccard near-dup pairs via a DF-capped postings
     list (reference O7's fuzzy dedup generalized cross-document)."""
-    return jaccard_pairs(_t(spark, sf_dir, "documents", wide=True))
+    return jaccard_pairs(read_table(spark, sf_dir, "documents", wide=True))
 
 
 def capped_postings(docs: DataFrame) -> DataFrame:
@@ -242,7 +233,7 @@ def containment_pairs(docs: DataFrame) -> DataFrame:
 
 def dedup_containment(spark, sf_dir):
     """Driver entry: containment_pairs over the documents table."""
-    return containment_pairs(_t(spark, sf_dir, "documents", wide=True))
+    return containment_pairs(read_table(spark, sf_dir, "documents", wide=True))
 
 
 # DuckDB lists are 1-indexed; Spark transform above is 0-indexed — both
@@ -334,7 +325,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     skewed self-join key.  Oracle: pinned pure-Python XXH64 replay
     (scripts/replay_sketches.py — full value verification); recall/
     precision vs exact Jaccard additionally asserted in tests."""
-    bands = _minhash_bands(_t(spark, sf_dir, "documents", wide=True))
+    bands = _minhash_bands(read_table(spark, sf_dir, "documents", wide=True))
     posts = (
         bands.groupBy("band", "bucket")
         .agg(F.collect_set("doc_id").alias("docs"))
@@ -360,7 +351,7 @@ def dedup_simhash(spark, sf_dir):
     within-bucket pair space stays constant-bounded at any corpus
     size — see the inline note.  Oracle: pinned pure-Python XXH64
     replay (scripts/replay_sketches.py — full value verification)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     ).filter(F.length("tok") > 0)
@@ -543,7 +534,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     """Embedding near-dup pairs: cosine >= EMB_COS_THRESHOLD within
     label blocks (the label is the coarse partitioner), blocks bounded
     at EMB_BLOCK_CAP — see embedding_cosine_pairs."""
-    return embedding_cosine_pairs(_t(spark, sf_dir, "embeddings"))
+    return embedding_cosine_pairs(read_table(spark, sf_dir, "embeddings"))
 
 
 # Block cap mirrored exactly: labels with 2..CAP members participate.
@@ -587,7 +578,9 @@ def dedup_clusters(spark, sf_dir):
     Deterministic: min-label is order-independent; the driver loop's
     only synchronization is a shuffle-free label-sum checksum per round
     (_label_checksum — monotone, so equal sums mean fixpoint)."""
-    pairs = jaccard_pairs(_t(spark, sf_dir, "documents", wide=True)).select("doc_a", "doc_b")
+    pairs = jaccard_pairs(
+        read_table(spark, sf_dir, "documents", wide=True)
+    ).select("doc_a", "doc_b")
     return connected_components(pairs)
 
 
@@ -774,7 +767,7 @@ def dedup_pipeline(spark, sf_dir):
     two definitions can disagree on corpora with hot shingles (df >
     SHINGLE_DF_CAP), so pipeline clusters need not exactly equal
     dedup_clusters — by design, and mirrored in the pinned replay."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     cand = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     # hashed shingle universe for the verify intersections (r7): the
     # candidate joins ship long arrays, array_intersect compares longs;
@@ -812,8 +805,8 @@ def embedding_lsh_candidates(e: DataFrame, tables: int | None = None,
     if tables is None:
         tables = LSH_TABLES
     if planes is None:
-        # caller may pass n (e.g. from the session corpus-stats cache)
-        # so repeat constructions cost zero Spark jobs
+        # caller may pass n (e.g. the tables.table_rows footer count)
+        # so construction costs zero Spark jobs
         planes = _auto_planes(e.count() if n is None else n)
     sig = _signatures_udf(tables=tables, planes=planes)
     buckets = e.select(
@@ -846,12 +839,8 @@ def dedup_embedding_pipeline(spark, sf_dir):
     the capped bucket join), never n^2.  Oracle: pinned pure-Python
     replay (numpy signatures + left-fold cosine + union-find;
     scripts/replay_sketches.py)."""
-    from .similarity import _corpus_n
-
-    e = _t(spark, sf_dir, "embeddings")
-    cand = embedding_lsh_candidates(
-        e, n=_corpus_n(e, f"{sf_dir}/embeddings.parquet")
-    )
+    e = read_table(spark, sf_dir, "embeddings")
+    cand = embedding_lsh_candidates(e, n=table_rows(sf_dir, "embeddings"))
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # per-vector norms computed on the n-row vector table, not per
     # candidate pair (_vnorm contract: the LSH candidate set is orders
@@ -895,7 +884,7 @@ def dedup_incremental(spark, sf_dir):
     — one shuffle the index pays ONCE, amortized over every future
     batch when persisted bucketed by fp; the daily batch (small by
     construction) then hash-joins on fp with zero index re-shuffle."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     fp = F.md5(
         F.array_join(
             F.array_sort(
@@ -1047,7 +1036,7 @@ def dedup_incremental_near(spark, sf_dir):
     today's crawl batch (same split as dedup_incremental); the rest of
     the documents table is the existing corpus whose band index is
     probed.  See incremental_near_dedup for semantics + scale shape."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     batch = d.filter(F.col("doc_id") % INCR_NEW_MOD == 0)
     existing = d.filter(F.col("doc_id") % INCR_NEW_MOD != 0)
     return incremental_near_dedup(batch, minhash_band_index(existing), existing)
@@ -1133,12 +1122,12 @@ def incremental_emb_dedup(batch: DataFrame, index: DataFrame,
 
 def dedup_incremental_emb(spark, sf_dir):
     """Driver-gated wrapper: vec_id % INCR_NEW_MOD == 0 is today's
-    vector batch; plane count scales with the full corpus size via the
-    session corpus-stats cache (no count job after first build)."""
-    from .similarity import LSH_TABLES, _auto_planes, _corpus_n
+    vector batch; plane count scales with the full corpus size, read
+    from the table's parquet footer (no count job)."""
+    from .similarity import LSH_TABLES, _auto_planes
 
-    e = _t(spark, sf_dir, "embeddings")
-    planes = _auto_planes(_corpus_n(e, f"{sf_dir}/embeddings.parquet"))
+    e = read_table(spark, sf_dir, "embeddings")
+    planes = _auto_planes(table_rows(sf_dir, "embeddings"))
     batch = e.filter(F.col("vec_id") % INCR_NEW_MOD == 0)
     existing = e.filter(F.col("vec_id") % INCR_NEW_MOD != 0)
     return incremental_emb_dedup(
@@ -1211,7 +1200,7 @@ def dedup_passage(spark, sf_dir):
     explode, no self-join.  Everything up to the postings shuffle is a
     pure map (window hashes are integer arithmetic inside codegen'd
     HOFs — no Python, no strings beyond the one split)."""
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     fps = d.select("doc_id", F.explode(_passage_fps()).alias("fp"))
     posts = (
         fps.groupBy("fp")
@@ -1288,7 +1277,7 @@ def dedup_keep_best(spark, sf_dir):
 
     from .textstats import _marker_hits
 
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     clusters = connected_components(
         jaccard_pairs(d).select("doc_a", "doc_b")
     )
@@ -1350,7 +1339,7 @@ def dedup_cluster_stats(spark, sf_dir):
     banded aggregation with map-side combine (4 possible keys); corpus
     size comes from a broadcast one-row count, so the percentage is
     driver-free.  Deterministic: integer counts, pct floored 1e-6."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     clusters = connected_components(
         jaccard_pairs(d).select("doc_a", "doc_b")
     )
@@ -1530,7 +1519,7 @@ def line_dedup(d: DataFrame, broadcast_dups: bool | None = None) -> DataFrame:
 
 def dedup_lines(spark, sf_dir):
     """Driver entry: line_dedup over the documents table."""
-    return line_dedup(_t(spark, sf_dir, "documents", wide=True))
+    return line_dedup(read_table(spark, sf_dir, "documents", wide=True))
 
 
 _SQL_CHUNKS = f"""
@@ -1609,7 +1598,7 @@ def dedup_bloom(spark, sf_dir):
     the same plan shuffle-joins on word).  The existing corpus is
     scanned once and never re-shuffled beyond the agg's map-side
     combine."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.trim(F.col("text"))))
     existing = d.filter(F.col("doc_id") % INCR_NEW_MOD != 0).select(
         fp.alias("fp")
@@ -1800,7 +1789,7 @@ def dedup_semantic(spark, sf_dir):
     centroid sims)."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     v = e.select("vec_id", dv.alias("v"))
     # assignment is a pure map carrying the vector through (r7:

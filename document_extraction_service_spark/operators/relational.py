@@ -14,26 +14,17 @@ orderings carry unique tie-break columns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .tables import read_table
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
 
 
 # --- A1-A6 analog: grouped aggregation with exact sums (TPC-H Q1 shape) ----
 def q_pricing_summary(spark, sf_dir):
     """Histogram-style per-group stats (reference A1-A6 char-gap/font
     histograms, internal_models.py:345-433)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     dec = "decimal(18,6)"
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-01"))
@@ -69,7 +60,7 @@ def q_band_filter(spark, sf_dir):
     """Width-band classifier (reference F2: block width within
     0.95-1.05x the common width, text_api.py:144-187): parts whose
     retail price is within 0.95-1.05x their brand's average."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand")
     dec = "decimal(18,6)"
     avg_exact = (
@@ -99,7 +90,7 @@ FROM x WHERE p_retailprice / brand_avg >= 0.95 AND p_retailprice / brand_avg <= 
 def q_regex_classify(spark, sf_dir):
     """Pattern-list filter (reference F3 metadata regex list,
     util_functions.py:13-21): first matching pattern labels the doc."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.when(F.col("text").rlike(r"\bspark\b"), F.lit("spark"))
@@ -126,8 +117,8 @@ def q_range_join(spark, sf_dir):
     overlap, internal_models.py:198-203) — same shape here: equi on
     orderkey AND a date-interval predicate: lineitems shipped within 90
     days of their order."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         o.join(
             li,
@@ -156,8 +147,8 @@ def q_asof_join(spark, sf_dir):
     nearest following chapter, text_api.py:198-227; J2 greedy nearest
     match table_models.py:93-153): for each order, the earliest ship
     date at or after the order date."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         o.join(li, (li.l_orderkey == o.o_orderkey) & (li.l_shipdate >= o.o_orderdate))
         .groupBy("o_orderkey")
@@ -177,8 +168,8 @@ GROUP BY o_orderkey
 def q_anti_join(spark, sf_dir):
     """Delete-from-text anti-join (reference J6, text_api.py:396-426):
     customers with no event activity."""
-    c = _t(spark, sf_dir, "customer")
-    e = _t(spark, sf_dir, "events")
+    c = read_table(spark, sf_dir, "customer")
+    e = read_table(spark, sf_dir, "events")
     return c.join(e, c.c_custkey == e.user_id, "left_anti").select("c_custkey", "c_name")
 
 
@@ -193,7 +184,7 @@ def q_sessionize(spark, sf_dir):
     """Gap-based segmentation (reference W1 block re-segmentation
     internal_models.py:100-167, W4 chapter segmentation
     text_api.py:240-271): 30-minute-gap sessions per user."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # microsecond arithmetic (exact integers, identical to DuckDB epoch_us)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -232,7 +223,7 @@ SELECT user_id, CAST(MAX(sid) AS BIGINT) AS n_sessions, COUNT(*) AS n_events FRO
 def q_recurring(spark, sf_dir):
     """Recurring-element detection (reference O6: same bbox > 2 times,
     text_models.py:377-390): (user, event_type) seen more than twice."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("n_times"))
@@ -250,7 +241,7 @@ FROM events GROUP BY user_id, event_type HAVING COUNT(*) > 2
 def q_top1_histogram(spark, sf_dir):
     """Most-common value per group (reference A5 'most common font/size',
     text_models.py:453-465 / O4)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_returnflag", "l_quantity").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("l_returnflag").orderBy(F.desc("cnt"), F.asc("l_quantity"))
     return (
@@ -271,7 +262,7 @@ SELECT l_returnflag, l_quantity AS top_qty, cnt FROM r WHERE rn = 1
 def q_plateau(spark, sf_dir):
     """The reference's plateau rule: 'most common' = every value whose
     count >= 0.6x the max count (text_models.py:453-465)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_linestatus", "l_quantity").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("l_linestatus")
     return (
@@ -292,7 +283,7 @@ SELECT l_linestatus, l_quantity AS qty, cnt FROM m WHERE cnt >= 0.6 * max_cnt
 def q_reading_order(spark, sf_dir):
     """Reading-order sort + top-k (reference O1 text_models.py:478-512,
     O2 row/cell sorts): first 3 events per user in (ts, event_id) order."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         e.withColumn("rn", F.row_number().over(w))
@@ -313,7 +304,7 @@ SELECT user_id, rn, event_id FROM r WHERE rn <= 3
 def q_longest_per_lang(spark, sf_dir):
     """Longest-match pick (reference O5: longest DOI wins,
     metadata_api.py:201-210): longest document per language."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return (
         d.withColumn("rn", F.row_number().over(w))
@@ -334,7 +325,7 @@ SELECT lang, doc_id, n_chars FROM r WHERE rn = 1
 def q_word_types(spark, sf_dir):
     """Deterministic WORD/NUM/UNKNOWN token classifier (reference A9,
     text_detection.py:32-53) over exploded document tokens."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(F.split(F.col("text"), " ")).alias("tok")).filter(
         F.length("tok") > 0
     )
@@ -362,7 +353,7 @@ FROM t GROUP BY 1
 def q_rollup_metrics(spark, sf_dir):
     """Job-level success/failure-style rollup metrics (SURVEY A12):
     document counts and exact char sums by (lang, source) with ROLLUP."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return (
         d.rollup("lang", "source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
@@ -381,7 +372,7 @@ def q_salted_agg(spark, sf_dir):
     salt the hot key space, partial-aggregate per (key, salt), then
     final-aggregate per key.  The oracle is the plain single-phase
     aggregate — results must be identical."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     dec = "decimal(18,6)"
     salted = e.withColumn("salt", F.pmod(F.xxhash64("event_id"), F.lit(16)))
     partial = salted.groupBy("event_type", "salt").agg(
@@ -440,7 +431,7 @@ ORACLES = {
 def q_pivot(spark, sf_dir):
     """Pivot (conditional aggregation): quantity sums per returnflag
     pivoted on linestatus.  Oracle uses CASE-sums — same arithmetic."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     dec = "decimal(18,6)"
     return (
         li.groupBy("l_returnflag")
@@ -464,7 +455,7 @@ FROM lineitem GROUP BY l_returnflag
 
 def q_cube(spark, sf_dir):
     """CUBE grouping sets over (returnflag, linestatus)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows")
     )
@@ -478,8 +469,8 @@ FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 
 def q_semi_join(spark, sf_dir):
     """EXISTS / left-semi: customers with event activity."""
-    c = _t(spark, sf_dir, "customer")
-    e = _t(spark, sf_dir, "events")
+    c = read_table(spark, sf_dir, "customer")
+    e = read_table(spark, sf_dir, "events")
     return c.join(e, c.c_custkey == e.user_id, "left_semi").select("c_custkey", "c_mktsegment")
 
 
@@ -492,8 +483,10 @@ WHERE EXISTS (SELECT 1 FROM events WHERE user_id = c_custkey)
 def q_set_ops(spark, sf_dir):
     """INTERSECT/EXCEPT: customers who ordered, split by whether they
     also have events."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k")).distinct()
-    e = _t(spark, sf_dir, "events").select(F.col("user_id").alias("k")).distinct()
+    o = read_table(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("k")).distinct()
+    e = read_table(spark, sf_dir, "events").select(
+        F.col("user_id").alias("k")).distinct()
     both = o.intersect(e).withColumn("segment", F.lit("ordered_and_active"))
     only_o = o.exceptAll(e).withColumn("segment", F.lit("ordered_only"))
     return both.unionByName(only_o).select("k", "segment")
@@ -510,7 +503,7 @@ SELECT k, 'ordered_only' AS segment FROM (SELECT k FROM o EXCEPT SELECT k FROM e
 
 def q_dense_topn(spark, sf_dir):
     """dense_rank top-N with ties: top-2 order price ranks per priority."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(F.desc("o_totalprice"))
     return (
         o.withColumn("rnk", F.dense_rank().over(w))
@@ -530,7 +523,7 @@ SELECT o_orderpriority, o_orderkey, rnk FROM r WHERE rnk <= 2
 def q_correlated_above_avg(spark, sf_dir):
     """Correlated-subquery shape: customers above their nation's average
     account balance (decorrelated to a window average, exact decimal)."""
-    c = _t(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     dec = "decimal(18,6)"
     w = Window.partitionBy("c_nationkey")
     nat_avg = (

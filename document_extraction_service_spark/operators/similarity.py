@@ -18,11 +18,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tables import read_table
+from .tables import read_table, table_rows
 
 TOP_K = 5
 N_QUERIES = 10          # vec_id < 10 are the query vectors
@@ -44,15 +44,6 @@ N_QUERIES = 10          # vec_id < 10 are the query vectors
 LSH_MIN_PLANES = 4
 LSH_TABLES = 12
 LSH_TARGET_BUCKET_POP = 32
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
 
 
 def _as_double(col):
@@ -98,7 +89,7 @@ def ann_topk_bruteforce(spark, sf_dir):
     The query side is tiny -> broadcast; the corpus side streams, so on
     a cluster this is a map-only scan of the corpus (no shuffle of the
     embedding payload)."""
-    e = _t(spark, sf_dir, "embeddings", wide=True).select(
+    e = read_table(spark, sf_dir, "embeddings", wide=True).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -139,7 +130,7 @@ def ann_topk_filtered(spark, sf_dir):
     the query side broadcasts with its label, the corpus side streams
     map-only, and the label equality prunes ~(1/n_labels) of the
     candidate space before any cosine is computed."""
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("v")
     )
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -182,26 +173,6 @@ LSH_MAX_PLANES = 62  # bucket ids are signed int64: 62 sign bits + the
 # the expected bucket at LSH_TARGET_BUCKET_POP up to ~1.5e20 rows —
 # far past any corpus; the clamp is a type-safety bound, not a design
 # limit.
-
-
-# corpus-stats cache for plane sizing: keyed by table path, filled once
-# per session.  _auto_planes needs the corpus row count; paying a
-# (metadata-only, but driver-synchronized) count() job on EVERY query
-# construction was the one residual per-invocation wart of r4's scale
-# audit.  At production scale this row count would live in the table's
-# own stats (Iceberg snapshot summary) — a session dict is the local
-# equivalent.  Keys are file paths of immutable test/bench corpora;
-# callers with a changing table should pass n explicitly.
-_CORPUS_N_CACHE: dict[str, int] = {}
-
-
-def _corpus_n(df: DataFrame, cache_key: str | None) -> int:
-    if cache_key is not None and cache_key in _CORPUS_N_CACHE:
-        return _CORPUS_N_CACHE[cache_key]
-    n = df.count()  # metadata-only over parquet (row-group stats)
-    if cache_key is not None:
-        _CORPUS_N_CACHE[cache_key] = n
-    return n
 
 
 def _auto_planes(n: int) -> int:
@@ -272,10 +243,10 @@ def lsh_candidates(spark, sf_dir, tables: int = LSH_TABLES,
     side multi-probes its own bucket plus all hamming-1 buckets per
     table to buy back the recall extra planes cost (math at the top
     constants)."""
-    e_raw = _t(spark, sf_dir, "embeddings")
+    e_raw = read_table(spark, sf_dir, "embeddings")
     if planes is None:
-        # cached corpus count: zero Spark jobs after the first build
-        planes = _auto_planes(_corpus_n(e_raw, f"{sf_dir}/embeddings.parquet"))
+        # footer row count: plane sizing runs no Spark job
+        planes = _auto_planes(table_rows(sf_dir, "embeddings"))
     sig = _signatures_udf(tables=tables, planes=planes)
     # ONE scan + UDF pass, then posexplode into (table, bucket) rows —
     # a per-table unionByName would re-execute the scan+UDF 12x.
@@ -359,7 +330,7 @@ def _ivf_centroids(spark, sf_dir):
     next to the table; the assignment/probe machinery below is
     identical either way, and a deterministic sample keeps the whole
     operator replayable (no RNG, no iterative state)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     rows = (
         e.filter(F.col("vec_id") % IVF_CENTROID_STRIDE == 0)
         .orderBy("vec_id")
@@ -395,7 +366,7 @@ def ann_ivf(spark, sf_dir):
             return pd.Series([], dtype="int32")
         return pd.Series(cell_ids[np.argmax(mat @ cmat, axis=1)])
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     assigned = e.select(
         "vec_id", _as_double(F.col("embedding")).alias("v"),
         assign(F.col("embedding")).alias("cell"),

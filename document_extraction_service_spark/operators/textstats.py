@@ -12,7 +12,7 @@ so both engines produce bit-identical doubles before ROUND.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .tables import read_table
@@ -28,15 +28,6 @@ TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 TOKEN_RE_SPARK = TOKEN_RE.replace("\\", "\\\\")  # Spark SQL literal escaping
 
 
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
-
-
 def _marker_hits(lang: str):
     # NOTE: Spark SQL string literals process backslash escapes, so the
     # regex needs doubled backslashes inside F.expr (DuckDB literals do
@@ -49,7 +40,7 @@ def text_langid(spark, sf_dir):
     """N-gram/stopword language-ID heuristic: argmax of marker-word
     hits with a fixed precedence tie-break (en > de > fr > es >
     unknown).  At 10^12 rows this is a pure map — no shuffle."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     hits = {lang: _marker_hits(lang).alias(f"{lang}_hits") for lang in LANG_MARKERS}
     scored = d.select("doc_id", *hits.values())
     best = F.greatest(*[F.col(f"{lg}_hits") for lg in LANG_MARKERS])
@@ -87,7 +78,7 @@ FROM s
 def text_quality(spark, sf_dir):
     """Quality score from length / stopword ratio / mean word length —
     rational arithmetic only (cross-engine bit-identical)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     n_words = F.size(F.split(F.trim(F.col("text")), " "))
     n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
     stop_hits = _marker_hits("en")
@@ -125,7 +116,7 @@ FROM s
 def text_tokens(spark, sf_dir):
     """Token counting: whitespace tokens + a BPE-ish regex tokenizer
     (letters / digits / single punctuation)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens_ws"),
@@ -147,7 +138,7 @@ def text_fingerprint(spark, sf_dir):
     """Content fingerprint: md5 over the normalized token stream
     (lowercase, punctuation stripped, whitespace collapsed) — the
     canonical-form dedup key for a 10^12-row exact-dedup pass."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     norm = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9 ]", " "), r" +", " "
@@ -186,7 +177,7 @@ def text_rolling_fingerprint(spark, sf_dir):
     hash — unlike the md5 canonical-form fingerprint, the fold
     structure extends to streaming/incremental use (append a token =
     one multiply-add).  Pure map at any scale."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     tok_val = F.transform(
         toks,
@@ -240,7 +231,7 @@ def text_top_ngrams(spark, sf_dir):
 
     from .dedup import _shingle_array
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     counts = (
         d.select("lang", F.explode(_shingle_array()).alias("trigram"))
         .groupBy("lang", "trigram")
@@ -302,7 +293,7 @@ def text_redact_pii(spark, sf_dir):
     web_url_canonicalize pattern).  Order matters: IPs redact before
     phones (disjoint here), emails first so their dotted hosts are not
     half-eaten by the IP pattern."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.substring(F.col("text"), 1, 60),
         F.lit(" contact user"), F.col("doc_id").cast("string"),
@@ -452,7 +443,7 @@ def text_repetition(spark, sf_dir):
 
     Pure map (JVM higher-order functions, no shuffle, no Python) — at
     10^12 rows this costs one scan."""
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     toks = F.split(F.col("text"), " ")
     return d.select(
         "doc_id",
@@ -564,7 +555,7 @@ def rarity_scores(d: DataFrame) -> DataFrame:
 
 def text_rarity(spark, sf_dir):
     """Driver entry: rarity_scores over the documents table."""
-    return rarity_scores(_t(spark, sf_dir, "documents"))
+    return rarity_scores(read_table(spark, sf_dir, "documents"))
 
 
 _SQL_BAND = " + ".join(
@@ -622,7 +613,7 @@ def text_lm_score(spark, sf_dir):
     (count desc, gram asc)."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     # the gram stream feeds BOTH the model-count pass and the scoring
     # join: localCheckpoint (lazy) builds the _word_ngrams arrays once
     # instead of once per consumer (r7 — the line_dedup shared-build
@@ -711,7 +702,7 @@ def corpus_drift(spark, sf_dir):
     the occurrence stream."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     toks = d.select(
         (F.col("doc_id") % DRIFT_BATCH_MOD == 0).alias("is_new"),
         F.explode(F.split(F.col("text"), " ")).alias("tok"),
@@ -873,7 +864,7 @@ def text_bpe_merges(spark, sf_dir):
     #19).  Deterministic: ties break (n desc, pair asc)."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     words = d.select(
         F.explode(F.split(F.trim(F.col("text")), " ")).alias("w")
     ).filter(F.length("w") >= 2)

@@ -16,7 +16,7 @@ so at 10^12 rows this is a pure map stage inside whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .tables import read_table
@@ -26,20 +26,11 @@ from .tables import read_table
 TRACKING_PREFIXES = ("utm_", "fbclid", "gclid", "ref")
 
 
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
-
-
 def _messy_urls(spark, sf_dir):
     """Deterministic messy-url table from documents (JVM-side only):
     mixed-case scheme+host, default port, tracking + real params, and a
     fragment — every class of non-canonical noise."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.concat(
@@ -106,7 +97,7 @@ def web_host_rollup(spark, sf_dir):
     (ONE scan, map + partial agg — a join back to the source table
     would be a pointless self-join; the plan is scan -> project ->
     hash-agg with map-side combine)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTPS://WWW.Site"), (F.col("doc_id") % 20).cast("string"),
         F.lit(".Example.COM:443/Articles/item-"), F.col("doc_id").cast("string"),
@@ -192,7 +183,7 @@ def _variant_urls(spark, sf_dir):
     """Deterministic colliding-url table: doc_ids 4k..4k+3 carry four
     differently-noised spellings of page k's url (mixed-case authority
     + default port + fragment / tracking param / both / already-clean)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     page = F.floor(F.col("doc_id") / 4).cast("long")
     site = (page % 20).cast("string")
     item = page.cast("string")
@@ -281,7 +272,7 @@ def web_host_quality(spark, sf_dir):
     Output: (doc_id, host, host_pass_rate, host_flagged)."""
     from .curation import gate_reason
 
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     url = F.concat(
         F.lit("HTTPS://WWW.Site"), (F.col("doc_id") % 20).cast("string"),
         F.lit(".Example.COM:443/Articles/item-"), F.col("doc_id").cast("string"),
@@ -375,7 +366,7 @@ def web_host_pagerank(spark, sf_dir):
     curate_domain_mixture pattern); localCheckpoint per round
     truncates the 8-deep lineage (the connected_components pattern).
     Deterministic: integer ops only."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     edges = _host_edges(d)
     out = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     # lazy localCheckpoints (r7): nothing here needs a result before
@@ -495,7 +486,7 @@ def web_blocklist_filter(spark, sf_dir):
     would drop the hint and shuffle-join on key with identical
     semantics), and the verdict agg groups on doc_id, the job's own
     shard key.  Pure codegen strings end to end."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     docs = d.select("doc_id", _bl_host().alias("host"))
     cand = docs.select(
         "doc_id",
@@ -732,7 +723,7 @@ def web_recrawl_schedule(spark, sf_dir):
     long cast in Spark 4 — CLAUDE.md gotcha #8; DuckDB mirrors with
     epoch_us).  Deterministic: integer rate + threshold tiers, no
     float anywhere."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     f0 = e.select(
         F.concat(
             F.lit("site"), (F.col("user_id") % 20).cast("string"),
@@ -803,7 +794,7 @@ def web_crawl_depth(spark, sf_dir):
     are absent from the output (no sentinel).  Deterministic: depth
     is the iteration index — min distance by construction.  Oracle:
     recursive-CTE shortest path with the same depth bound."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     # lazy localCheckpoints (r7): the per-layer count() materializes
     # (and lineage-truncates) each table in the same job, instead of
     # one eager materialization job PLUS one count job per BFS layer

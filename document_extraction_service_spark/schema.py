@@ -168,17 +168,3 @@ RESULT = T.StructType(
         T.StructField("status", STATUS, True),
     ]
 )
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-        T.StructField("n_ok", T.LongType(), False),
-        T.StructField("n_failed", T.LongType(), False),
-        T.StructField("n_truncated", T.LongType(), False),
-        T.StructField("n_fallback", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)

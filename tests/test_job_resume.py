@@ -1,6 +1,9 @@
 """Job-level tests: lineage, resume, idempotence (SURVEY §5.2 item 5,
 FIXTURES.md §5)."""
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +28,14 @@ def test_full_run_counts(spark, dirs):
     assert df.select("url").distinct().count() == N
     lineage = spark.read.parquet(lin)
     assert lineage.agg(F.sum("n_ok")).collect()[0][0] == N
+    # the writer's DEFAULT_WRITE_OPTS reach the files: zstd, no dictionaries
+    part = next(glob.iglob(f"{out}/bucket=*/*.parquet"))
+    meta = pq.ParquetFile(part).metadata
+    chunks = [meta.row_group(g).column(c) for g in range(meta.num_row_groups)
+              for c in range(meta.num_columns)]
+    assert chunks
+    assert {c.compression for c in chunks} == {"ZSTD"}
+    assert not any(c.has_dictionary_page for c in chunks)
 
 
 def test_kill_and_resume_equals_clean_run(spark, dirs, tmp_path):
@@ -134,32 +145,12 @@ def test_job_counts_fallback_rows(spark, dirs, tmp_path):
     assert not got["https://a/x"]["status"]["fallback"]
 
 
-def test_write_options_env_override(monkeypatch):
-    """SPARK_GRAFT_WRITE_OPTS merges over the tuned defaults (the A/B
-    harness contract); empty env returns the defaults verbatim."""
-    from document_extraction_service_spark.job import DEFAULT_WRITE_OPTS, write_options
-
-    monkeypatch.delenv("SPARK_GRAFT_WRITE_OPTS", raising=False)
-    assert write_options() == DEFAULT_WRITE_OPTS
-    assert write_options() is not DEFAULT_WRITE_OPTS  # caller-safe copy
-
-    monkeypatch.setenv("SPARK_GRAFT_WRITE_OPTS",
-                       "compression=snappy, parquet.block.size = 16777216")
-    got = write_options()
-    assert got["compression"] == "snappy"
-    assert got["parquet.block.size"] == "16777216"
-    # untouched defaults survive the merge
-    assert got["parquet.enable.dictionary"] == "false"
-
-
 def test_job_budget_bucketed_input(spark, dirs, tmp_path):
     """run_job over input in all DEFAULT_BUCKETS bucket=NN dirs launches
     only its own work: the extraction write, the lineage aggregation and
     one single-task lineage write planned as a LocalTableScan.  No job
     lists the bucket dirs (one task per dir), and the lineage rows never
     pass through a Python worker."""
-    import pyarrow.parquet as pq
-
     from document_extraction_service_spark import fixtures as fx
     from document_extraction_service_spark.job import DEFAULT_BUCKETS
 

@@ -5,6 +5,8 @@ covered for all three by test_operators_oracle.py's parametrized
 sweep; these tests pin the SEMANTIC contracts and the scale-critical
 plan shapes.)"""
 
+import os
+
 import pytest
 
 import __spark_entry__ as entry
@@ -381,20 +383,68 @@ def test_length_dist_self_consistent(spark):
 def test_widen_narrow_scan_widens_and_preserves_rows(spark):
     """A single-row-group parquet file is one scan partition no matter
     the session config; the width guard must redistribute it to >=
-    session width, keep the row multiset identical, and leave an
-    already-wide DataFrame untouched (the production no-op branch)."""
+    session width, keep the row multiset identical, and leave the scan
+    untouched once its bytes can reach session width (the production
+    no-op branch)."""
     from document_extraction_service_spark.operators.tables import (
+        _OPEN_COST_BYTES,
+        read_table,
         widen_narrow_scan,
     )
 
-    raw = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    path = f"{SF_DIR}/documents.parquet"
+    raw = read_table(spark, SF_DIR, "documents")
     assert raw.rdd.getNumPartitions() == 1  # the starved premise
-    wide = widen_narrow_scan(raw)
+    wide = widen_narrow_scan(raw, os.path.getsize(path))
     width = spark.sparkContext.defaultParallelism
     assert wide.rdd.getNumPartitions() >= width
     assert sorted(map(tuple, wide.collect())) == sorted(
         map(tuple, raw.collect())
     )
 
-    already = raw.repartition(width * 4)
-    assert widen_narrow_scan(already) is already  # identity, no new plan
+    big = width * _OPEN_COST_BYTES
+    assert widen_narrow_scan(raw, big) is raw  # identity, no new plan
+
+
+def _sf_tables():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]
+    dirs.append(os.path.join(repo, "perfbench", "data", "sf0.01"))
+    return [
+        (d, f[: -len(".parquet")])
+        for d in dirs
+        for f in sorted(os.listdir(d))
+        if f.endswith(".parquet")
+    ]
+
+
+def test_read_table_footer_schema_runs_no_job(spark, tmp_path):
+    """read_table declares each sf table's schema from its parquet
+    footers: the declared schema equals the one Spark infers, and the
+    read (plain or width-guarded) runs zero Spark jobs, where a bare
+    spark.read.parquet runs one schema-inference job.  Covers every
+    vendored sf table plus Spark-written part-file directories."""
+    from document_extraction_service_spark.operators.tables import read_table
+
+    tables = _sf_tables()
+    assert tables
+    for name in ("documents", "events"):
+        spark.read.parquet(f"{SF_DIR}/{name}.parquet").write.parquet(
+            str(tmp_path / f"{name}.parquet")
+        )
+        tables.append((str(tmp_path), name))
+    sc = spark.sparkContext
+    for sf_dir, name in tables:
+        group = f"read-{sf_dir}-{name}"
+        sc.setJobGroup(group, "footer-declared read")
+        try:
+            df = read_table(spark, sf_dir, name)
+            read_table(spark, sf_dir, name, wide=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert df.schema == spark.read.parquet(f"{sf_dir}/{name}.parquet").schema, (
+            sf_dir, name
+        )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert list(jobs) == [], (sf_dir, name, list(jobs))

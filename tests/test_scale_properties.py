@@ -355,47 +355,34 @@ def test_giant_page_stragglers_overlapped(spark):
     )
 
 
-def test_lsh_plane_sizing_count_is_cached(spark):
+def test_lsh_construction_runs_no_jobs(spark):
     """Building an LSH query must not pay a driver-synchronized count()
-    job per construction: _auto_planes sizing reads the session
-    corpus-stats cache after the first build (VERDICT r4 next-round
-    #5).  Asserted by job-group accounting: the SECOND construction of
-    each LSH query runs ZERO Spark jobs."""
+    job per construction (VERDICT r4 next-round #5): _auto_planes sizes
+    from the embeddings table's parquet footer row count, and the
+    footer-declared read runs no schema-inference job.  Asserted by
+    job-group accounting: construction runs ZERO Spark jobs, the first
+    build included."""
     import __spark_entry__ as entry
-    from document_extraction_service_spark.operators import similarity as S
-
-    sc = spark.sparkContext
-    sf = "/root/testdata/sf0.001"
-    S._CORPUS_N_CACHE.clear()
-    # warm: may run the one allowed count job per session
-    entry.queries()["ann_lsh_bucketed"](spark, sf)
-    entry.queries()["dedup_embedding_pipeline"](spark, sf)
     from document_extraction_service_spark.operators.dedup import (
         embedding_lsh_candidates,
     )
+    from document_extraction_service_spark.operators.tables import (
+        read_table,
+        table_rows,
+    )
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
-    # baseline: a bare parquet read itself costs one schema-inference
-    # job on this Spark version — measure it so the assertion isolates
-    # the COUNT job specifically
-    sc.setJobGroup("read-baseline", "bare read")
-    try:
-        spark.read.parquet(f"{sf}/embeddings.parquet")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    baseline = len(sc.statusTracker().getJobIdsForGroup("read-baseline"))
-
+    sc = spark.sparkContext
+    sf = "/root/testdata/sf0.001"
     sc.setJobGroup("lsh-build", "construction must not count()")
     try:
-        entry.queries()["ann_lsh_bucketed"](spark, sf)   # one read inside
-        embedding_lsh_candidates(e, n=S._corpus_n(e, f"{sf}/embeddings.parquet"))
+        entry.queries()["ann_lsh_bucketed"](spark, sf)
+        e = read_table(spark, sf, "embeddings")
+        embedding_lsh_candidates(e, n=table_rows(sf, "embeddings"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup("lsh-build"))
-    assert jobs <= baseline, (
-        f"LSH construction ran {jobs} jobs vs read-baseline {baseline} — "
-        "the plane-sizing count() is back"
-    )
+    assert jobs == 0, f"LSH construction ran {jobs} Spark jobs"
 
 
 def test_incremental_near_index_never_reshuffled(spark, tmp_path):
@@ -523,8 +510,9 @@ def test_incremental_oversized_batch_degrades_to_shuffle(spark, tmp_path):
     both the MinHash and the embedding member of the family."""
     from document_extraction_service_spark.operators import dedup as D
     from document_extraction_service_spark.operators.similarity import (
-        LSH_TABLES, _auto_planes, _corpus_n,
+        LSH_TABLES, _auto_planes,
     )
+    from document_extraction_service_spark.operators.tables import table_rows
 
     # routing: the decision helper reads the module threshold at call
     # time (driver-side), so monkeypatching it exercises the oversize
@@ -556,9 +544,7 @@ def test_incremental_oversized_batch_degrades_to_shuffle(spark, tmp_path):
 
     # embedding variant
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    planes = _auto_planes(
-        _corpus_n(e, "/root/testdata/sf0.001/embeddings.parquet")
-    )
+    planes = _auto_planes(table_rows("/root/testdata/sf0.001", "embeddings"))
     vb = e.filter(F.col("vec_id") % 10 == 0)
     ve = e.filter(F.col("vec_id") % 10 != 0)
     vidx = D.embedding_band_index(ve, LSH_TABLES, planes)
