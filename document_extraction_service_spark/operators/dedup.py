@@ -27,6 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import (
+    LSH_TABLES,
+    _as_double,
+    _auto_planes,
+    _dot,
+    _signatures_udf,
+    _vnorm,
+)
 from .tables import read_table, table_rows
 
 SHINGLE_K = 3          # 3-word shingles
@@ -133,15 +141,59 @@ def dedup_ngram_jaccard(spark, sf_dir):
     return jaccard_pairs(read_table(spark, sf_dir, "documents", wide=True))
 
 
-def capped_postings(docs: DataFrame) -> DataFrame:
-    """shingle fingerprint -> bounded postings array (every array <=
-    SHINGLE_DF_CAP).  Keyed by the hashed shingle universe (r7 — see
-    _hashed_shingle_array): the postings shuffle moves (long, long)
-    instead of (trigram string, long)."""
-    sh = _hashed_shingles(docs)
-    return sh.groupBy("shingle").agg(
-        F.collect_set("doc_id").alias("docs")
-    ).filter(F.size("docs") <= SHINGLE_DF_CAP)
+def bounded_postings(df: DataFrame, keys: list, member, cap: int,
+                     collect=F.collect_set) -> DataFrame:
+    """The engine's one postings cap: group `df` by `keys`, collect
+    `member` (a column or struct) into `docs`, and drop every group
+    with more than `cap` members.  Returns keys + docs.
+
+    Every capped sketch/blocking stage goes through here — shingle and
+    passage DF caps, MinHash/SimHash/sign-LSH/pHash buckets, label and
+    centroid blocks — so the cap policy lives in one place.  A group
+    above the cap is a hot key or a degenerate sketch region (one
+    boilerplate trigram, near-empty docs all hashing alike), not
+    near-dup signal, and it would make the pair space quadratic in
+    corpus size.  Singleton groups are kept: an incremental index
+    needs them, and posting_pairs skips them.  `collect` is
+    collect_set (ids, where set semantics dedupe a member repeated
+    under one key) or collect_list (payload structs of unique ids)."""
+    return (
+        df.groupBy(*keys)
+        .agg(collect(member).alias("docs"))
+        .filter(F.size("docs") <= cap)
+    )
+
+
+def posting_pairs(posts: DataFrame, carry=(), by: str | None = None,
+                  names=("a", "b"), a_side: str = "docs") -> DataFrame:
+    """bounded_postings rows -> (carry..., a, b): every pair of members
+    sharing a group with a < b, compared on field `by` when the
+    members are structs.  The bucket-partitioned theta self-join of
+    "Binary Theta-Joins using MapReduce" (EDBT'14) with the per-bucket
+    work bounded by the cap: pairs come from a JVM-side double explode
+    over the bounded array — no self-join, no skewed join key — so the
+    pair space is <= n_groups * cap^2 at any corpus size.
+
+    Groups under 2 members yield nothing.  A pair sharing k groups is
+    emitted k times; callers count (n_bands_agree, n_common,
+    n_shared_passages) or distinct it.  `a_side` names the array the
+    `a` member ranges over: a slice of docs in _chunked_block_pairs,
+    the whole of docs everywhere else."""
+    a, b = names
+
+    def key(m):
+        return m[by] if by else m
+
+    return (
+        posts.filter(F.size("docs") >= 2)
+        .select(*carry, F.explode(a_side).alias(a), "docs")
+        .select(
+            *carry, a,
+            F.explode(
+                F.filter("docs", lambda d: key(d) > key(F.col(a)))
+            ).alias(b),
+        )
+    )
 
 
 def _pair_overlap(docs: DataFrame) -> DataFrame:
@@ -149,12 +201,10 @@ def _pair_overlap(docs: DataFrame) -> DataFrame:
     sharing >= 1 kept shingle (doc_a < doc_b) — the shared core of the
     symmetric (Jaccard) and asymmetric (containment) near-dup scorers.
 
-    One shuffle on shingle builds the postings list per shingle; lists
-    longer than SHINGLE_DF_CAP are dropped (no near-dup signal, and the
-    cap bounds the pair blow-up to df_cap^2 per shingle — the uncapped
-    form is sum of postings^2 and detonates on one hot trigram at crawl
-    scale).  Pairs are generated JVM-side by a double explode over the
-    bounded array — no string self-join, no skewed join key.
+    Postings lists longer than SHINGLE_DF_CAP are dropped, so the pair
+    space is <= n_shingles * SHINGLE_DF_CAP^2 (the uncapped form is the
+    sum of postings^2 and detonates on one hot trigram at crawl scale);
+    pairs come from posting_pairs.
 
     The postings table feeds TWO consumers (sizes and pairs), so it is
     localCheckpointed (r7): without it the whole scan -> shingle ->
@@ -162,21 +212,19 @@ def _pair_overlap(docs: DataFrame) -> DataFrame:
     is the same call: the capped postings table IS the inverted index,
     which a 100 TB pipeline materializes (parquet/Iceberg, the
     minhash_band_index pattern) rather than recomputing per pass."""
-    postings = capped_postings(docs).localCheckpoint(eager=False)
+    # keyed by the hashed shingle universe (r7 — see
+    # _hashed_shingle_array): the postings shuffle moves (long, long)
+    # instead of (trigram string, long)
+    postings = bounded_postings(
+        _hashed_shingles(docs), ["shingle"], "doc_id", SHINGLE_DF_CAP
+    ).localCheckpoint(eager=False)
     # post-cap set size per doc (Jaccard universe = capped shingles)
     sizes = (
         postings.select(F.explode("docs").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_sh"))
     )
-    pairs = (
-        postings.filter(F.size("docs") >= 2)
-        .select(F.explode("docs").alias("doc_a"), "docs")
-        .select(
-            "doc_a",
-            F.explode(F.filter("docs", lambda d: d > F.col("doc_a"))).alias("doc_b"),
-        )
-    )
+    pairs = posting_pairs(postings, names=("doc_a", "doc_b"))
     common = pairs.groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).alias("n_common"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
@@ -315,29 +363,18 @@ def dedup_minhash_lsh(spark, sf_dir):
     per-row array allocations lose to whole-stage-codegen'd hash-agg.)
     Band buckets come from ONE posexplode — not an 8x unionByName that
     would replay the aggregation 8 times.  Buckets are bounded postings
-    lists (MINHASH_BUCKET_CAP) exactly like dedup_simhash: a degenerate
-    bucket — empty/near-empty docs all minimizing to the same sketch —
-    would otherwise make the candidate join quadratic in corpus size.
-    A bucket above the cap is a degenerate sketch region, not near-dup
-    signal (identical docs are dedup_exact's job), so the pair space is
-    bounded at LSH_BANDS * n_buckets * cap^2 regardless of n.  Pairs are
-    generated JVM-side by a double explode over the bounded array — no
-    skewed self-join key.  Oracle: pinned pure-Python XXH64 replay
+    lists (MINHASH_BUCKET_CAP, see bounded_postings; empty/near-empty
+    docs all minimizing to the same sketch make such a bucket;
+    identical docs are dedup_exact's job), so the pair space is
+    bounded at LSH_BANDS * n_buckets * cap^2 regardless of n; pairs
+    come from posting_pairs.  Oracle: pinned pure-Python XXH64 replay
     (scripts/replay_sketches.py — full value verification); recall/
     precision vs exact Jaccard additionally asserted in tests."""
     bands = _minhash_bands(read_table(spark, sf_dir, "documents", wide=True))
-    posts = (
-        bands.groupBy("band", "bucket")
-        .agg(F.collect_set("doc_id").alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= MINHASH_BUCKET_CAP))
+    posts = bounded_postings(
+        bands, ["band", "bucket"], "doc_id", MINHASH_BUCKET_CAP
     )
-    pairs = (
-        posts.select(F.explode("docs").alias("doc_a"), "docs")
-        .select(
-            "doc_a",
-            F.explode(F.filter("docs", lambda d: d > F.col("doc_a"))).alias("doc_b"),
-        )
-    )
+    pairs = posting_pairs(posts, names=("doc_a", "doc_b"))
     return pairs.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("n_bands_agree")
     )
@@ -349,8 +386,9 @@ def dedup_simhash(spark, sf_dir):
     hamming distance <= SIMHASH_MAX_HAMMING on collisions.  Candidate
     buckets are bounded postings lists (SIMHASH_BUCKET_CAP) so the
     within-bucket pair space stays constant-bounded at any corpus
-    size — see the inline note.  Oracle: pinned pure-Python XXH64
-    replay (scripts/replay_sketches.py — full value verification)."""
+    size — see the inline note and bounded_postings / posting_pairs.
+    Oracle: pinned pure-Python XXH64 replay (scripts/replay_sketches.py
+    — full value verification)."""
     d = read_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
@@ -385,24 +423,14 @@ def dedup_simhash(spark, sf_dir):
     # Bounded postings per (chunk, key) — the 10^9-docs guard: a 16-bit
     # bucket holds ~n/65536 docs, so the naive within-bucket self-join
     # grows quadratically with corpus size.  Buckets above the cap are
-    # dropped: a key shared by thousands of docs is a degenerate sketch
-    # region (e.g. near-empty docs), not near-dup signal — identical
-    # documents are dedup_exact's job, SimHash only needs the near-dup
-    # tail.  Pair space is bounded at 4 * 65536 * cap^2 regardless of n.
-    posts = (
-        chunks.groupBy("chunk", "key")
-        .agg(F.collect_set(F.struct("doc_id", "simhash")).alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= SIMHASH_BUCKET_CAP))
+    # dropped: identical documents are dedup_exact's job, SimHash only
+    # needs the near-dup tail.  Pair space is bounded at
+    # 4 * 65536 * cap^2 regardless of n.
+    posts = bounded_postings(
+        chunks, ["chunk", "key"], F.struct("doc_id", "simhash"),
+        SIMHASH_BUCKET_CAP,
     )
-    pairs = (
-        posts.select(F.explode("docs").alias("a"), "docs")
-        .select(
-            "a",
-            F.explode(
-                F.filter("docs", lambda d: d["doc_id"] > F.col("a.doc_id"))
-            ).alias("b"),
-        )
-    )
+    pairs = posting_pairs(posts, by="doc_id")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
         pairs.select(
@@ -413,33 +441,6 @@ def dedup_simhash(spark, sf_dir):
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
-
-
-def _pair_cos(av, bv):
-    """Exact cosine between two array<double> columns — JVM left fold
-    (the engine-wide deterministic cosine; numpy pairwise summation
-    differs in the last ulp, CLAUDE.md gotcha #16)."""
-    return _dot(av, bv) / (_vnorm(av) * _vnorm(bv))
-
-
-def _dot(av, bv):
-    """JVM left-fold dot product of two array<double> columns."""
-    return F.aggregate(
-        F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _vnorm(col):
-    """sqrt of the JVM left-fold sum of squares — exactly the na/nb
-    subexpression of _pair_cos.  Precompute it once per VECTOR when
-    scoring candidate PAIRS: Spark HOFs run interpreted with no
-    common-subexpression elimination, so an inlined _pair_cos pays two
-    O(dim) norm folds on every pair — 3x the fold work on a candidate
-    set that is orders of magnitude larger than the vector table.
-    dot/(na*nb) on the precomputed norms is the identical IEEE
-    expression, so results are bit-identical."""
-    return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 # `a`-side slice width for _chunked_block_pairs: bounds one task's
@@ -472,8 +473,8 @@ def _chunked_block_pairs(posts: DataFrame, carry: list) -> DataFrame:
     payload shuffle cancels the win; same-session sf0.1 A/B of this
     form: dedup_semantic 3.21 -> 2.15 s median, rows equal).
 
-    Pair set identical to the plain double explode: the chunks
-    partition the `a` side and the b > a condition is unchanged."""
+    Pair set identical to posting_pairs over the whole block: the
+    chunks partition the `a` side and the b > a condition is unchanged."""
     n_parts = posts.sparkSession.sparkContext.defaultParallelism * 2
     chunks = (
         posts.withColumn("ci", F.explode(_chunk_ids("docs")))
@@ -485,35 +486,24 @@ def _chunked_block_pairs(posts: DataFrame, carry: list) -> DataFrame:
         )
         .repartition(n_parts)
     )
-    return (
-        chunks.select(*carry, F.explode("a_chunk").alias("a"), "docs")
-        .select(
-            *carry,
-            "a",
-            F.explode(
-                F.filter("docs", lambda d: d["vec_id"] > F.col("a.vec_id"))
-            ).alias("b"),
-        )
-    )
+    return posting_pairs(chunks, carry, by="vec_id", a_side="a_chunk")
 
 
 def embedding_cosine_pairs(e: DataFrame, block_cap: int = EMB_BLOCK_CAP) -> DataFrame:
     """Exact within-label near-dup pairs via BOUNDED label postings:
     one shuffle groups each label's vectors into a block array, blocks
-    above `block_cap` are dropped (scale bound — see EMB_BLOCK_CAP),
-    pairs come from a JVM double explode over the bounded array.  No
-    self-join, no unbounded key: pair space <= n_labels * cap^2
+    above `block_cap` are dropped (scale bound — see EMB_BLOCK_CAP and
+    bounded_postings), so the pair space is <= n_labels * cap^2
     regardless of corpus size (VERDICT r3 'What's wrong' #1 closed)."""
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    posts = (
-        # norm precomputed per vector BEFORE the pair explode (_vnorm
-        # contract: per-pair norms would re-fold O(dim) twice on every
-        # pair of the cap^2 pair space)
-        e.select("vec_id", "label", dv.alias("v"))
-        .withColumn("nv", _vnorm(F.col("v")))
-        .groupBy("label")
-        .agg(F.collect_list(F.struct("vec_id", "v", "nv")).alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= block_cap))
+    # norm precomputed per vector BEFORE the pair explode (_vnorm
+    # contract: per-pair norms would re-fold O(dim) twice on every pair
+    # of the cap^2 pair space)
+    v = e.select(
+        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
+    ).withColumn("nv", _vnorm(F.col("v")))
+    posts = bounded_postings(
+        v, ["label"], F.struct("vec_id", "v", "nv"), block_cap,
+        F.collect_list,
     )
     # full-width chunked pair generation (10 label rows at sf0.1 would
     # otherwise bound the ~200k-fold verify at 10 tasks)
@@ -788,43 +778,25 @@ def dedup_pipeline(spark, sf_dir):
     return connected_components(verified)
 
 
-def embedding_lsh_candidates(e: DataFrame, tables: int | None = None,
-                             planes: int | None = None,
-                             bucket_cap: int = EMB_PIPE_BUCKET_CAP,
-                             n: int | None = None) -> DataFrame:
-    """ALL-PAIRS sign-LSH candidates over an embeddings table (contrast
-    similarity.lsh_candidates, which is query-vs-corpus): every vector
-    is signed against the same md5-derived hyperplanes (one numpy
-    matmul per Arrow batch), vectors sharing a (table, bucket) cell
-    become candidates via the capped-postings double explode.  Pair
-    space <= tables * n_buckets * cap^2; plane count scales with corpus
-    size (similarity._auto_planes) so expected bucket population stays
-    constant at any n."""
-    from .similarity import LSH_TABLES, _auto_planes, _signatures_udf
-
-    if tables is None:
-        tables = LSH_TABLES
-    if planes is None:
-        # caller may pass n (e.g. the tables.table_rows footer count)
-        # so construction costs zero Spark jobs
-        planes = _auto_planes(e.count() if n is None else n)
-    sig = _signatures_udf(tables=tables, planes=planes)
+def embedding_lsh_candidates(e: DataFrame, n: int) -> DataFrame:
+    """ALL-PAIRS sign-LSH candidates over an embeddings table of `n`
+    rows (contrast similarity.lsh_candidates, which is query-vs-corpus):
+    every vector is signed against the same md5-derived hyperplanes
+    (one numpy matmul per Arrow batch), vectors sharing a (table,
+    bucket) cell become candidates via bounded_postings /
+    posting_pairs.  Pair space <= LSH_TABLES * n_buckets *
+    EMB_PIPE_BUCKET_CAP^2; plane count scales with `n`
+    (similarity._auto_planes) so expected bucket population stays
+    constant at any corpus size.  Callers pass the tables.table_rows
+    footer count, so construction costs zero Spark jobs."""
+    sig = _signatures_udf(tables=LSH_TABLES, planes=_auto_planes(n))
     buckets = e.select(
         "vec_id", sig(F.col("embedding")).alias("bs")
     ).select("vec_id", F.posexplode("bs").alias("tbl", "bucket"))
-    posts = (
-        buckets.groupBy("tbl", "bucket")
-        .agg(F.collect_set("vec_id").alias("vs"))
-        .filter((F.size("vs") >= 2) & (F.size("vs") <= bucket_cap))
+    posts = bounded_postings(
+        buckets, ["tbl", "bucket"], "vec_id", EMB_PIPE_BUCKET_CAP
     )
-    return (
-        posts.select(F.explode("vs").alias("vec_a"), "vs")
-        .select(
-            "vec_a",
-            F.explode(F.filter("vs", lambda v: v > F.col("vec_a"))).alias("vec_b"),
-        )
-        .distinct()
-    )
+    return posting_pairs(posts, names=("vec_a", "vec_b")).distinct()
 
 
 def dedup_embedding_pipeline(spark, sf_dir):
@@ -841,10 +813,10 @@ def dedup_embedding_pipeline(spark, sf_dir):
     scripts/replay_sketches.py)."""
     e = read_table(spark, sf_dir, "embeddings")
     cand = embedding_lsh_candidates(e, n=table_rows(sf_dir, "embeddings"))
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    dv = _as_double(F.col("embedding"))
     # per-vector norms computed on the n-row vector table, not per
     # candidate pair (_vnorm contract: the LSH candidate set is orders
-    # of magnitude larger than the vector table, and inlined _pair_cos
+    # of magnitude larger than the vector table, and an inlined _cos
     # re-folds both norms on every pair)
     va = e.select(F.col("vec_id").alias("vec_a"), dv.alias("v_a")).withColumn(
         "na", _vnorm(F.col("v_a"))
@@ -952,15 +924,13 @@ def minhash_band_index(existing: DataFrame) -> DataFrame:
     ONCE; at scale it is persisted (parquet/Iceberg, bucketed by the
     band/bucket key) and every future crawl batch probes it without
     re-shuffling a single existing row.  Buckets above
-    MINHASH_BUCKET_CAP are dropped (degenerate sketch regions, same
-    bound as dedup_minhash_lsh) — but SINGLETON buckets are kept,
-    unlike the batch-mode pair generator: a new doc colliding with one
-    old doc is exactly the signal incremental dedup exists for."""
-    return (
-        _minhash_bands(existing)
-        .groupBy("band", "bucket")
-        .agg(F.collect_set("doc_id").alias("docs"))
-        .filter(F.size("docs") <= MINHASH_BUCKET_CAP)
+    MINHASH_BUCKET_CAP are dropped (bounded_postings, same bound as
+    dedup_minhash_lsh) — but SINGLETON buckets are kept, unlike the
+    batch-mode pair generator: a new doc colliding with one old doc is
+    exactly the signal incremental dedup exists for."""
+    return bounded_postings(
+        _minhash_bands(existing), ["band", "bucket"], "doc_id",
+        MINHASH_BUCKET_CAP,
     )
 
 
@@ -1047,17 +1017,14 @@ def embedding_band_index(existing: DataFrame, tables: int,
     """The PERSISTED corpus sign-LSH index for embeddings: (tbl,
     bucket) -> bounded postings of existing vec_ids — the vector twin
     of minhash_band_index (same contract: built once, singleton
-    buckets KEPT, buckets above EMB_PIPE_BUCKET_CAP dropped as
-    degenerate regions)."""
-    from .similarity import _signatures_udf
-
+    buckets KEPT, buckets above EMB_PIPE_BUCKET_CAP dropped by
+    bounded_postings)."""
     sig = _signatures_udf(tables=tables, planes=planes)
-    return (
-        existing.select("vec_id", sig(F.col("embedding")).alias("bs"))
-        .select("vec_id", F.posexplode("bs").alias("tbl", "bucket"))
-        .groupBy("tbl", "bucket")
-        .agg(F.collect_set("vec_id").alias("vs"))
-        .filter(F.size("vs") <= EMB_PIPE_BUCKET_CAP)
+    buckets = existing.select(
+        "vec_id", sig(F.col("embedding")).alias("bs")
+    ).select("vec_id", F.posexplode("bs").alias("tbl", "bucket"))
+    return bounded_postings(
+        buckets, ["tbl", "bucket"], "vec_id", EMB_PIPE_BUCKET_CAP
     )
 
 
@@ -1078,8 +1045,6 @@ def incremental_emb_dedup(batch: DataFrame, index: DataFrame,
     signatures + left-fold cosine, scripts/replay_sketches.py).
     broadcast_batch: same oversized-batch degradation contract as
     incremental_near_dedup."""
-    from .similarity import _signatures_udf
-
     h = _batch_probe_hint(batch, broadcast_batch)
     sig = _signatures_udf(tables=tables, planes=planes)
     bands = (
@@ -1090,10 +1055,10 @@ def incremental_emb_dedup(batch: DataFrame, index: DataFrame,
     )
     cand = (
         index.join(h(bands), ["tbl", "bucket"])
-        .select("new_id", F.explode("vs").alias("old_id"))
+        .select("new_id", F.explode("docs").alias("old_id"))
         .distinct()
     )
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    dv = _as_double(F.col("embedding"))
     # per-vector norms, not per candidate pair (_vnorm contract)
     newv = batch.select(F.col("vec_id").alias("new_id"), dv.alias("v_new")).withColumn(
         "n_new", _vnorm(F.col("v_new"))
@@ -1124,8 +1089,6 @@ def dedup_incremental_emb(spark, sf_dir):
     """Driver-gated wrapper: vec_id % INCR_NEW_MOD == 0 is today's
     vector batch; plane count scales with the full corpus size, read
     from the table's parquet footer (no count job)."""
-    from .similarity import LSH_TABLES, _auto_planes
-
     e = read_table(spark, sf_dir, "embeddings")
     planes = _auto_planes(table_rows(sf_dir, "embeddings"))
     batch = e.filter(F.col("vec_id") % INCR_NEW_MOD == 0)
@@ -1196,24 +1159,14 @@ def dedup_passage(spark, sf_dir):
     shuffle builds capped postings per fingerprint (PASSAGE_DF_CAP
     bounds the pair space at n_fps * cap^2; a fingerprint in hundreds
     of docs is boilerplate, which is rel_recurring/quality-gate
-    territory, not passage-copy signal), pairs come from the JVM double
-    explode, no self-join.  Everything up to the postings shuffle is a
-    pure map (window hashes are integer arithmetic inside codegen'd
-    HOFs — no Python, no strings beyond the one split)."""
+    territory, not passage-copy signal), pairs come from posting_pairs.
+    Everything up to the postings shuffle is a pure map (window hashes
+    are integer arithmetic inside codegen'd HOFs — no Python, no
+    strings beyond the one split)."""
     d = read_table(spark, sf_dir, "documents", wide=True)
     fps = d.select("doc_id", F.explode(_passage_fps()).alias("fp"))
-    posts = (
-        fps.groupBy("fp")
-        .agg(F.collect_set("doc_id").alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= PASSAGE_DF_CAP))
-    )
-    pairs = (
-        posts.select(F.explode("docs").alias("doc_a"), "docs")
-        .select(
-            "doc_a",
-            F.explode(F.filter("docs", lambda x: x > F.col("doc_a"))).alias("doc_b"),
-        )
-    )
+    posts = bounded_postings(fps, ["fp"], "doc_id", PASSAGE_DF_CAP)
+    pairs = posting_pairs(posts, names=("doc_a", "doc_b"))
     return (
         pairs.groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared_passages"))
@@ -1719,7 +1672,7 @@ def semantic_assign(e: DataFrame, k: int = SEM_K) -> DataFrame:
     is fixed-point floor(cos*1e6) BIGINT (cross-engine float argmax
     would flake at ulp ties — CLAUDE.md gotcha #23 family), and
     array_position's first-match rule is the cent_id-asc tie-break."""
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    dv = _as_double(F.col("embedding"))
     v = e.select("vec_id", dv.alias("v"))
     return _semantic_assign_v(v, k).select("vec_id", "cent_id", "cent_sim")
 
@@ -1772,8 +1725,9 @@ def dedup_semantic(spark, sf_dir):
     centroid blocking and a diversity-preserving keep-policy.  Pipeline:
     (1) assign every vector to its nearest of SEM_K centroids
     (semantic_assign), (2) within each centroid cluster emit exact
-    cosine pairs >= EMB_COS_THRESHOLD via the capped-postings double
-    explode (pair space <= k * EMB_BLOCK_CAP^2, never n^2), (3)
+    cosine pairs >= EMB_COS_THRESHOLD from blocks capped at
+    EMB_BLOCK_CAP (bounded_postings; pair space <= k * EMB_BLOCK_CAP^2,
+    never n^2), (3)
     connected components collapse transitive duplicate chains, (4) per
     component KEEP the member with the LOWEST centroid similarity —
     the paper's policy: duplicates near the centroid are redundant
@@ -1781,8 +1735,8 @@ def dedup_semantic(spark, sf_dir):
     information.  Contrast dedup_keep_best (quality argmax) and
     dedup_embedding_cosine (label blocking, no keep-policy).
 
-    Scale shape: assignment is broadcast-map (k rows); the pair stage
-    reuses the bounded-postings construction; CC shuffles only longs;
+    Scale shape: assignment is broadcast-map (k rows); CC shuffles
+    only longs;
     the keep window partitions by cluster_id, bounded by the capped
     pair space.  Output: one row per duplicate-cluster member.
     Oracle: full SQL mirror (recursive-CTE closure, same fixed-point
@@ -1790,18 +1744,16 @@ def dedup_semantic(spark, sf_dir):
     from pyspark.sql import Window
 
     e = read_table(spark, sf_dir, "embeddings")
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    dv = _as_double(F.col("embedding"))
     v = e.select("vec_id", dv.alias("v"))
     # assignment is a pure map carrying the vector through (r7:
     # previously assign -> join back onto v -> posts paid an extra
     # shuffle join, and the final keep-join re-ran the whole
     # crossJoin+window assignment a second time)
     assigned = _semantic_assign_v(v, SEM_K)
-    posts = (
-        assigned.withColumn("nv", _vnorm(F.col("v")))
-        .groupBy("cent_id")
-        .agg(F.collect_list(F.struct("vec_id", "v", "nv")).alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= EMB_BLOCK_CAP))
+    posts = bounded_postings(
+        assigned.withColumn("nv", _vnorm(F.col("v"))), ["cent_id"],
+        F.struct("vec_id", "v", "nv"), EMB_BLOCK_CAP, F.collect_list,
     )
     # full-width chunked pair generation — the k-row cluster table
     # would otherwise run the ~250k-fold verify on <= k tasks (see

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import bounded_postings, posting_pairs
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -508,11 +510,11 @@ def media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hash derivation is a pure map; each image emits
     exactly 4 (chunk_idx, chunk_val) postings; buckets above
-    PHASH_BUCKET_CAP are dropped (the SimHash/SHINGLE_DF_CAP bound),
-    pairs come from the bounded double explode, and the exact Hamming
-    verify runs only on candidates — bit_count over the two 32-bit
-    halves, all JVM codegen, no Python.  Pair space <=
-    4 * n_buckets * cap^2 at any corpus size.  Deterministic: integer
+    PHASH_BUCKET_CAP are dropped (dedup.bounded_postings), pairs come
+    from dedup.posting_pairs, and the exact Hamming verify runs only
+    on candidates — bit_count over the two 32-bit halves, all JVM
+    codegen, no Python.  Pair space <= 4 * n_buckets * cap^2 at any
+    corpus size.  Deterministic: integer
     bit arithmetic only; oracle is a full SQL mirror."""
     from .tables import read_table
 
@@ -540,20 +542,8 @@ def media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.expr("(hi div 65536) % 65536").alias("cv")),
         )).alias("c"),
     ).select("doc_id", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    posts = (
-        chunks.groupBy("ci", "cv")
-        .agg(F.collect_set("doc_id").alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= PHASH_BUCKET_CAP))
-    )
-    cand = (
-        posts.select(F.explode("ds").alias("doc_a"), "ds")
-        .select(
-            "doc_a",
-            F.explode(F.filter("ds", lambda x: x > F.col("doc_a")))
-            .alias("doc_b"),
-        )
-        .distinct()
-    )
+    posts = bounded_postings(chunks, ["ci", "cv"], "doc_id", PHASH_BUCKET_CAP)
+    cand = posting_pairs(posts, names=("doc_a", "doc_b")).distinct()
     a = t.select(F.col("doc_id").alias("doc_a"), F.col("hi").alias("hi_a"),
                  F.col("lo").alias("lo_a"))
     b = t.select(F.col("doc_id").alias("doc_b"), F.col("hi").alias("hi_b"),

@@ -47,14 +47,35 @@ LSH_TARGET_BUCKET_POP = 32
 
 
 def _as_double(col):
+    """array<float> -> array<double>, element-wise (JVM-side)."""
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _dot(av, bv):
+    """JVM left-fold dot product of two array<double> columns."""
+    return F.aggregate(
+        F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _vnorm(col):
+    """sqrt of the JVM left-fold sum of squares — exactly the norm
+    subexpression of _cos.  Precompute it once per VECTOR when scoring
+    candidate PAIRS: Spark HOFs run interpreted with no
+    common-subexpression elimination, so an inlined _cos pays two
+    O(dim) norm folds on every pair — 3x the fold work on a candidate
+    set that is orders of magnitude larger than the vector table.
+    dot/(na*nb) on the precomputed norms is the identical IEEE
+    expression, so results are bit-identical."""
+    return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
 def _cos(av, bv):
-    dot = F.aggregate(F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-    na = F.sqrt(F.aggregate(av, F.lit(0.0), lambda a, x: a + x * x))
-    nb = F.sqrt(F.aggregate(bv, F.lit(0.0), lambda a, x: a + x * x))
-    return dot / (na * nb)
+    """Exact cosine between two array<double> columns — the engine-wide
+    deterministic JVM left fold (numpy pairwise summation differs in
+    the last ulp, CLAUDE.md gotcha #16)."""
+    return _dot(av, bv) / (_vnorm(av) * _vnorm(bv))
 
 
 def _two_stage_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:

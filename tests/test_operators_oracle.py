@@ -127,7 +127,9 @@ def test_hot_shingle_postings_bounded(spark):
     rows.append((501, "alpha beta gamma delta epsilon zeta eta iota"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    postings = dedup.capped_postings(docs)
+    postings = dedup.bounded_postings(
+        dedup._hashed_shingles(docs), ["shingle"], "doc_id", dedup.SHINGLE_DF_CAP
+    )
     max_df = postings.selectExpr("max(size(docs)) AS m").collect()[0]["m"]
     assert max_df <= dedup.SHINGLE_DF_CAP
     # the hot shingle is gone entirely
@@ -335,6 +337,111 @@ def test_chunked_block_pairs_empty_block(spark):
     n = BLOCK_PAIR_CHUNK
     assert {r["blk"]: r["count"] for r in pairs.collect()} == {
         2: n * (n - 1) // 2, 3: (n + 1) * n // 2}
+
+
+def test_posting_pairs_kernel_vs_brute_force(spark):
+    """bounded_postings + posting_pairs against a Python brute force:
+    a group above the cap is dropped, a singleton is kept in the
+    postings but yields no pair, the same pair under two keys is
+    emitted twice (n_bands_agree / n_common / n_shared_passages count
+    that multiplicity), struct members compare on `by` and carry
+    columns ride along, and _chunked_block_pairs emits exactly
+    posting_pairs' rows."""
+    from collections import Counter, defaultdict
+
+    from pyspark.sql import functions as F
+
+    from document_extraction_service_spark.operators.dedup import (
+        BLOCK_PAIR_CHUNK,
+        _chunked_block_pairs,
+        bounded_postings,
+        posting_pairs,
+    )
+
+    cap = BLOCK_PAIR_CHUNK + 5
+    rows = [(0, i) for i in (1, 2, 3)]        # 3 pairs
+    rows += [(1, 1), (1, 2)]                   # (1, 2) again under key 1
+    rows += [(2, 100 + i) for i in range(cap + 1)]  # above the cap
+    rows += [(3, 7)]                           # singleton
+    rows += [(4, 5), (4, 5), (4, 6)]           # repeated member
+    rows += [(5, 200 + i) for i in range(cap)]  # at the cap, > one chunk
+    df = spark.createDataFrame(rows, "k int, vec_id long")
+
+    groups = defaultdict(set)
+    for k, m in rows:
+        groups[k].add(m)
+    kept = {k: ms for k, ms in groups.items() if len(ms) <= cap}
+    want = Counter(
+        (a, b) for ms in kept.values() for a in ms for b in ms if a < b
+    )
+
+    # scalar members, collect_set
+    posts = bounded_postings(df, ["k"], "vec_id", cap)
+    got_posts = {r["k"]: r["docs"] for r in posts.collect()}
+    assert {k: set(d) for k, d in got_posts.items()} == kept
+    assert 2 not in got_posts and got_posts[3] == [7]
+    assert sorted(got_posts[4]) == [5, 6]
+    got = Counter(
+        tuple(r) for r in posting_pairs(posts, names=("x", "y")).collect()
+    )
+    assert got == want
+    assert got[(1, 2)] == 2
+    assert not any(7 in p for p in got)
+
+    # struct members compared on `by`, key carried, collect_list
+    sdf = df.withColumn("w", -F.col("vec_id")).distinct()
+    sposts = bounded_postings(
+        sdf, ["k"], F.struct("vec_id", "w"), cap, F.collect_list
+    )
+    spairs = posting_pairs(sposts, ["k"], by="vec_id")
+    got_s = Counter(
+        (r["k"], r["a"]["vec_id"], r["b"]["vec_id"]) for r in spairs.collect()
+    )
+    want_s = Counter(
+        (k, a, b) for k, ms in kept.items() for a in ms for b in ms if a < b
+    )
+    assert got_s == want_s
+    assert all(r["a"]["w"] == -r["a"]["vec_id"] for r in spairs.collect())
+
+    # the full-width chunked path emits the same rows
+    chunked = _chunked_block_pairs(sposts, ["k"])
+    assert Counter(map(tuple, chunked.collect())) == Counter(
+        map(tuple, spairs.collect())
+    )
+
+
+def test_collects_only_in_bounded_postings():
+    """Every collect_set/collect_list call in operators/ sits in
+    bounded_postings, so the postings cap (and its accounting) lives
+    in one place.  The one exception is line_dedup's
+    collect_list(struct(pos, chunk)), which reassembles a doc's kept
+    chunks in order and is not a cap."""
+    import ast
+    import pathlib
+    import re
+
+    from document_extraction_service_spark import operators
+
+    offenders = []
+    for path in sorted(pathlib.Path(operators.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        defs = [
+            n for n in ast.parse(src).body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if not re.search(r"collect_(set|list)\(", line):
+                continue
+            owner = next(
+                (d.name for d in defs if d.lineno <= lineno <= d.end_lineno),
+                "<module>",
+            )
+            if owner == "bounded_postings":
+                continue
+            if owner == "line_dedup" and 'collect_list(F.struct("pos", "chunk"))' in line:
+                continue
+            offenders.append(f"{path.name}:{lineno} ({owner}): {line.strip()}")
+    assert not offenders, "\n".join(offenders)
 
 
 def test_embedding_pipeline_recall_vs_exact(spark):
