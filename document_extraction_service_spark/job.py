@@ -114,7 +114,7 @@ def is_bucketed_input(spec: str) -> bool:
     )
 
 
-def read_pages(spark: SparkSession, spec: str, partitions: int | None = None) -> DataFrame:
+def read_pages(spark: SparkSession, spec: str) -> DataFrame:
     """`synthetic:N` -> distributed fixture generation; `warc:<glob>`
     -> crawl-native WARC files (sources/warc.py, one task per file);
     else parquet path (swap point for `spark.read.format("iceberg")`)."""
@@ -122,7 +122,7 @@ def read_pages(spark: SparkSession, spec: str, partitions: int | None = None) ->
         from .fixtures import pages_df
 
         n = int(spec.split(":", 1)[1])
-        return pages_df(spark, n, partitions=partitions)
+        return pages_df(spark, n)
     if spec.startswith("warc:"):
         from .sources.warc import read_warc
 
@@ -192,7 +192,6 @@ def run_job(
     n_buckets: int = DEFAULT_BUCKETS,
     resume: bool = False,
     only_buckets: list[int] | None = None,
-    n_partitions: int | None = None,
     wet_path: str | None = None,
 ) -> dict:
     """Returns job metrics dict. Idempotent per (input, bucket)."""
@@ -214,13 +213,12 @@ def run_job(
 
     if not bucketed:
         # explicit url-hash repartitioning before the UDF chain, ALIGNED
-        # with the bucket column: with n_partitions == n_buckets each task
+        # with the bucket column: with one partition per bucket each task
         # holds whole buckets, so the partitionBy("bucket") write emits ~1
         # file per bucket instead of tasks x buckets small files (measured
         # 2x job throughput at 60k rows).  Buckets >> cores keeps
         # giant-page stragglers overlapped.
-        n_parts = n_partitions or n_buckets
-        pages = pages.repartition(n_parts, "bucket")
+        pages = pages.repartition(n_buckets, "bucket")
     # bucketed input: NO shuffle at all — scan tasks follow the bucket=NN
     # dir layout, so the whole job is map-only (scan -> UDF -> write);
     # at 10^12 rows this is the difference between moving 100 TB of

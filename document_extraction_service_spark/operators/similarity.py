@@ -78,31 +78,38 @@ def _cos(av, bv):
     return _dot(av, bv) / (_vnorm(av) * _vnorm(bv))
 
 
-def _two_stage_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
-    """Two-stage top-k per query: a single Window.partitionBy("query_id")
-    would funnel each query's whole scored candidate set through ONE
-    task (≤ N_QUERIES partitions regardless of cluster size).  Stage 1
-    takes top-k within (query_id, input-partition) — every window group
-    is at most one scan partition's rows — stage 2 merges only k·P
-    survivors per query.  Requires `scored` columns (query_id,
-    neighbor_id, cosine) with neighbor_id unique per query (the
-    (cosine desc, neighbor_id asc) order is then total, so both stages
-    are deterministic)."""
-    local = scored.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("query_id", "part").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
+def two_stage_topk(df: DataFrame, keys: list[str], order: list, k: int) -> DataFrame:
+    """`df` plus a 1-based `rank` column, keeping rank <= k per `keys`
+    group (over the whole frame when `keys` is []), ranked by the sort
+    Columns in `order`.  Every global or per-key top-k in operators/
+    and streaming/ goes through here (the window lint in
+    tests/test_operators_oracle.py holds the rest to bin tables).
+
+    A single Window.partitionBy(*keys) would funnel each group's whole
+    input through ONE task (with keys == [], the whole frame).  Stage 1
+    takes the top-k within (keys, input partition), so a stage-1 window
+    group is at most one partition's rows; stage 2 merges only the k·P
+    survivors per group (P = input partitions of `df`), so the merge
+    window, the single-task one included, is bounded at k·P rows.
+    `order` must be total within a group (end it on a unique column),
+    so both stages are deterministic."""
+    local = df.withColumn("part", F.spark_partition_id())
+    wl = Window.partitionBy(*keys, "part").orderBy(*order)
     pre = (
         local.withColumn("lr", F.row_number().over(wl))
         .filter(F.col("lr") <= k)
         .drop("part", "lr")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return pre.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _ann_rerank(scored: DataFrame) -> DataFrame:
+    """Top-TOP_K neighbours per query of (query_id, neighbor_id,
+    cosine) rows, neighbor_id unique per query."""
+    return two_stage_topk(
+        scored, ["query_id"], [F.desc("cosine"), F.asc("neighbor_id")], TOP_K
+    ).select("query_id", "rank", "neighbor_id", "cosine")
 
 
 def ann_topk_bruteforce(spark, sf_dir):
@@ -124,7 +131,7 @@ def ann_topk_bruteforce(spark, sf_dir):
         # (CLAUDE.md gotcha: ROUND ties HALF_UP Spark vs half-even DuckDB)
         (F.floor(_cos(F.col("qv"), F.col("v")) * 1e6) / 1e6).alias("cosine"),
     )
-    return _two_stage_topk(scored)
+    return _ann_rerank(scored)
 
 
 SQL_ANN_TOPK = f"""
@@ -169,7 +176,7 @@ def ann_topk_filtered(spark, sf_dir):
         F.col("vec_id").alias("neighbor_id"),
         (F.floor(_cos(F.col("qv"), F.col("v")) * 1e6) / 1e6).alias("cosine"),
     )
-    return _two_stage_topk(scored)
+    return _ann_rerank(scored)
 
 
 SQL_ANN_FILTERED = f"""
@@ -324,18 +331,19 @@ def ann_lsh_bucketed(spark, sf_dir, tables: int = LSH_TABLES,
 
     The 10^12-scale path: corpus-scaled planes keep buckets selective
     (see lsh_candidates); signatures are one numpy matmul per Arrow
-    batch; rerank is partition-local top-k then a k·P merge, no
-    single-task funnel.  Oracle: pinned pure-Python replay (numpy
-    signatures + left-fold cosine rerank, scripts/replay_sketches.py —
-    full value verification); recall vs brute force additionally
-    asserted in tests at two (planes, tables) points."""
+    batch; rerank is two_stage_topk per query (merge window bounded
+    at TOP_K·P rows), no single-task funnel.  Oracle: pinned
+    pure-Python replay (numpy signatures + left-fold cosine rerank,
+    scripts/replay_sketches.py — full value verification); recall vs
+    brute force additionally asserted in tests at two (planes, tables)
+    points."""
     cand = lsh_candidates(spark, sf_dir, tables=tables, planes=planes)
     scored = cand.select(
         "query_id",
         "neighbor_id",
         (F.floor(_cos(F.col("qv"), F.col("v")) * 1e6) / 1e6).alias("cosine"),
     )
-    return _two_stage_topk(scored)
+    return _ann_rerank(scored)
 
 
 # --- IVF (inverted-file) ANN: the coarse-quantizer scale path ---------------
@@ -419,7 +427,7 @@ def ann_ivf(spark, sf_dir):
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    return _two_stage_topk(cand)
+    return _ann_rerank(cand)
 
 
 QUERIES = {

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import two_stage_topk
 from .tables import read_table
 
 # stopword marker lists for the langid heuristic (checked as whole words)
@@ -222,13 +223,11 @@ def text_top_ngrams(spark, sf_dir):
 
     Scale shape: the (lang, shingle) count is ONE hash aggregation with
     map-side partial combine (only distinct (lang, shingle) partials
-    cross the shuffle); per-lang top-K uses the same two-stage pattern
-    as the ANN reranks — partition-local row_number, then a merge over
-    K·P survivors — so no single task ever sorts a language's whole
-    n-gram distribution (a language IS a skewed key at crawl scale).
+    cross the shuffle); per-lang top-K is similarity.two_stage_topk
+    (keys ["lang"]), so the merge window per language is bounded at
+    K·P rows and no single task ever sorts a language's whole n-gram
+    distribution (a language IS a skewed key at crawl scale).
     Tie-break (count desc, trigram asc) is total -> deterministic."""
-    from pyspark.sql import Window
-
     from .dedup import _shingle_array
 
     d = read_table(spark, sf_dir, "documents")
@@ -237,19 +236,9 @@ def text_top_ngrams(spark, sf_dir):
         .groupBy("lang", "trigram")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    local = counts.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("lang", "part").orderBy(F.desc("n"), F.asc("trigram"))
-    pre = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= TOP_NGRAMS_K)
-        .drop("part", "lr")
-    )
-    w = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("trigram"))
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_NGRAMS_K)
-        .select("lang", "rank", "trigram", "n")
-    )
+    return two_stage_topk(
+        counts, ["lang"], [F.desc("n"), F.asc("trigram")], TOP_NGRAMS_K
+    ).select("lang", "rank", "trigram", "n")
 
 
 # same shingle construction as SQL_JACCARD's sh CTE, but NOT distinct
@@ -506,41 +495,26 @@ def rarity_scores(d: DataFrame) -> DataFrame:
 
     Scale shape: token counting is ONE hash aggregation with map-side
     combine (distinct tokens per partition cross the shuffle, not
-    occurrences); the vocabulary is truncated to VOCAB_TOP via the
-    same two-stage top-K as text_top_ngrams (partition-local
-    row_number, then a merge over <= K*P survivors — no task ever
-    sorts the full type/token distribution); the scoring join
+    occurrences); the vocabulary is truncated to VOCAB_TOP by
+    similarity.two_stage_topk (global; merge window bounded at
+    VOCAB_TOP*P rows — no task ever sorts the full type/token
+    distribution); the scoring join
     BROADCASTS the <= VOCAB_TOP-row vocabulary, so per-doc scoring is
     a map-side join + one (doc_id)-keyed agg whose map-side combine
     reduces each doc to a single partial before the shuffle.  Nothing
     here is proportional to corpus size except the two scans.
     Deterministic: rank ties break (count desc, token asc) — total
     order."""
-    from pyspark.sql import Window
-
     toks = d.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
-    local = counts.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("tok"))
-    pre = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= VOCAB_TOP)
-        .drop("part", "lr")
-    )
-    # single-task merge window, bounded at VOCAB_TOP * n_partitions rows
-    # by the local stage above (the two-stage top-k contract)
-    w = Window.partitionBy().orderBy(F.desc("n"), F.asc("tok"))
-    rank = F.row_number().over(w)
     band = sum(
         (F.col("rank") > t).cast("int") for t in RARITY_BANDS
     )
-    vocab = (
-        pre.withColumn("rank", rank)
-        .filter(F.col("rank") <= VOCAB_TOP)
-        .select("tok", band.alias("band"))
-    )
+    vocab = two_stage_topk(
+        counts, [], [F.desc("n"), F.asc("tok")], VOCAB_TOP
+    ).select("tok", band.alias("band"))
     j = toks.join(F.broadcast(vocab), "tok", "left")
     b = F.coalesce(F.col("band"), F.lit(OOV_BAND))
     return j.groupBy("doc_id").agg(
@@ -606,13 +580,11 @@ def text_lm_score(spark, sf_dir):
     Scale shape: the bigram count is ONE hash agg with map-side
     combine; prefix totals are a second agg over the (distinct-bigram)
     count table, not the occurrence stream; the model is truncated by
-    the two-stage top-K (partition-local row_number, merge over <=
-    K*P survivors) and the <=LM_TOP-row table BROADCASTS into the
+    similarity.two_stage_topk (global; merge window bounded at
+    LM_TOP*P rows) and the <=LM_TOP-row table BROADCASTS into the
     scoring join, so per-doc scoring is map-side + one doc_id-keyed
     agg on the job's own shard key.  Deterministic: ties break
     (count desc, gram asc)."""
-    from pyspark.sql import Window
-
     d = read_table(spark, sf_dir, "documents")
     # the gram stream feeds BOTH the model-count pass and the scoring
     # join: localCheckpoint (lazy) builds the _word_ngrams arrays once
@@ -628,20 +600,9 @@ def text_lm_score(spark, sf_dir):
     pre = c.groupBy(w1).agg(F.sum("n").alias("np")).filter(
         F.col("np") >= LM_MIN_PREFIX
     )
-    local = c.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("gram"))
-    cand = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= LM_TOP)
-        .drop("part", "lr")
-    )
-    # single-task merge window, bounded at LM_TOP * n_partitions rows
-    wg = Window.partitionBy().orderBy(F.desc("n"), F.asc("gram"))
-    top = (
-        cand.withColumn("r", F.row_number().over(wg))
-        .filter(F.col("r") <= LM_TOP)
-        .select("gram", "n", w1)
-    )
+    top = two_stage_topk(
+        c, [], [F.desc("n"), F.asc("gram")], LM_TOP
+    ).select("gram", "n", w1)
     tbl = pre.join(F.broadcast(top), "w1").select(
         "gram", F.expr(f"({LM_SCALE} * n) div np").alias("p")
     )
@@ -697,11 +658,10 @@ def corpus_drift(spark, sf_dir):
     Scale shape: one token-count agg with map-side combine producing
     per-side counts in the same pass (conditional sums — the corpus is
     scanned ONCE); totals are a one-row agg broadcast back; drift
-    ranking uses the two-stage top-K so no task sorts the full
-    vocabulary; tvd is an agg over the vocab-sized count table, not
-    the occurrence stream."""
-    from pyspark.sql import Window
-
+    ranking is similarity.two_stage_topk (global; merge window bounded
+    at DRIFT_TOP*P rows) so no task sorts the full vocabulary; tvd is
+    an agg over the vocab-sized count table, not the occurrence
+    stream."""
     d = read_table(spark, sf_dir, "documents")
     toks = d.select(
         (F.col("doc_id") % DRIFT_BATCH_MOD == 0).alias("is_new"),
@@ -727,19 +687,9 @@ def corpus_drift(spark, sf_dir):
         .withColumn("drift", F.abs(F.col("p_batch") - F.col("p_corpus")))
     )
     tvd = p.agg(F.expr("sum(drift) div 2").cast("long").alias("tvd"))
-    local = p.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("drift"), F.asc("tok"))
-    cand = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= DRIFT_TOP)
-        .drop("part", "lr")
-    )
-    wg = Window.partitionBy().orderBy(F.desc("drift"), F.asc("tok"))
-    top = (
-        cand.withColumn("r", F.row_number().over(wg))
-        .filter(F.col("r") <= DRIFT_TOP)
-        .drop("r")
-    )
+    top = two_stage_topk(
+        p, [], [F.desc("drift"), F.asc("tok")], DRIFT_TOP
+    ).drop("rank")
     return top.crossJoin(F.broadcast(tvd)).select(
         "tok", "p_batch", "p_corpus", "drift", "tvd"
     )
@@ -858,12 +808,10 @@ def text_bpe_merges(spark, sf_dir):
     first (one combine-enabled agg; Zipf-bounded — vocabulary grows
     ~sqrt of corpus), pairs explode over distinct words only with the
     count as weight (never over the token stream), and the top-K is
-    the two-stage pattern (partition-local row_number, single-task
-    merge over <= K*P survivors — the text_lm_score contract).  The
-    pair lambda indexes a plain COLUMN, not a derived array (gotcha
-    #19).  Deterministic: ties break (n desc, pair asc)."""
-    from pyspark.sql import Window
-
+    similarity.two_stage_topk (global; merge window bounded at
+    BPE_TOP*P rows).  The pair lambda indexes a plain COLUMN, not a
+    derived array (gotcha #19).  Deterministic: ties break (n desc,
+    pair asc)."""
     d = read_table(spark, sf_dir, "documents")
     words = d.select(
         F.explode(F.split(F.trim(F.col("text")), " ")).alias("w")
@@ -877,20 +825,8 @@ def text_bpe_merges(spark, sf_dir):
         ).alias("pair"),
     )
     pc = pairs.groupBy("pair").agg(F.sum("c").alias("n"))
-    local = pc.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("pair"))
-    cand = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= BPE_TOP)
-        .drop("part", "lr")
-    )
-    # single-task merge window, bounded at BPE_TOP * n_partitions rows
-    wg = Window.partitionBy().orderBy(F.desc("n"), F.asc("pair"))
-    return (
-        cand.withColumn("rank", F.row_number().over(wg).cast("long"))
-        .filter(F.col("rank") <= BPE_TOP)
-        .select("pair", "n", "rank")
-    )
+    top = two_stage_topk(pc, [], [F.desc("n"), F.asc("pair")], BPE_TOP)
+    return top.select("pair", "n", F.col("rank").cast("long").alias("rank"))
 
 
 SQL_BPE_MERGES = f"""

@@ -33,7 +33,6 @@ PARTITION_DISCOVERY_THRESHOLD = 1024
 def build_session(
     master: str | None = None,
     app_name: str = "document_extraction_service_spark",
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
@@ -47,7 +46,7 @@ def build_session(
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import two_stage_topk
 from .incremental_dedup import DOCS_SCHEMA
 
 REF_TOP = 4096            # bounded broadcast reference head
@@ -34,27 +35,16 @@ DRIFT_SCALE = 1_000_000
 
 def build_drift_reference(docs: DataFrame) -> DataFrame:
     """(tok, p_ref) reference distribution: the corpus' top-REF_TOP
-    tokens by count (two-stage top-K — no task sorts the full
+    tokens by count (operators.similarity.two_stage_topk, global;
+    merge window bounded at REF_TOP*P rows — no task sorts the full
     vocabulary) with fixed-point frequencies, plus the OTHER row
     carrying the EXACT residual (DRIFT_SCALE - sum of head
     frequencies), so the reference always sums to DRIFT_SCALE."""
-    from pyspark.sql import Window
-
     toks = docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
     c = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     tot = c.agg(F.sum("n").alias("t"))
-    local = c.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("tok"))
-    cand = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= REF_TOP)
-        .drop("part", "lr")
-    )
-    # single-task merge window, bounded at REF_TOP * n_partitions rows
-    wg = Window.partitionBy().orderBy(F.desc("n"), F.asc("tok"))
     head = (
-        cand.withColumn("r", F.row_number().over(wg))
-        .filter(F.col("r") <= REF_TOP)
+        two_stage_topk(c, [], [F.desc("n"), F.asc("tok")], REF_TOP)
         .crossJoin(F.broadcast(tot))
         .select(
             "tok",

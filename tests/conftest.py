@@ -29,3 +29,10 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def plan_text():
+    """The one plan-assertion helper: a DataFrame's executed-plan text
+    (the AQE-final plan once the frame has run)."""
+    return lambda df: df._jdf.queryExecution().executedPlan().toString()

@@ -15,10 +15,6 @@ from document_extraction_service_spark.operators.dedup import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _mk_docs(spark, tmp_path, texts):
     docs = pd.DataFrame(
         {
@@ -78,13 +74,13 @@ def test_lines_clean_doc_reassembles_byte_identically(spark, tmp_path):
         assert rows[d]["clean_text"] == texts[d]
 
 
-def test_lines_dup_fp_probe_is_broadcast_anti_join(spark):
+def test_lines_dup_fp_probe_is_broadcast_anti_join(spark, plan_text):
     """The DUPLICATED-fp table (bounded by the corpus' boilerplate
     mass) must broadcast into a left-anti probe — the full chunk
     occurrence stream is the 10^12-row side and must not shuffle for
     the membership test.  (The doc_id rebuild join may sort-merge:
     doc_id is the job's own shard key.)"""
-    plan = _plan(entry.queries()["dedup_lines"](spark, SF_DIR))
+    plan = plan_text(entry.queries()["dedup_lines"](spark, SF_DIR))
     anti_lines = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
     assert anti_lines and all("Broadcast" in ln for ln in anti_lines)
 
@@ -129,15 +125,15 @@ def test_bloom_fp_rate_is_small_at_sf(spark):
     assert fps <= max(1, len(rows) // 10)
 
 
-def test_bloom_bitmap_join_is_broadcast(spark):
+def test_bloom_bitmap_join_is_broadcast(spark, plan_text):
     """Both the (word, mask) bitmap table and the seen-fp verify side
     must broadcast — the probe stream never shuffles."""
-    plan = _plan(entry.queries()["dedup_bloom"](spark, SF_DIR))
+    plan = plan_text(entry.queries()["dedup_bloom"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_lines_shuffled_fallback_identical_output(spark, tmp_path):
+def test_lines_shuffled_fallback_identical_output(spark, tmp_path, plan_text):
     """The r7 broadcast guard (VERDICT r6 #1): above
     INCR_BROADCAST_MAX_ROWS the duplicated-fp probe degrades to a
     shuffled left-anti join.  Both paths must produce identical rows,
@@ -168,7 +164,7 @@ def test_lines_shuffled_fallback_identical_output(spark, tmp_path):
     try:
         anti = [
             ln
-            for ln in _plan(line_dedup(d, broadcast_dups=False)).splitlines()
+            for ln in plan_text(line_dedup(d, broadcast_dups=False)).splitlines()
             if "LeftAnti" in ln
         ]
         assert anti and all("Broadcast" not in ln for ln in anti)

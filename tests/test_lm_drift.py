@@ -16,10 +16,6 @@ from document_extraction_service_spark.operators.textstats import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _mk_docs(spark, tmp_path, texts):
     docs = pd.DataFrame(
         {
@@ -72,11 +68,11 @@ def test_lm_score_exact_fixed_point_value(spark, tmp_path):
     assert rows[2]["lm_score"] == 200000
 
 
-def test_lm_model_join_is_broadcast(spark):
+def test_lm_model_join_is_broadcast(spark, plan_text):
     """The <=LM_TOP-row bigram model must broadcast into the scoring
     join — a sort-merge join there would shuffle every bigram
     occurrence of the corpus (the 10^12-row side)."""
-    plan = _plan(entry.queries()["text_lm_score"](spark, SF_DIR))
+    plan = plan_text(entry.queries()["text_lm_score"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -108,13 +104,13 @@ def test_drift_near_zero_for_identical_distributions(spark, tmp_path):
     assert all(r["tvd"] < LM_SCALE // 1000 for r in rows)
 
 
-def test_drift_plan_single_scan_no_smj(spark):
+def test_drift_plan_single_scan_no_smj(spark, plan_text):
     """One conditional-sum agg covers both sides and the checkpointed
     count table feeds all four consumers: the corpus parquet is
     scanned at most once in the final plan and nothing sort-merge
     joins (totals and tvd broadcast back)."""
     df = entry.queries()["corpus_drift"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "SortMergeJoin" not in plan
     assert plan.count("Scan parquet") <= 1
 
@@ -145,10 +141,10 @@ def test_blocklist_suffix_exact_and_subdomain_semantics(spark):
     assert not rows[142]["blocked"] and rows[142]["matched_rule"] is None
 
 
-def test_blocklist_plan_broadcasts_rules(spark):
+def test_blocklist_plan_broadcasts_rules(spark, plan_text):
     """The rule table must broadcast — the per-doc candidate-key
     stream (the 10^12-row side) never shuffles for the match."""
-    plan = _plan(entry.queries()["web_blocklist_filter"](spark, SF_DIR))
+    plan = plan_text(entry.queries()["web_blocklist_filter"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -214,10 +210,10 @@ def test_dsir_matches_pure_python_replay(spark, tmp_path):
     assert got[1][1] > got[3][1] > got[2][1]  # mixed in between
 
 
-def test_dsir_weight_join_is_broadcast(spark):
+def test_dsir_weight_join_is_broadcast(spark, plan_text):
     """The <=8192-row weight table must broadcast into the scoring
     join; the bucketed occurrence stream never shuffles for it."""
-    plan = _plan(entry.queries()["curate_dsir"](spark, SF_DIR))
+    plan = plan_text(entry.queries()["curate_dsir"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -252,12 +248,12 @@ def test_ppl_buckets_band_ordering_and_balance(spark):
         assert abs(len(members) - n / 3) <= max_bin, (band, len(members))
 
 
-def test_ppl_buckets_no_document_level_window(spark):
+def test_ppl_buckets_no_document_level_window(spark, plan_text):
     """The scale contract: banding must come from the bounded bin
     table broadcast back onto docs — no document-level global sort or
     rank (a WindowExec over the doc stream would be the give-away)."""
     df = entry.queries()["text_ppl_buckets"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan
     # the only Sort allowed over the full doc relation is none at all:
     # document rows reach the final join via hash partitioning only

@@ -283,10 +283,10 @@ def test_phash_dedup_planted_structure(spark):
     assert found == set(range(167))
 
 
-def test_phash_dedup_bounded_buckets_no_cartesian(spark):
+def test_phash_dedup_bounded_buckets_no_cartesian(spark, plan_text):
     import __spark_entry__ as entry
 
     df = entry.queries()["media_phash_dedup"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

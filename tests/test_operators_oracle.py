@@ -10,9 +10,9 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from scripts.check_oracles import TABLES, frame_key
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 @pytest.fixture(scope="module")
@@ -23,17 +23,6 @@ def con():
         if os.path.exists(p):
             c.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     return c
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else f"{v:.9g}"
-    return str(v)
-
-
-def _key(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
 ORACLED = sorted(entry.oracle_sql().keys())
@@ -48,7 +37,7 @@ def test_oracle_match(spark, con, name):
     drows = ddf.fetchall()
     assert sorted(sdf.columns) == sorted(dcols), f"{name}: column names differ"
     assert len(srows) == len(drows), f"{name}: row counts differ"
-    assert _key(srows, sdf.columns) == _key(drows, dcols), f"{name}: values differ"
+    assert frame_key(srows, sdf.columns) == frame_key(drows, dcols), f"{name}: values differ"
 
 
 def test_minhash_lsh_recall_vs_exact(spark):
@@ -444,6 +433,119 @@ def test_collects_only_in_bounded_postings():
     assert not offenders, "\n".join(offenders)
 
 
+def test_two_stage_topk_kernel_vs_brute_force(spark):
+    """similarity.two_stage_topk against a Python sort, keyed and
+    global (keys=[]): a group smaller than k keeps all its rows, ties
+    on the first order column break on the last one, and every group's
+    rank runs 1, 2, ... without gaps.  The input is round-robined over
+    several partitions so stage 1 really cuts, and also hashed by
+    group, so one partition holds a whole group's top k."""
+    from collections import defaultdict
+
+    from pyspark.sql import functions as F
+
+    from document_extraction_service_spark.operators.similarity import (
+        two_stage_topk,
+    )
+
+    k = 3
+    # created in descending tok order, so an input-order tie-break is wrong
+    rows = [(0, i % 3, f"t{59 - i:03d}") for i in range(60)]  # ties on n
+    rows += [(1, 7 - i, f"u{i}") for i in range(k - 1)]  # smaller than k
+    rows += [(2, 5, f"v{9 - i}") for i in range(9)]      # all tied on n
+    df = spark.createDataFrame(rows, "g int, n int, tok string")
+    order = [F.desc("n"), F.asc("tok")]
+
+    round_robin = df.repartition(6)
+    # stage 1 cuts: at least 5 partitions, and some (group, partition)
+    # holds more than k rows
+    per_part = (
+        round_robin.groupBy("g", F.spark_partition_id().alias("p"))
+        .count().collect()
+    )
+    assert len({r["p"] for r in per_part}) >= 5
+    assert max(r["count"] for r in per_part) > k
+
+    def brute(group_of):
+        groups = defaultdict(list)
+        for r in rows:
+            groups[group_of(r)].append(r)
+        return sorted(
+            (*r, rank)
+            for members in groups.values()
+            for rank, r in enumerate(
+                sorted(members, key=lambda r: (-r[1], r[2]))[:k], 1
+            )
+        )
+
+    for layout in (round_robin, df.repartition(6, "g")):
+        for keys, group_of in ((["g"], lambda r: r[0]), ([], lambda r: None)):
+            top = two_stage_topk(layout, keys, order, k)
+            assert top.columns == ["g", "n", "tok", "rank"]
+            got = sorted(tuple(r) for r in top.collect())
+            assert got == brute(group_of), keys
+            ranks = defaultdict(list)
+            for r in got:
+                ranks[group_of(r)].append(r[3])
+            assert all(sorted(v) == list(range(1, len(v) + 1))
+                       for v in ranks.values())
+            if keys:
+                assert len(ranks[1]) == k - 1
+
+
+def test_unpartitioned_windows_only_over_bounded_tables():
+    """Every unpartitioned (single-task) window in operators/ and
+    streaming/ -- Window.partitionBy() with no keys, any other bare
+    Window builder such as Window.orderBy(, or .over() -- sits in
+    similarity.two_stage_topk, whose merge window is bounded at k*P
+    rows, or over one of the named bin tables below, whose row count
+    is a module constant."""
+    import ast
+    import pathlib
+    from collections import defaultdict
+
+    from document_extraction_service_spark import operators, streaming
+    from document_extraction_service_spark.operators import curation, textstats
+
+    # (file, function) -> (bound of its bin table, windows over it)
+    bounded = {
+        ("curation.py", "curate_token_budget"): (curation.N_QUALITY_BINS, 2),
+        ("textstats.py", "text_ppl_buckets"): (textstats.PPL_BINS, 1),
+        ("curation.py", "curate_length_dist"): (curation.LEN_BUCKETS, 1),
+    }
+    assert all(isinstance(b, int) and b <= 1024 for b, _ in bounded.values())
+
+    def unpartitioned(node):
+        if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
+            return False
+        f = node.func
+        if isinstance(f.value, ast.Name) and f.value.id == "Window":
+            return f.attr != "partitionBy" or not (node.args or node.keywords)
+        return f.attr == "over" and not (node.args or node.keywords)
+
+    found = defaultdict(list)
+    for pkg in (operators, streaming):
+        for path in sorted(pathlib.Path(pkg.__file__).parent.glob("*.py")):
+            src = path.read_text()
+            lines = src.splitlines()
+            for top in ast.parse(src).body:
+                owner = getattr(top, "name", "<module>")
+                for node in ast.walk(top):
+                    if unpartitioned(node):
+                        found[(path.name, owner)].append(
+                            f"{path.name}:{node.lineno} ({owner}): "
+                            f"{lines[node.lineno - 1].strip()}"
+                        )
+    offenders = [
+        hit
+        for (fname, owner), hits in sorted(found.items())
+        if owner != "two_stage_topk"
+        and len(hits) != bounded.get((fname, owner), (0, 0))[1]
+        for hit in hits
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
 def test_embedding_pipeline_recall_vs_exact(spark):
     """The scale path (sign-LSH candidates -> exact verify -> CC) must
     recover most exact within-label near-dup pairs: every exact pair it
@@ -594,11 +696,11 @@ def test_decontaminate_flags_known_overlap(spark, tmp_path):
     assert {r["doc_id"]: r["n_shared"] for r in rows} == {5: 1}
 
 
-def test_decontaminate_broadcasts_benchmark_side(spark):
+def test_decontaminate_broadcasts_benchmark_side(spark, plan_text):
     """The benchmark gram set must broadcast: the corpus side of the
     contamination join never shuffles its grams at 10^12 rows."""
     df = entry.queries()["curate_decontaminate"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan
 
 
@@ -842,7 +944,7 @@ def test_incremental_emb_dedup_consistency(spark):
         assert fold_cos(vecs[new_id], vecs[old_id]) >= EMB_COS_THRESHOLD
 
 
-def test_token_budget_packs_best_quality_first(spark):
+def test_token_budget_packs_best_quality_first(spark, plan_text):
     """curate_token_budget semantics at sf0.001: kept token mass lands
     within boundary-bin sampling noise of the target fraction; keeps
     are quality-monotone (at most ONE mixed bin — the boundary — with
@@ -867,7 +969,7 @@ def test_token_budget_packs_best_quality_first(spark):
         b = mixed[0]
         assert all(all(ks) for bb, ks in by_bin.items() if bb > b)
         assert all(not any(ks) for bb, ks in by_bin.items() if bb < b)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan
 
 

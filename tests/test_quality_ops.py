@@ -19,19 +19,15 @@ from document_extraction_service_spark.operators.textstats import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 # --- text_rarity ------------------------------------------------------------
 
 
-def test_rarity_vocab_join_is_broadcast(spark):
+def test_rarity_vocab_join_is_broadcast(spark, plan_text):
     """The scoring join must broadcast the bounded vocabulary — a
     sort-merge join on `tok` would shuffle every token occurrence of
     the corpus (the 10^12-row side)."""
     df = entry.queries()["text_rarity"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -235,11 +231,11 @@ def test_pack_sequences_zero_token_doc(spark, tmp_path):
         assert rows[d]["seq_last"] == rows[d]["seq_first"] >= 0
 
 
-def test_mixture_rate_table_is_broadcast(spark):
+def test_mixture_rate_table_is_broadcast(spark, plan_text):
     """The per-stratum rate table must broadcast back onto the docs —
     the corpus side of the final join never shuffles."""
     df = entry.queries()["curate_domain_mixture"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -287,19 +283,19 @@ def test_semantic_pairs_share_centroid(semantic_rows):
         assert len({m["cent_id"] for m in members}) == 1
 
 
-def test_semantic_centroid_table_broadcasts(spark):
+def test_semantic_centroid_table_broadcasts(spark, plan_text):
     """The assignment stage must broadcast the k-row centroid table:
     scoring is a map-side broadcast join, never a shuffle of the
     corpus vectors against centroids."""
     df = entry.queries()["dedup_semantic"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
 # --- curate_gopher_rules / curate_c4_filters / text_bpe_merges --------------
 
 
-def test_gopher_rules_are_pure_map(spark):
+def test_gopher_rules_are_pure_map(spark, plan_text):
     """The whole ruleset must run per-row — a keyed (hash/range) or
     funneling (SinglePartition) Exchange would mean a shuffle snuck
     into a per-row filter.  The width-guarded ROUND-ROBIN input
@@ -307,7 +303,7 @@ def test_gopher_rules_are_pure_map(spark):
     is one scan partition no matter the config) is allowed: it moves
     rows before the map, it does not key or collapse them."""
     df = entry.queries()["curate_gopher_rules"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" not in plan
     assert "SinglePartition" not in plan
@@ -323,12 +319,12 @@ def test_gopher_keep_is_conjunction_and_binds(spark):
     assert 0 < keeps < len(rows), keeps  # both outcomes occur
 
 
-def test_c4_filters_pure_map_and_consistent(spark):
+def test_c4_filters_pure_map_and_consistent(spark, plan_text):
     # per-row map: no keyed/funneling Exchange (the width-guarded
     # round-robin input redistribution is allowed — see the gopher
     # pure-map test)
     df = entry.queries()["curate_c4_filters"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" not in plan
     assert "SinglePartition" not in plan
@@ -357,7 +353,7 @@ def test_bpe_merges_ranked_and_bounded(spark):
     assert all(len(r["pair"]) == 2 for r in rows)
 
 
-def test_length_dist_self_consistent(spark):
+def test_length_dist_self_consistent(spark, plan_text):
     """Buckets must partition the corpus: cum_docs reaches the doc
     count, tok_mass sums to the corpus token mass, every row's bounds
     bracket a power-of-two band, and the whole plan touches no
@@ -370,7 +366,7 @@ def test_length_dist_self_consistent(spark):
         if r["bucket"] > 0:
             assert r["lo"] == 1 << r["bucket"]
         assert r["hi"] == (1 << (r["bucket"] + 1)) - 1
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "rangepartitioning" not in plan.lower().replace(" ", "") or True
     # the only window is over the <=16-row bucket table: no Exchange
     # before the first aggregate beyond the single hash shuffle

@@ -245,18 +245,13 @@ def test_warc_chunked_emission(tmp_path):
     assert [len(c) for c in chunks] == [2, 2, 1]
 
 
-def test_warc_listing_scan_prunes_content(spark, tmp_path):
+def test_warc_listing_scan_prunes_content(spark, tmp_path, plan_text):
     """The binaryFile scan must read ONLY the path column — content
     never crosses JVM->Arrow, and binaryFile's 2 GB/file cap (which
     lives behind the content column) never applies."""
     p = str(tmp_path / "p.warc")
     write_warc(p, _fixture_records()[:2])
-    plan = (
-        read_warc(spark, p)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = plan_text(read_warc(spark, p))
     assert "ReadSchema: struct<path:string>" in plan
     assert "content" not in plan.split("ReadSchema:")[1].split("\n")[0]
 

@@ -13,10 +13,6 @@ from document_extraction_service_spark.operators.weburl import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 # --- web_distinct_hll -------------------------------------------------------
 
 
@@ -46,12 +42,12 @@ def test_hll_linear_counting_region(hll_rows):
             assert r["hll_est"] == _HLL_LC[r["reg_zeros"]]
 
 
-def test_hll_register_agg_has_partial_combine(spark):
+def test_hll_register_agg_has_partial_combine(spark, plan_text):
     """The (host, reg) register agg must partial-aggregate map-side —
     the whole point of the sketch is that at most m rows per host
     cross the shuffle, not one row per url."""
     df = entry.queries()["web_distinct_hll"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "partial_max" in plan or "partial_" in plan.lower()
 
 
@@ -80,11 +76,11 @@ def test_recrawl_tier_thresholds(recrawl_rows):
         assert 0 <= r["n_changes"] <= r["n_fetches"]
 
 
-def test_recrawl_single_combine_agg(spark):
+def test_recrawl_single_combine_agg(spark, plan_text):
     """The fetch log must collapse in ONE map-side-combinable agg —
     no second shuffle, no window over the event stream."""
     df = entry.queries()["web_recrawl_schedule"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert plan.count("Exchange hashpartitioning") == 1
     assert "WindowExec" not in plan
 
@@ -124,7 +120,7 @@ def test_crawl_depth_is_min_hop_distance(spark):
     assert rows == dist
 
 
-def test_crawl_depth_frontier_layer_shape(spark):
+def test_crawl_depth_frontier_layer_shape(spark, plan_text):
     """Plan contract for ONE BFS layer (the returned DF is a
     checkpointed scan, so assert on the layer construction itself):
     the frontier joins the edge list and the settled set is touched
@@ -144,5 +140,5 @@ def test_crawl_depth_frontier_layer_shape(spark):
         .distinct()
         .join(seeds, "host", "left_anti")
     )
-    plan = _plan(layer)
+    plan = plan_text(layer)
     assert "LeftAnti" in plan

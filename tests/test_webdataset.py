@@ -120,18 +120,13 @@ def test_corrupt_shard_keeps_clean_prefix(spark, tmp_path):
     assert got == set(range(len(got)))  # a clean PREFIX, no holes
 
 
-def test_listing_scan_prunes_content(spark, tmp_path):
+def test_listing_scan_prunes_content(spark, tmp_path, plan_text):
     """The source's binaryFile scan must read ONLY the path column —
     shard bytes never cross JVM->Arrow."""
     d = _docs(spark, 3)
     out = str(tmp_path / "w")
     write_webdataset(d, out, 10).collect()
-    plan = (
-        read_webdataset(spark, f"{out}/*.tar")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = plan_text(read_webdataset(spark, f"{out}/*.tar"))
     assert "ReadSchema: struct<path:string>" in plan
 
 
