@@ -8,8 +8,8 @@ except classification masks are immutable and all per-document
 internal_models.py:54-57) are locals here, so documents are
 trivially parallel and the UDF is deterministic (safe task retries).
 
-This module has no Spark imports: the same function backs the pandas
-UDFs and the no-Spark unit tests (Spark vs pure-Python equivalence,
+This module has no Spark imports: the same function backs the Arrow
+UDF and the no-Spark unit tests (Spark vs pure-Python equivalence,
 SURVEY §5.2 item 3).
 """
 

@@ -3,7 +3,7 @@
 Every page is a pure function of ``(seed, i)`` — no wall clock, no
 global RNG state — so the same row is byte-identical whether it is
 generated on the driver (pyarrow path, used by no-Spark unit tests)
-or on executors (``mapInPandas`` path, used by jobs and benches).
+or on executors (``mapInArrow`` path, used by jobs and benches).
 This mirrors the reference's golden-fixture strategy
 (/root/reference/app/tests/testfiles/: pinned input docs + expected
 structured extraction) with the corpus synthesized instead of shipped.
@@ -597,33 +597,28 @@ def write_parquet(path: str, n: int, seed: int = SEED) -> str:
 
 
 def pages_df(spark, n: int, seed: int = SEED, partitions: int | None = None):
-    """Distributed generation: spark.range -> mapInPandas(gen).
+    """Distributed generation: spark.range -> mapInArrow(gen).
 
     Scale path — each executor generates its own id range; nothing is
     collected on the driver, so the same code synthesizes a 10^12-row
-    table on a real cluster (the ids partition for free).
+    table on a real cluster (the ids partition for free).  `warc_ts`
+    is the fixture's wall time read as UTC, whatever the session time
+    zone.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .schema import PAGES_SCHEMA
 
     parts = partitions or max(2, spark.sparkContext.defaultParallelism)
+    arrow_schema = to_arrow_schema(PAGES_SCHEMA)
 
     def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].tolist()
-            rows = [gen_page(int(i), seed) for i in ids]
-            yield pd.DataFrame(
-                {
-                    "url": [r["url"] for r in rows],
-                    "warc_ts": [r["warc_ts"] for r in rows],
-                    "html": [r["html"] for r in rows],
-                    "text": [r["text"] for r in rows],
-                    "lang": [r["lang"] for r in rows],
-                }
-            )
+        for b in batches:
+            rows = [gen_page(i, seed) for i in b.column("id").to_pylist()]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     return (
         spark.range(0, n, numPartitions=parts)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
+        .mapInArrow(gen, schema=PAGES_SCHEMA)
     )

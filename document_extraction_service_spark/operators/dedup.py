@@ -1123,16 +1123,10 @@ def _passage_fps():
     contract): every array is a HOF ARGUMENT, never indexed per element
     by a lambda, so the cost is O(W * n_tokens) per row with split(text)
     evaluated a constant number of times."""
-    from .textstats import ROLL_BASE, ROLL_MOD, ROLL_SEED
+    from .textstats import ROLL_BASE, ROLL_MOD, ROLL_SEED, _roll_token_value
 
     toks = F.split(F.col("text"), " ")
-    tok_val = F.transform(
-        toks,
-        lambda t: (
-            (F.length(t) * 31 + F.ascii(t)) * 31
-            + F.ascii(F.substring(t, -1, 1))
-        ).cast("long"),
-    )
+    tok_val = F.transform(toks, _roll_token_value)
     n_win = F.greatest(F.size(toks) - PASSAGE_W + 1, F.lit(0))
 
     def vshift(k: int):
@@ -1364,27 +1358,18 @@ LINE_DUP_DOCS = 3
 
 
 def _chunk_array():
-    """Column: the ordered 10-word chunks of `text`.  Built from the
-    slice + zip_with + stride-filter shape so every array is a HOF
-    ARGUMENT (the _word_ngrams performance contract — a lambda that
-    indexes a derived array re-evaluates split(text) per element).
+    """Column: the ordered 10-word chunks of `text` — every n-th
+    textstats._word_ngrams(n) gram (a stride filter over a HOF
+    ARGUMENT, so the _word_ngrams performance contract holds).
     Docs under LINE_CHUNK_WORDS words are one whole-text chunk; a
     ragged tail (sz % 10 != 0) becomes its own final chunk, so the
     chunks cover every word exactly once."""
+    from .textstats import _word_ngrams
+
     n = LINE_CHUNK_WORDS
     toks = F.split(F.col("text"), " ")
     sz = F.size(toks)
-    n_grams = F.greatest(sz - n + 1, F.lit(0))
-
-    def shifted(k: int):
-        return F.slice(toks, k + 1, n_grams)
-
-    grams = shifted(0)
-    for k in range(1, n):
-        grams = F.zip_with(
-            grams, shifted(k), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    full = F.filter(grams, lambda _, i: i % n == 0)
+    full = F.filter(_word_ngrams(n), lambda _, i: i % n == 0)
     tail = F.array_join(F.slice(toks, (sz.cast("long") / n).cast("long") * n + 1, n), " ")
     with_tail = F.when(sz % n == 0, full).otherwise(
         F.concat(full, F.array(tail))

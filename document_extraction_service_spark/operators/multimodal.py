@@ -2,7 +2,7 @@
 
 The 100 TB training-data pipeline carries media payloads the same way
 this engine carries `html`: an opaque binary column plus a typed
-metadata struct, processed by Arrow-batched `mapInPandas` stages.  The
+metadata struct, processed by Arrow-batched `mapInArrow` stages.  The
 Spark-side plumbing here — schema, batch iteration, partitioning
 behaviour, UDF signatures — is real and tested.  Codec calls are
 GUARDED (r5): the real paths run when their library is importable —
@@ -12,8 +12,8 @@ container) — and raise `DecodeUnavailable` otherwise.  The pinned
 oracles use the deterministic md5-derived fakes (use_fake_decode=True,
 the queries() default), so adding codecs never moves the oracle.
 
-Stages (each a mapInPandas over Iterator[pd.DataFrame]):
-  * sniff_media     — magic-byte container detection + size stats
+Stages (each a mapInArrow over Iterator[pa.RecordBatch], through
+`_map_media`):
   * image_features  — decode -> (width, height, channels, phash64)  [Pillow-guarded]
   * image_resize    — decode -> resize(w, h) -> re-encoded reference [Pillow-guarded]
   * audio_features  — decode -> (duration_s, sample_rate, rms)      [stdlib WAV real]
@@ -22,12 +22,13 @@ Stages (each a mapInPandas over Iterator[pd.DataFrame]):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .dedup import bounded_postings, posting_pairs
 
@@ -137,43 +138,42 @@ def _fake_image_features(payload: bytes) -> tuple[int, int, int]:
     return width, height, phash
 
 
+def _map_media(media: DataFrame, schema: T.StructType,
+               rows: Callable[[str, str, bytes], list[dict]]) -> DataFrame:
+    """The plumbing every media stage shares: one mapInArrow pass,
+    one output batch per input batch.  `rows(media_id, kind, payload)`
+    returns the output rows of one input row as dicts; a field a dict
+    leaves out is NULL (the failed-decode rows).  The payload never
+    reaches the output schema, so only features cross a shuffle."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            cols = (b.column(c).to_pylist() for c in ("media_id", "kind", "payload"))
+            out = [r for mid, kind, payload in zip(*cols)
+                   for r in rows(mid, kind, payload or b"")]
+            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+
+    return media.mapInArrow(run, schema=schema)
+
+
 def image_features(media: DataFrame, use_fake_decode: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over opaque blobs.  The batch
+    """mapInArrow feature extraction over opaque blobs.  The batch
     shape is the scale contract: Arrow delivers bounded record batches,
     the iterator never materializes a partition, and output rows drop
     the payload (features only cross the shuffle)."""
+    decode = _fake_image_features if use_fake_decode else _decode_image_real
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "kind", "n_bytes", "magic",
-                "width", "height", "phash64", "decode_ok", "decode_error",
-            )}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                payload = payload or b""
-                out["media_id"].append(mid)
-                out["kind"].append(kind)
-                out["n_bytes"].append(len(payload))
-                out["magic"].append(sniff_magic(payload))
-                try:
-                    if use_fake_decode:
-                        w, h, p = _fake_image_features(payload)
-                    else:
-                        w, h, p = _decode_image_real(payload)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["phash64"].append(p)
-                    out["decode_ok"].append(True)
-                    out["decode_error"].append(None)
-                except DecodeUnavailable as exc:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["phash64"].append(None)
-                    out["decode_ok"].append(False)
-                    out["decode_error"].append(str(exc))
-            yield pd.DataFrame(out)
+    def rows(mid: str, kind: str, payload: bytes) -> list[dict]:
+        row = {"media_id": mid, "kind": kind, "n_bytes": len(payload),
+               "magic": sniff_magic(payload)}
+        try:
+            w, h, p = decode(payload)
+        except DecodeUnavailable as exc:
+            return [{**row, "decode_ok": False, "decode_error": str(exc)}]
+        return [{**row, "width": w, "height": h, "phash64": p, "decode_ok": True}]
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
+    return _map_media(media, FEATURES_SCHEMA, rows)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -279,86 +279,50 @@ def _fake_video_frames(payload: bytes) -> int:
 
 
 def audio_features(media: DataFrame, use_fake_decode: bool = True) -> DataFrame:
-    """mapInPandas audio feature extraction — same plumbing contract as
+    """mapInArrow audio feature extraction — same plumbing contract as
     image_features: bounded Arrow batches in, payload dropped before
     anything crosses a shuffle, codec failure degrades to
     decode_ok=false rows."""
+    decode = _fake_audio_features if use_fake_decode else _decode_audio_real
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "kind", "n_bytes", "magic",
-                "sample_rate", "duration_s", "rms", "decode_ok", "decode_error",
-            )}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                payload = payload or b""
-                out["media_id"].append(mid)
-                out["kind"].append(kind)
-                out["n_bytes"].append(len(payload))
-                out["magic"].append(sniff_magic(payload))
-                try:
-                    if use_fake_decode:
-                        sr, dur, rms = _fake_audio_features(payload)
-                    else:
-                        sr, dur, rms = _decode_audio_real(payload)
-                    out["sample_rate"].append(sr)
-                    out["duration_s"].append(dur)
-                    out["rms"].append(rms)
-                    out["decode_ok"].append(True)
-                    out["decode_error"].append(None)
-                except DecodeUnavailable as exc:
-                    out["sample_rate"].append(None)
-                    out["duration_s"].append(None)
-                    out["rms"].append(None)
-                    out["decode_ok"].append(False)
-                    out["decode_error"].append(str(exc))
-            yield pd.DataFrame(out)
+    def rows(mid: str, kind: str, payload: bytes) -> list[dict]:
+        row = {"media_id": mid, "kind": kind, "n_bytes": len(payload),
+               "magic": sniff_magic(payload)}
+        try:
+            sr, dur, rms = decode(payload)
+        except DecodeUnavailable as exc:
+            return [{**row, "decode_ok": False, "decode_error": str(exc)}]
+        return [{**row, "sample_rate": sr, "duration_s": dur, "rms": rms,
+                 "decode_ok": True}]
 
-    return media.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return _map_media(media, AUDIO_FEATURES_SCHEMA, rows)
 
 
 def frame_sample(media: DataFrame, every_k: int = 8,
                  use_fake_decode: bool = True) -> DataFrame:
     """Video -> every k-th frame reference, one output row per sampled
-    frame.  The row-EXPANDING mapInPandas shape: output per input row
+    frame.  The row-EXPANDING mapInArrow shape: output per input row
     is bounded by MAX_FRAMES_PER_VIDEO so a pathological container can
     never blow up a task, and frames carry digests — never pixel
     payloads — across the shuffle boundary."""
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "frame_idx", "ts_s", "frame_digest",
-                "decode_ok", "decode_error",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = payload or b""
-                try:
-                    if use_fake_decode:
-                        n_frames = _fake_video_frames(payload)
-                    else:
-                        n_frames = _decode_video_real(payload)
-                    idxs = range(0, n_frames, every_k)
-                    for fi in list(idxs)[:MAX_FRAMES_PER_VIDEO]:
-                        out["media_id"].append(mid)
-                        out["frame_idx"].append(fi)
-                        out["ts_s"].append(fi / FRAME_FPS)
-                        out["frame_digest"].append(
-                            hashlib.md5(payload + fi.to_bytes(4, "big")).hexdigest()
-                        )
-                        out["decode_ok"].append(True)
-                        out["decode_error"].append(None)
-                except DecodeUnavailable as exc:
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(-1)
-                    out["ts_s"].append(None)
-                    out["frame_digest"].append(None)
-                    out["decode_ok"].append(False)
-                    out["decode_error"].append(str(exc))
-            yield pd.DataFrame(out)
+    decode = _fake_video_frames if use_fake_decode else _decode_video_real
 
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
+    def rows(mid: str, kind: str, payload: bytes) -> list[dict]:
+        try:
+            n_frames = decode(payload)
+        except DecodeUnavailable as exc:
+            return [{"media_id": mid, "frame_idx": -1, "decode_ok": False,
+                     "decode_error": str(exc)}]
+        return [
+            {"media_id": mid, "frame_idx": fi, "ts_s": fi / FRAME_FPS,
+             "frame_digest": hashlib.md5(payload + fi.to_bytes(4, "big")).hexdigest(),
+             "decode_ok": True}
+            for fi in range(0, n_frames, every_k)[:MAX_FRAMES_PER_VIDEO]
+        ]
+
+    return _map_media(media, FRAME_SCHEMA, rows)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -384,41 +348,21 @@ def image_resize(media: DataFrame, max_side: int = 256,
     shuffle moves ~100 bytes/row regardless of image size."""
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "src_width", "src_height", "dst_width",
-                "dst_height", "resized_digest", "decode_ok", "decode_error",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = payload or b""
-                out["media_id"].append(mid)
-                try:
-                    if use_fake_decode:
-                        w, h, _ = _fake_image_features(payload)
-                    else:
-                        w, h, _ = _decode_image_real(payload)
-                    scale = min(1.0, max_side / max(w, h))
-                    dw, dh = max(1, int(w * scale)), max(1, int(h * scale))
-                    digest = hashlib.md5(
-                        payload + f"|{dw}x{dh}".encode()
-                    ).hexdigest()
-                    out["src_width"].append(w)
-                    out["src_height"].append(h)
-                    out["dst_width"].append(dw)
-                    out["dst_height"].append(dh)
-                    out["resized_digest"].append(digest)
-                    out["decode_ok"].append(True)
-                    out["decode_error"].append(None)
-                except DecodeUnavailable as exc:
-                    for k in ("src_width", "src_height", "dst_width",
-                              "dst_height", "resized_digest"):
-                        out[k].append(None)
-                    out["decode_ok"].append(False)
-                    out["decode_error"].append(str(exc))
-            yield pd.DataFrame(out)
+    decode = _fake_image_features if use_fake_decode else _decode_image_real
 
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
+    def rows(mid: str, kind: str, payload: bytes) -> list[dict]:
+        try:
+            w, h, _ = decode(payload)
+        except DecodeUnavailable as exc:
+            return [{"media_id": mid, "decode_ok": False, "decode_error": str(exc)}]
+        scale = min(1.0, max_side / max(w, h))
+        dw, dh = max(1, int(w * scale)), max(1, int(h * scale))
+        digest = hashlib.md5(payload + f"|{dw}x{dh}".encode()).hexdigest()
+        return [{"media_id": mid, "src_width": w, "src_height": h,
+                 "dst_width": dw, "dst_height": dh, "resized_digest": digest,
+                 "decode_ok": True}]
+
+    return _map_media(media, RESIZE_SCHEMA, rows)
 
 
 def media_from_pages(spark: SparkSession, n: int = 300) -> DataFrame:

@@ -10,14 +10,17 @@ and these are its vector-space generalization):
   * IVF ANN                   — coarse-quantizer cells + nprobe search;
                                 the other standard scale path
 
-All vector math is JVM-side (zip_with/aggregate over array columns) —
-no Python on the hot path.
+Vector math is JVM-side (zip_with/aggregate over array columns),
+except the LSH signatures and the IVF cell assignment: each is one
+numpy matmul per Arrow batch (`arrow_udf`), where no oracle compares
+floats (CLAUDE.md #16).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -236,11 +239,21 @@ def _planes(dims: int = 64, tables: int = LSH_TABLES, planes: int = LSH_MIN_PLAN
     return np.array(cols, dtype=np.float64).T  # (dims, T*P)
 
 
+def _matrix(embs: pa.Array, dims: int) -> np.ndarray:
+    """Arrow batch of `embedding` lists -> (rows, dims) float64 matrix.
+    `embedding` is nullable, so a null or ragged row fails loudly here
+    instead of shifting every later row; an empty batch is (0, dims)."""
+    if (pc.list_value_length(embs).to_numpy(zero_copy_only=False) != dims).any():
+        raise ValueError(f"embedding batch holds a null or non-{dims}-dim row")
+    return embs.flatten().to_numpy().astype(np.float64).reshape(len(embs), dims)
+
+
 def _signatures_udf(tables: int = LSH_TABLES, planes: int = LSH_MIN_PLANES):
-    """pandas UDF: embedding batch -> `tables` bucket ids per row via
+    """Arrow UDF: embedding batch -> `tables` bucket ids per row via
     ONE numpy matmul (B x dims) @ (dims x T*P) — the vectorized path
     for numeric kernels (48 JVM expression trees per row measured 25x
     slower via codegen explosion)."""
+    pl = _planes(tables=tables, planes=planes)  # once, not per Arrow batch
     pow2 = np.array([2**k for k in range(planes)], dtype=np.int64)
 
     # int64 buckets end-to-end: _auto_planes exceeds 31 planes around
@@ -248,16 +261,13 @@ def _signatures_udf(tables: int = LSH_TABLES, planes: int = LSH_MIN_PLANES):
     # int32 bucket would wrap and the 1 << j probe literal would
     # overflow IntegerType — the corpus-scaling rule must survive its
     # own design point.
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(embs: pd.Series) -> pd.Series:
-        pl = _planes(tables=tables, planes=planes)
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        if len(mat) == 0:
-            return pd.Series([], dtype=object)
-        bits = (mat @ pl) >= 0  # (B, T*P)
-        bits = bits.reshape(len(mat), tables, planes)
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def sig(embs: pa.Array) -> pa.Array:
+        mat = _matrix(embs, pl.shape[0])
+        bits = ((mat @ pl) >= 0).reshape(len(mat), tables, planes)
         buckets = (bits * pow2).sum(axis=2).astype("int64")  # (B, T)
-        return pd.Series(list(buckets))
+        offsets = np.arange(0, buckets.size + 1, tables, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, buckets.ravel())
 
     return sig
 
@@ -370,6 +380,19 @@ def _ivf_centroids(spark, sf_dir):
     return [(int(r["vec_id"]), list(r["v"])) for r in rows]
 
 
+def _ivf_assign_udf(cmat: np.ndarray, cell_ids: np.ndarray):
+    """Arrow UDF: embedding batch -> nearest coarse cell per row, via
+    ONE numpy matmul against the column-normalized centroid matrix
+    `cmat` (dims x C); `cell_ids[j]` names column j."""
+
+    @F.arrow_udf(T.IntegerType())
+    def assign(embs: pa.Array) -> pa.Array:
+        mat = _matrix(embs, cmat.shape[0])
+        return pa.array(cell_ids[np.argmax(mat @ cmat, axis=1)])
+
+    return assign
+
+
 def ann_ivf(spark, sf_dir):
     """IVF ANN: assign every vector to its nearest coarse centroid,
     then search each query only within its IVF_NPROBE nearest cells.
@@ -388,17 +411,10 @@ def ann_ivf(spark, sf_dir):
     cmat = cmat / np.linalg.norm(cmat, axis=0, keepdims=True)
     cell_ids = np.array([cid for cid, _ in cents], dtype=np.int32)
 
-    @F.pandas_udf(T.IntegerType())
-    def assign(embs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        if len(mat) == 0:
-            return pd.Series([], dtype="int32")
-        return pd.Series(cell_ids[np.argmax(mat @ cmat, axis=1)])
-
     e = read_table(spark, sf_dir, "embeddings")
     assigned = e.select(
         "vec_id", _as_double(F.col("embedding")).alias("v"),
-        assign(F.col("embedding")).alias("cell"),
+        _ivf_assign_udf(cmat, cell_ids)(F.col("embedding")).alias("cell"),
     )
 
     # queries are N_QUERIES rows: probe cells computed driver-side

@@ -173,6 +173,13 @@ ROLL_BASE = 131
 ROLL_SEED = 7
 
 
+def _roll_token_value(t):
+    """Column: v(tok) of the rolling hash above, as a long."""
+    return (
+        (F.length(t) * 31 + F.ascii(t)) * 31 + F.ascii(F.substring(t, -1, 1))
+    ).cast("long")
+
+
 def text_rolling_fingerprint(spark, sf_dir):
     """Order-sensitive content fingerprint via a polynomial rolling
     hash — unlike the md5 canonical-form fingerprint, the fold
@@ -180,15 +187,8 @@ def text_rolling_fingerprint(spark, sf_dir):
     one multiply-add).  Pure map at any scale."""
     d = read_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
-    tok_val = F.transform(
-        toks,
-        lambda t: (
-            (F.length(t) * 31 + F.ascii(t)) * 31
-            + F.ascii(F.substring(t, -1, 1))
-        ).cast("long"),
-    )
     h = F.aggregate(
-        tok_val,
+        F.transform(toks, _roll_token_value),
         F.lit(ROLL_SEED).cast("long"),
         lambda acc, v: (acc * ROLL_BASE + v + 1) % ROLL_MOD,
     )

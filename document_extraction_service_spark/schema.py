@@ -32,7 +32,7 @@ def bucketed_pages_schema() -> T.StructType:
     in place, so it would append a `bucket` field to the module-global
     schema on every call — poisoning every later PAGES_SCHEMA user in
     the same process (found when a bucketed read corrupted the
-    synthetic generator's mapInPandas schema)."""
+    synthetic generator's mapInArrow schema)."""
     return T.StructType(
         list(PAGES_SCHEMA.fields) + [T.StructField("bucket", T.IntegerType(), True)]
     )

@@ -37,11 +37,14 @@ job's byte-identical-replay contract.
 from __future__ import annotations
 
 import datetime
-from collections.abc import Iterator
+import itertools
+from collections.abc import Callable, Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schema import PAGES_SCHEMA
 
@@ -84,7 +87,7 @@ def write_warc(path: str, records: list[dict], gzip_members: bool = False) -> No
 _HEADER_CAP = 1 << 20  # lost-framing guard: no sane WARC header block is 1 MiB
 _SCAN_CHUNK = 64 << 10  # refill unit — the streaming reader's only fixed buffer
 
-# Rows per pandas frame emitted from a file task.  Bounds peak parsed-row
+# Rows per Arrow batch emitted from a file task.  Bounds peak parsed-row
 # memory to one chunk regardless of records-per-file; 64 pages × ~100 KB
 # html ≈ 6 MB per emitted Arrow batch.
 WARC_CHUNK_RECORDS = 64
@@ -326,17 +329,22 @@ class _GzipStream:
         return False
 
 
-def _open_warc(path: str):
-    """Open a WARC path for STREAMING reads.  Spark's listing returns
-    `file:` URIs for local files — convert to an OS path.  A gzip
-    magic number routes through `_GzipStream`, which inflates
-    concatenated members lazily as `.read()` is called — the inflated
-    file never exists in memory."""
+def _local_path(path: str) -> str:
+    """Spark's listing returns `file:` URIs for local files — convert
+    to an OS path."""
     if path.startswith("file:"):
         from urllib.parse import unquote, urlparse
 
-        path = unquote(urlparse(path).path)
-    fp = open(path, "rb")
+        return unquote(urlparse(path).path)
+    return path
+
+
+def _open_warc(path: str):
+    """Open a WARC path for STREAMING reads.  A gzip magic number
+    routes through `_GzipStream`, which inflates concatenated members
+    lazily as `.read()` is called — the inflated file never exists in
+    memory."""
+    fp = open(_local_path(path), "rb")
     if fp.read(2) == b"\x1f\x8b":
         fp.seek(0)
         return _GzipStream(fp)
@@ -344,35 +352,61 @@ def _open_warc(path: str):
     return fp
 
 
-def _iter_file_chunks(
-    path: str,
-    want_type: bytes,
-    to_row,
-    columns: list[str],
-    chunk_records: int,
-) -> Iterator[pd.DataFrame]:
-    """Stream one file's records as pandas frames of <= chunk_records
-    rows.  Robustness: an unopenable file, a corrupt/truncated gzip
-    stream (OSError covers BadGzipFile; EOFError is gzip's truncation
-    signal), or malformed framing ends THIS file quietly — records
-    parsed before the damage are still emitted, and the task never
-    dies (the module's one-corrupt-record contract)."""
+def _iter_file_records(
+    path: str, want_type: bytes
+) -> Iterator[tuple[str, object, bytes]]:
+    """Stream one file's `want_type` records.  Robustness: an
+    unopenable file, a corrupt/truncated gzip stream (OSError covers
+    BadGzipFile; EOFError is gzip's truncation signal), or malformed
+    framing ends THIS file quietly — records parsed before the damage
+    are still emitted, and the task never dies (the module's
+    one-corrupt-record contract)."""
     try:
         fp = _open_warc(path)
     except OSError:
         return
     with fp:
-        rows: list[tuple] = []
         try:
-            for rec in _iter_warc_stream(fp, want_type=want_type):
-                rows.append(to_row(rec))
-                if len(rows) >= chunk_records:
-                    yield pd.DataFrame(rows, columns=columns)
-                    rows = []
+            yield from _iter_warc_stream(fp, want_type=want_type)
         except (OSError, EOFError):
             pass  # mid-stream gzip damage: keep what parsed cleanly
-        if rows:
-            yield pd.DataFrame(rows, columns=columns)
+
+
+def record_batches(
+    rows: Iterable[tuple], schema: pa.Schema, n: int
+) -> Iterator[pa.RecordBatch]:
+    """Row tuples (in `schema` column order) -> RecordBatches of at
+    most n rows, pulled lazily from `rows`: peak memory is one batch of
+    parsed rows, never the file."""
+    it = iter(rows)
+    while chunk := list(itertools.islice(it, n)):
+        cols = dict(zip(schema.names, zip(*chunk)))
+        yield pa.RecordBatch.from_pydict(cols, schema=schema)
+
+
+def map_files(spark: SparkSession, path: str, schema: T.StructType,
+              file_rows: Callable[[str], Iterable[tuple]], n: int) -> DataFrame:
+    """The path-distributed source shape shared by the WARC, WET and
+    WebDataset readers: list `path` (`_list_warc_paths`), then one
+    mapInArrow pass in which each task streams its files through
+    `file_rows(file_path)` and emits batches of at most n rows."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for p in b.column("path").to_pylist():
+                yield from record_batches(file_rows(p), arrow_schema, n)
+
+    return _list_warc_paths(spark, path).mapInArrow(parse, schema)
+
+
+_WET_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), True),
+        T.StructField("warc_ts", T.TimestampType(), True),
+        T.StructField("text", T.StringType(), True),
+    ]
+)
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
@@ -380,21 +414,11 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     entry point for re-curating an already-extracted text corpus
     (every dedup/quality operator in this engine runs on exactly this
     shape).  Same path-distributed streaming shape as read_warc."""
-    cols = ["url", "warc_ts", "text"]
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for p in b["path"]:
-                yield from _iter_file_chunks(
-                    str(p),
-                    b"conversion",
-                    lambda r: (r[0], r[1], r[2].decode("utf-8", "replace")),
-                    cols,
-                    WARC_CHUNK_RECORDS,
-                )
-
-    return _list_warc_paths(spark, path).mapInPandas(
-        parse, "url string, warc_ts timestamp, text string"
+    return map_files(
+        spark, path, _WET_SCHEMA,
+        lambda p: ((u, ts, body.decode("utf-8", "replace"))
+                   for u, ts, body in _iter_file_records(p, b"conversion")),
+        WARC_CHUNK_RECORDS,
     )
 
 
@@ -405,19 +429,11 @@ def read_warc(
     (text/lang NULL — a crawl source has no pre-extracted text).  One
     task per ~1 GB file, ONE RECORD of peak parse memory: paths are
     distributed (never content), each task streams its files through
-    `_iter_warc_stream` and emits chunk_records-row frames.  See the
+    `_iter_warc_stream` and emits chunk_records-row batches.  See the
     module docstring for why this is the 100 TB shape."""
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for p in b["path"]:
-                yield from _iter_file_chunks(
-                    str(p),
-                    b"response",
-                    lambda r: (r[0], r[1], r[2], None, None),
-                    cols,
-                    chunk_records,
-                )
-
-    return _list_warc_paths(spark, path).mapInPandas(parse, PAGES_SCHEMA)
+    return map_files(
+        spark, path, PAGES_SCHEMA,
+        lambda p: ((u, ts, body, None, None)
+                   for u, ts, body in _iter_file_records(p, b"response")),
+        chunk_records,
+    )

@@ -11,7 +11,7 @@ Spark-first shape:
 * Shard assignment is a pure column expression (``doc_id div
   DOCS_PER_SHARD`` — deterministic, no global sort, no driver state).
 * Each shard is built by exactly ONE task: ``repartition(n, "shard")``
-  + ``applyInPandas`` assembling the tar executor-side, so peak
+  + ``applyInArrow`` assembling the tar executor-side, so peak
   memory per task is one shard's documents (DOCS_PER_SHARD bounds it
   by construction — the WebDataset contract itself: shards are sized
   to stream through a loader).
@@ -24,11 +24,11 @@ Spark-first shape:
   sha256, path) so the write self-evidences; writes go through a
   temp-file + atomic rename so a killed task never leaves a partial
   shard visible.
-* The source distributes file PATHS (binaryFile scan pruned to
-  ``path`` — the sources/warc.py listing idiom) and each task streams
-  its tars member-by-member via the stdlib tarfile in ``r|`` (stream)
-  mode, emitting bounded pandas chunks: peak parse memory is one
-  member, not one shard.
+* The source distributes file PATHS (``warc.map_files``: binaryFile
+  scan pruned to ``path``) and each task streams its tars
+  member-by-member via the stdlib tarfile in ``r|`` (stream) mode,
+  emitting bounded Arrow batches: peak parse memory is one member,
+  not one shard.
 """
 
 from __future__ import annotations
@@ -40,16 +40,26 @@ import os
 import tarfile
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from .warc import _local_path, map_files
 
 DOCS_PER_SHARD = 1000      # WebDataset-typical shard granularity
-WDS_CHUNK_ROWS = 64        # source emission unit (bounded frames)
+WDS_CHUNK_ROWS = 64        # source emission unit (bounded batches)
 
 _MANIFEST_SCHEMA = (
     "shard long, n_docs long, n_bytes long, sha256 string, path string"
 )
-_ROWS_SCHEMA = "doc_id long, text string, lang string, source string"
+_ROWS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+        T.StructField("source", T.StringType(), True),
+    ]
+)
 
 
 def _sample_members(doc_id: int, text: str, lang: str, source: str):
@@ -91,7 +101,7 @@ class _HashingWriter(io.RawIOBase):
         return len(b)
 
 
-def _write_shard_tar(rows: pd.DataFrame, tmp_path: str) -> tuple[int, str]:
+def _write_shard_tar(rows: pa.Table, tmp_path: str) -> tuple[int, str]:
     """STREAM the canonical shard tar to tmp_path member-by-member
     (r7, VERDICT r6 note: the previous io.BytesIO assembly held the
     finished tar in memory NEXT TO the group rows — ~2x shard bytes
@@ -103,16 +113,18 @@ def _write_shard_tar(rows: pd.DataFrame, tmp_path: str) -> tuple[int, str]:
     with open(tmp_path, "wb") as fp:
         w = _HashingWriter(fp)
         with tarfile.open(fileobj=w, mode="w", format=tarfile.USTAR_FORMAT) as tf:
-            for r in rows.sort_values("doc_id").itertuples(index=False):
-                for name, data in _sample_members(
-                    int(r.doc_id), r.text, r.lang, r.source
-                ):
-                    info = tarfile.TarInfo(name)
-                    info.size = len(data)
-                    info.mtime = 0
-                    info.uid = info.gid = 0
-                    info.uname = info.gname = ""
-                    tf.addfile(info, io.BytesIO(data))
+            by_id = rows.sort_by("doc_id")
+            for batch in by_id.to_batches(max_chunksize=WDS_CHUNK_ROWS):
+                for r in batch.to_pylist():
+                    for name, data in _sample_members(
+                        r["doc_id"], r["text"], r["lang"], r["source"]
+                    ):
+                        info = tarfile.TarInfo(name)
+                        info.size = len(data)
+                        info.mtime = 0
+                        info.uid = info.gid = 0
+                        info.uname = info.gname = ""
+                        tf.addfile(info, io.BytesIO(data))
     return w.n_bytes, w.sha.hexdigest()
 
 
@@ -127,28 +139,21 @@ def write_webdataset(
 
     os.makedirs(out_dir, exist_ok=True)
 
-    def build(key: tuple, rows: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
+    def build(key: tuple, rows: pa.Table) -> pa.Table:
+        shard = key[0].as_py()
         path = os.path.join(out_dir, f"shard-{shard:06d}.tar")
         tmp = f"{path}.inprogress.{os.getpid()}"
         n_bytes, sha = _write_shard_tar(rows, tmp)
         os.replace(tmp, path)  # atomic: no partial shard ever visible
-        return pd.DataFrame(
-            [
-                {
-                    "shard": shard,
-                    "n_docs": len(rows),
-                    "n_bytes": n_bytes,
-                    "sha256": sha,
-                    "path": path,
-                }
-            ]
+        return pa.Table.from_pylist(
+            [{"shard": shard, "n_docs": rows.num_rows, "n_bytes": n_bytes,
+              "sha256": sha, "path": path}]
         )
 
     sharded = df.select("doc_id", "text", "lang", "source").withColumn(
         "shard", F.expr(f"doc_id div {docs_per_shard}")
     )
-    return sharded.groupBy("shard").applyInPandas(build, _MANIFEST_SCHEMA)
+    return sharded.groupBy("shard").applyInArrow(build, _MANIFEST_SCHEMA)
 
 
 def _safe_key(key: str) -> int | None:
@@ -160,14 +165,6 @@ def _safe_key(key: str) -> int | None:
         return None
 
 
-def _list_tar_paths(spark: SparkSession, path: str) -> DataFrame:
-    """Metadata-only distributed listing (binaryFile pruned to `path`,
-    same idiom as warc._list_warc_paths: bytes never cross JVM->Arrow,
-    no 2 GB cap, size-weighted partition packing keeps one task per
-    shard file)."""
-    return spark.read.format("binaryFile").load(path).select("path")
-
-
 def _iter_tar_rows(path: str) -> Iterator[tuple]:
     """Stream one shard's samples: tarfile in ``r|`` mode reads
     member-by-member (no central-directory seek, one member of peak
@@ -175,13 +172,8 @@ def _iter_tar_rows(path: str) -> Iterator[tuple]:
     parsed before the damage survive (the sources robustness
     contract).  A ``.txt`` with no following ``.json`` yields NULL
     metadata rather than dropping the payload."""
-    if path.startswith("file:"):
-        # Spark's listing returns file: URIs for local files
-        from urllib.parse import unquote, urlparse
-
-        path = unquote(urlparse(path).path)
     try:
-        fp = open(path, "rb")
+        fp = open(_local_path(path), "rb")
     except OSError:
         return
     with fp:
@@ -230,18 +222,4 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     """Tar shard glob -> (doc_id, text, lang, source) DataFrame — the
     documents-table shape, so an exported corpus re-enters every
     dedup/curation operator directly."""
-    cols = ["doc_id", "text", "lang", "source"]
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for p in b["path"]:
-                rows: list[tuple] = []
-                for row in _iter_tar_rows(str(p)):
-                    rows.append(row)
-                    if len(rows) >= WDS_CHUNK_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return _list_tar_paths(spark, path).mapInPandas(parse, _ROWS_SCHEMA)
+    return map_files(spark, path, _ROWS_SCHEMA, _iter_tar_rows, WDS_CHUNK_ROWS)

@@ -7,7 +7,7 @@ no JSON round trip (measured 2.3x faster on the write path than
 udf->json->from_json, because the JVM otherwise re-parses the full
 nested payload at materialization time).  The batches stay pyarrow
 arrays end to end: no pandas Series or DataFrame is built around the
-nested struct.  Against the earlier pandas_udf form, same session,
+nested struct.  Against the earlier pandas-Series form, same session,
 noop sink, 8k pages, local[4] on 4 vCPUs, 5 alternating rounds:
 median 5.21 -> 5.11 s, rows identical.
 
@@ -46,13 +46,12 @@ def extract_struct_udf(
         yield pa.array(res, type=_RESULT_ARROW)
 
 
-def extraction_col(html: str | Column = "html", url: str | Column = "url",
-                   lang: str | Column = "lang",
-                   text: str | Column = "text") -> Column:
-    """Column expression: parse+extract -> RESULT struct (Arrow-direct).
-    `text` is the crawl-provided plain text, used only as the
-    null-html fallback (status.fallback)."""
-    return extract_struct_udf(html, url, lang, text)
+def extraction_col() -> Column:
+    """Column expression over a pages frame's html/url/lang/text:
+    parse+extract -> RESULT struct (Arrow-direct).  `text` is the
+    crawl-provided plain text, used only as the null-html fallback
+    (status.fallback)."""
+    return extract_struct_udf("html", "url", "lang", "text")
 
 
 def with_extraction(df: DataFrame) -> DataFrame:

@@ -433,6 +433,118 @@ def test_collects_only_in_bounded_postings():
     assert not offenders, "\n".join(offenders)
 
 
+def test_python_stages_exchange_arrow():
+    """Every executor-side Python stage in the package exchanges
+    pyarrow batches (arrow_udf / mapInArrow / applyInArrow): no
+    pandas_udf, mapInPandas or applyInPandas call and no pandas import.
+    The one exception is streaming/stateful_dedup.py, whose
+    applyInPandasWithState has no Arrow-form twin with the same
+    GroupState semantics."""
+    import ast
+    import pathlib
+
+    import document_extraction_service_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    pandas_calls = {"pandas_udf", "mapInPandas", "applyInPandas"}
+    stages, imports = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "streaming/stateful_dedup.py":
+            continue
+        tree = ast.parse(path.read_text())
+        defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+
+        def owner(node):
+            return next(
+                (d.name for d in defs if d.lineno <= node.lineno <= d.end_lineno),
+                "<module>",
+            )
+
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                if name in pandas_calls:
+                    stages.append(f"{rel}:{node.lineno} {owner(node)} ({name})")
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                mods = (
+                    [a.name for a in node.names] if isinstance(node, ast.Import)
+                    else [node.module or ""]
+                )
+                if any(m.split(".")[0] == "pandas" for m in mods):
+                    imports.append(f"{rel}:{node.lineno} {owner(node)}")
+    assert not stages and not imports, (
+        f"{len(stages)} pandas-form stages:\n" + "\n".join(stages)
+        + f"\n{len(imports)} pandas imports:\n" + "\n".join(imports)
+    )
+
+
+def test_numpy_kernels_on_empty_and_sparse_input(spark):
+    """The LSH signature and IVF assignment Arrow UDFs over empty
+    input: an empty batch handed to each kernel, a frame hashed into
+    more partitions than it has rows (so some partitions are empty),
+    and a fully filtered-out frame.  Rows must equal a per-row Python
+    reference; a null or ragged embedding must fail loudly."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from document_extraction_service_spark.operators.similarity import (
+        LSH_MIN_PLANES,
+        LSH_TABLES,
+        _ivf_assign_udf,
+        _ivf_centroids,
+        _matrix,
+        _planes,
+        _signatures_udf,
+    )
+    from document_extraction_service_spark.operators.tables import read_table
+
+    tables, planes = LSH_TABLES, LSH_MIN_PLANES
+    sig = _signatures_udf(tables=tables, planes=planes)
+    cents = _ivf_centroids(spark, SF_DIR)
+    cmat = np.array([cv for _, cv in cents], dtype=np.float64).T
+    cmat = cmat / np.linalg.norm(cmat, axis=0, keepdims=True)
+    cell_ids = np.array([cid for cid, _ in cents], dtype=np.int32)
+    assign = _ivf_assign_udf(cmat, cell_ids)
+
+    empty = pa.array([], pa.list_(pa.float32()))
+    assert len(sig.func(empty)) == 0 and len(assign.func(empty)) == 0
+
+    pl = _planes(tables=tables, planes=planes)
+    norms = [math.sqrt(sum(x * x for x in cv)) for _, cv in cents]
+
+    def ref(v):
+        bits = (np.asarray(v, dtype=np.float64) @ pl) >= 0
+        buckets = [
+            sum(1 << k for k in range(planes) if bits[t * planes + k])
+            for t in range(tables)
+        ]
+        dots = [sum(a * b for a, b in zip(v, cv)) / n for (_, cv), n in zip(cents, norms)]
+        return buckets, cents[dots.index(max(dots))][0]
+
+    e = read_table(spark, SF_DIR, "embeddings")
+    want = {r["vec_id"]: ref(r["embedding"]) for r in e.filter("vec_id < 20").collect()}
+    n_parts = 32
+    sparse = e.filter("vec_id < 20").repartition(n_parts, "vec_id")
+    assert sparse.select(F.spark_partition_id()).distinct().count() < n_parts
+    for frame, expect in ((sparse, want), (e.filter("vec_id < 0"), {})):
+        got = {
+            r["vec_id"]: (list(r["bs"]), r["cell"])
+            for r in frame.select(
+                "vec_id",
+                sig(F.col("embedding")).alias("bs"),
+                assign(F.col("embedding")).alias("cell"),
+            ).collect()
+        }
+        assert got == expect
+
+    for bad in ([[0.5] * 64, None], [[0.5] * 63, [0.5] * 65]):
+        with pytest.raises(ValueError):
+            _matrix(pa.array(bad, pa.list_(pa.float32())), 64)
+
+
 def test_two_stage_topk_kernel_vs_brute_force(spark):
     """similarity.two_stage_topk against a Python sort, keyed and
     global (keys=[]): a group smaller than k keeps all its rows, ties

@@ -228,21 +228,23 @@ def test_job_runs_end_to_end_from_wet_input(spark, tmp_path):
 
 
 def test_warc_chunked_emission(tmp_path):
-    """The streaming reader must emit BOUNDED frames, not one frame
-    per file: 5 records at chunk_records=2 -> 3 frames of 2/2/1 rows
-    (peak task memory is one chunk, never the file)."""
+    """The streaming reader must emit BOUNDED batches, not one batch
+    per file: 5 records at n=2 -> 3 batches of 2/2/1 rows (peak task
+    memory is one chunk, never the file)."""
+    import pyarrow as pa
+
     from document_extraction_service_spark.sources.warc import (
-        _iter_file_chunks,
+        _iter_file_records,
+        record_batches,
     )
 
     p = str(tmp_path / "c.warc")
     write_warc(p, _fixture_records()[:5])
-    chunks = list(
-        _iter_file_chunks(
-            p, b"response", lambda r: r, ["url", "ts", "html"], 2
-        )
+    schema = pa.schema(
+        [("url", pa.string()), ("ts", pa.timestamp("us")), ("html", pa.binary())]
     )
-    assert [len(c) for c in chunks] == [2, 2, 1]
+    batches = list(record_batches(_iter_file_records(p, b"response"), schema, 2))
+    assert [b.num_rows for b in batches] == [2, 2, 1]
 
 
 def test_warc_listing_scan_prunes_content(spark, tmp_path, plan_text):

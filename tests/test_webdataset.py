@@ -6,8 +6,11 @@ import hashlib
 import tarfile
 
 import pandas as pd
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from document_extraction_service_spark.sources.warc import record_batches
 from document_extraction_service_spark.sources.webdataset import (
+    _ROWS_SCHEMA,
     WDS_CHUNK_ROWS,
     _iter_tar_rows,
     read_webdataset,
@@ -85,21 +88,16 @@ def test_tar_layout_is_loader_compatible(spark, tmp_path):
 
 def test_source_streams_bounded_chunks(spark, tmp_path):
     """A shard larger than WDS_CHUNK_ROWS must be emitted as >1
-    pandas frame (the bounded-memory contract), without losing rows."""
+    Arrow batch (the bounded-memory contract), without losing rows."""
+    import glob as g
+
     n = WDS_CHUNK_ROWS * 2 + 7
     d = _docs(spark, n)
     out = str(tmp_path / "w")
     write_webdataset(d, out, docs_per_shard=n).collect()
-    frames = 0
-    rows = 0
-    import glob as g
-
-    for p in g.glob(f"{out}/*.tar"):
-        chunk = []
-        for r in _iter_tar_rows(p):
-            chunk.append(r)
-        rows += len(chunk)
-    assert rows == n
+    (p,) = g.glob(f"{out}/*.tar")
+    batches = record_batches(_iter_tar_rows(p), to_arrow_schema(_ROWS_SCHEMA), WDS_CHUNK_ROWS)
+    assert [b.num_rows for b in batches] == [WDS_CHUNK_ROWS, WDS_CHUNK_ROWS, 7]
     # the Spark-side reader path, full count
     assert read_webdataset(spark, f"{out}/*.tar").count() == n
 
