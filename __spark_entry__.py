@@ -111,7 +111,7 @@ def _sql_extract_corpus() -> str:
 
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "tests", "golden", "corpus_invariants.json")
-    rows = json.load(open(path))
+    rows = json.load(open(path))["families"]
     vals = ",\n  ".join(
         "({})".format(", ".join([
             f"'{r['family']}'", str(r["n_docs"]), str(r["n_ok"]),

@@ -14,10 +14,17 @@ from __future__ import annotations
 
 from collections import Counter
 
+import numpy as np
+
 from . import textops as X
 
+# candidate pairs per numpy pass: bounds the pass's memory, and the pairs
+# built past an exhausted budget, on adversarial pages with thousands of
+# same-length keys
+_PAIR_CHUNK = 1024
 
-def _header_like(blocks, k) -> bool:
+
+def _header_like(blocks, words, k) -> bool:
     """Non-markup header detection (reference _identify_headers,
     text_api.py:285-356): a short, link-free block becomes a heading
     when it is
@@ -35,11 +42,10 @@ def _header_like(blocks, k) -> bool:
 
     Gates shared with the reference: < HEADER_MAX_WORDS words
     (text_api.py:313), > HEADER_MIN_CHARS non-space chars
-    (text_api.py:317).
+    (text_api.py:317).  `words[k]` is block k's word count.
     """
     b = blocks[k]
-    words = X.n_words(b.text)
-    if words >= X.HEADER_MAX_WORDS or b.n_link_chars > 0:
+    if words[k] >= X.HEADER_MAX_WORDS or b.n_link_chars > 0:
         return False
     if len(b.text.replace(" ", "")) <= X.HEADER_MIN_CHARS:
         return False
@@ -49,7 +55,7 @@ def _header_like(blocks, k) -> bool:
     next_is_content = (
         nxt is not None
         and not nxt.in_chrome
-        and X.n_words(nxt.text) >= X.MIN_CONTENT_WORDS
+        and words[k + 1] >= X.MIN_CONTENT_WORDS
     )
     if not next_is_content:
         return False
@@ -60,6 +66,43 @@ def _header_like(blocks, k) -> bool:
         if prev is not None and prev.text.endswith("."):
             return True
     return False
+
+
+def _candidate_pairs(lens: list[int]):
+    """Yield the candidate pairs (i, j), i < j, of keys sorted by length,
+    in scan order, as chunks of parallel (left, right) index lists of
+    about _PAIR_CHUNK pairs.  A pair is a candidate when its length gap
+    fits kmax = (la + lb - 1) // 20, i.e. 19*lb < 21*la; lengths are
+    sorted, so each i's partners are the run right after it."""
+    left, right = [], []
+    for i, la in enumerate(lens):
+        for j in range(i + 1, len(lens)):
+            if 19 * lens[j] >= 21 * la:
+                break
+            left.append(i)
+            right.append(j)
+        if len(left) >= _PAIR_CHUNK:
+            yield left, right
+            left, right = [], []
+    if left:
+        yield left, right
+
+
+def _coarse_counts(keys: list[str]) -> np.ndarray:
+    """(len(keys), 256) counts of each key's code points mod 256.  This
+    merges characters into 256 classes (exact for ASCII), so its L1
+    distance between two keys never exceeds their char-multiset L1."""
+    low = np.frombuffer("".join(keys).encode("utf-32-le"), dtype=np.uint8)[::4]
+    rows = np.repeat(np.arange(len(keys)), [len(k) for k in keys])
+    flat = np.bincount(rows * 256 + low, minlength=len(keys) * 256)
+    # keys are at most 2 * FUZZY_KEY_LEN chars: counts fit int16
+    return flat.astype(np.int16).reshape(len(keys), 256)
+
+
+def _char_l1(a: str, b: str) -> int:
+    """L1 distance between the char multisets of a and b."""
+    ca, cb = Counter(a), Counter(b)
+    return sum((ca - cb).values()) + sum((cb - ca).values())
 
 
 def _merge_fuzzy_groups(groups: dict[str, list[int]]) -> None:
@@ -85,30 +128,25 @@ def _merge_fuzzy_groups(groups: dict[str, list[int]]) -> None:
             x = parent[x]
         return x
 
-    # char-multiset counts per key: sum |count_a(c) - count_b(c)| lower-
-    # bounds the weighted edit distance (each indel moves one count at
-    # cost 1, each substitution moves two at cost 2), so most distinct
-    # pairs are pruned in O(alphabet) without touching the DP.  (A
-    # numpy-broadcast variant was measured SLOWER at realistic key
-    # counts (~60/doc): per-doc array overhead beats the dict loop.)
-    cnts = [Counter(k) for k in keys]
+    # The char-multiset L1 distance lower-bounds the weighted edit
+    # distance (each indel moves one count at cost 1, each substitution
+    # moves two at cost 2), and the coarse L1 lower-bounds that, so a
+    # pair above kmax on either is no match.  One numpy pass bounds a
+    # chunk of pairs; the few it keeps are checked exactly, and only
+    # pairs within kmax of the exact bound spend the comparison budget,
+    # in scan order.
     budget = X.FUZZY_MAX_COMPARISONS
-    for i, a in enumerate(keys):
-        if budget <= 0:
-            break
-        ca = cnts[i]
-        la = len(a)
-        for j in range(i + 1, len(keys)):
-            b = keys[j]
-            if len(b) - la > X._FUZZY_MAX_K:
-                break  # keys sorted by length: no further candidate
-            kmax = (la + len(b) - 1) // 20
-            if len(b) - la > kmax:
-                continue
-            cb = cnts[j]
-            d_lb = sum(abs(cnt - cb.get(ch, 0)) for ch, cnt in ca.items())
-            d_lb += sum(cnt for ch, cnt in cb.items() if ch not in ca)
-            if d_lb > kmax:
+    lens = [len(k) for k in keys]
+    counts = lens_arr = None
+    for left, right in _candidate_pairs(lens):
+        if counts is None:  # built only on pages with a candidate pair
+            counts, lens_arr = _coarse_counts(keys), np.array(lens)
+        li, ri = np.array(left), np.array(right)
+        kmax = (lens_arr[li] + lens_arr[ri] - 1) // 20
+        coarse = np.abs(counts[li] - counts[ri]).sum(axis=1)
+        for q in np.flatnonzero(coarse <= kmax).tolist():
+            a, b = keys[left[q]], keys[right[q]]
+            if _char_l1(a, b) > kmax[q]:
                 continue
             budget -= 1
             if X.fuzzy_close(a, b):
@@ -117,6 +155,8 @@ def _merge_fuzzy_groups(groups: dict[str, list[int]]) -> None:
                     parent[rb] = ra
             if budget <= 0:
                 break
+        if budget <= 0:
+            break
     for k in keys:
         r = find(k)
         if r != k:
@@ -150,6 +190,9 @@ def classify_blocks(blocks) -> list[str]:
             keep = max(idxs, key=lambda k: (blocks[k].n_chars, -k))
             fuzzy_drop.update(k for k in idxs if k != keep)
 
+    # block text is whitespace-normalized (single spaces, no edge
+    # spaces), so the word count is the space count plus one
+    words = [b.text.count(" ") + 1 for b in blocks]
     seen_title = False
     for k, b in enumerate(blocks):
         if b.in_chrome:
@@ -158,11 +201,10 @@ def classify_blocks(blocks) -> list[str]:
             continue
         if k in fuzzy_drop:
             continue
-        words = X.n_words(b.text)
         if (
-            words <= X.BOILER_MAX_WORDS
+            words[k] <= X.BOILER_MAX_WORDS
             and b.n_chars <= X.BOILER_MAX_CHARS
-            and any(p.search(b.text) for p in X.BOILER_PATTERNS)
+            and X.is_boilerplate(b.text)
         ):
             continue
         link_density = b.n_link_chars / max(b.n_chars, 1)
@@ -171,9 +213,9 @@ def classify_blocks(blocks) -> list[str]:
             seen_title = True
         elif b.heading >= 1:
             labels[k] = "heading"
-        elif _header_like(blocks, k):
+        elif _header_like(blocks, words, k):
             labels[k] = "heading"
-        elif words >= X.MIN_CONTENT_WORDS and link_density <= X.LINK_DENSITY_MAX:
+        elif words[k] >= X.MIN_CONTENT_WORDS and link_density <= X.LINK_DENSITY_MAX:
             labels[k] = "content"
         elif link_density <= X.LINK_DENSITY_MAX:
             labels[k] = "short"  # sandwich candidate

@@ -34,21 +34,45 @@ MAX_CAPTION_SENTENCES = 2
 
 # boilerplate text patterns (analog of the reference's metadata regex
 # list F3, /root/reference/app/core/files/meta_data_pattern.json:1-12 —
-# email / links / doi / "please cite" / http; extended with web chrome)
+# email / links / doi / "please cite" / http; extended with web chrome),
+# each with literals one of which every match contains once an ASCII
+# text is lowercased (on ASCII, lowercasing agrees with re.I exactly);
+# literals without case ('@', '://', '©', '(') hold for any text.
 BOILER_PATTERNS = [
-    re.compile(p, re.I)
-    for p in (
-        r"\bcookies?\b",
-        r"all rights reserved",
-        r"\bshare on\b",
-        r"\blog ?in\b|\bsign ?up\b|\bsubscribe\b",
-        r"\bprivacy\b|\bterms\b|\bimprint\b",
-        r"©|\(c\) \d{4}",
-        r"[\w.+-]{1,64}@[\w-]{1,63}\.[\w.]{2,63}",
-        r"^https?://\S+$",
-        r"please cite",
+    (re.compile(p, re.I), literals, all(lit.upper() == lit for lit in literals))
+    for p, literals in (
+        (r"\bcookies?\b", ("cookie",)),
+        (r"all rights reserved", ("all rights reserved",)),
+        (r"\bshare on\b", ("share on",)),
+        (r"\blog ?in\b|\bsign ?up\b|\bsubscribe\b", ("log", "sign", "subscribe")),
+        (r"\bprivacy\b|\bterms\b|\bimprint\b", ("privacy", "terms", "imprint")),
+        (r"©|\(c\) \d{4}", ("©", "(")),
+        (r"[\w.+-]{1,64}@[\w-]{1,63}\.[\w.]{2,63}", ("@",)),
+        (r"^https?://\S+$", ("://",)),
+        (r"please cite", ("please cite",)),
     )
 ]
+
+
+def is_boilerplate(text: str) -> bool:
+    """True iff any BOILER_PATTERNS pattern matches text.  A C-level
+    substring test for the pattern's literals skips most regex scans:
+    on the lowercased text when it is ASCII, else on the text itself
+    for literals without case."""
+    ascii_low = text.lower() if text.isascii() else None
+    for pattern, literals, caseless in BOILER_PATTERNS:
+        hay = ascii_low if ascii_low is not None else text if caseless else None
+        if hay is not None:
+            for lit in literals:
+                if lit in hay:
+                    break
+            else:
+                continue  # no literal: the pattern cannot match
+        if pattern.search(text):
+            return True
+    return False
+
+
 # a pattern-matching block is only dropped when short — long prose that
 # merely mentions "privacy" is not chrome.  Both gates matter: the char
 # gate keeps regex scans off megabyte single-"word" blocks (a 2 MB
@@ -110,15 +134,21 @@ def n_words(s: str) -> int:
 _FUZZY_WINDOW = 10 * FUZZY_KEY_LEN
 
 
+def _strip_nonword(s: str) -> str:
+    # dropping the spaces first (C-level) leaves the regex far fewer runs
+    # to cut: block text is mostly words and single spaces
+    return _NONWORD_RE.sub("", s.replace(" ", ""))
+
+
 def fuzzy_key(s: str) -> str:
     """Normalized first/last FUZZY_KEY_LEN chars (reference O7 key)."""
     if len(s) <= 2 * _FUZZY_WINDOW:
-        t = _NONWORD_RE.sub("", s).lower()
+        t = _strip_nonword(s).lower()
         if len(t) <= 2 * FUZZY_KEY_LEN:
             return t
         return t[:FUZZY_KEY_LEN] + t[-FUZZY_KEY_LEN:]
-    head = _NONWORD_RE.sub("", s[:_FUZZY_WINDOW]).lower()
-    tail = _NONWORD_RE.sub("", s[-_FUZZY_WINDOW:]).lower()
+    head = _strip_nonword(s[:_FUZZY_WINDOW]).lower()
+    tail = _strip_nonword(s[-_FUZZY_WINDOW:]).lower()
     return head[:FUZZY_KEY_LEN] + tail[-FUZZY_KEY_LEN:]
 
 
@@ -134,9 +164,6 @@ def fuzzy_key(s: str) -> str:
 # bounds adversarial pages (beyond it the dedup degrades to exact-key
 # equality — deterministic, never O(n^2) blowup).
 FUZZY_MAX_COMPARISONS = 1_000
-# max accepted distance: keys are <= 2*FUZZY_KEY_LEN chars, so
-# lensum <= 4*FUZZY_KEY_LEN and d2 < lensum/20
-_FUZZY_MAX_K = (4 * FUZZY_KEY_LEN - 1) // 20
 
 
 def lev_capped(a: str, b: str, k: int) -> int:
@@ -194,6 +221,8 @@ _SOFT_HYPH_ANY = re.compile(r"­")
 
 
 def dehyphenate(s: str) -> str:
+    if "\xad" not in s:
+        return s
     return _SOFT_HYPH_ANY.sub("", _SOFT_HYPH_JOIN.sub("", s))
 
 
@@ -205,13 +234,14 @@ _ABBREVS = frozenset(
     "et al e.g i.e fig figs tab vs cf dr prof no approx ca eq ref refs "
     "etc jr sr st".split()
 )
-_SPLIT_CAND = re.compile(r"[.!?]+(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])")
-
-
-def _token_before(s: str, pos: int) -> str:
-    # block text is whitespace-normalized upstream (single spaces), so
-    # C-level rfind replaces the per-char backward scan
-    return s[s.rfind(" ", 0, pos) + 1 : pos]
+# a run of [.!?] before a capitalized / numbered next word.  Spelled
+# [.!?][.!?]* rather than [.!?]+ (same matches): a pattern that opens
+# with a plain character class lets the regex engine skip ahead to the
+# next candidate character in C.  Text without '!' and '?' (most blocks)
+# uses the '.'-only twin, which opens with a literal and scans faster
+# still.
+_SPLIT_CAND = re.compile(r"[.!?][.!?]*(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])")
+_SPLIT_CAND_DOT = re.compile(r"\.\.*(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])")
 
 
 def split_sentences(s: str) -> list[str]:
@@ -222,10 +252,15 @@ def split_sentences(s: str) -> list[str]:
     s = s.strip()
     if not s:
         return []
-    cuts = []
-    for m in _SPLIT_CAND.finditer(s):
-        tok = _token_before(s, m.start()).lower()
-        bare = tok.rstrip(".").lstrip("([\"'")
+    # block text is whitespace-normalized upstream (single spaces), so
+    # the token before a position starts after the last space before it
+    rfind = s.rfind
+    cand = _SPLIT_CAND if "!" in s or "?" in s else _SPLIT_CAND_DOT
+    parts, lo = [], 0
+    for m in cand.finditer(s):
+        start = m.start()
+        tok_lo = rfind(" ", 0, start) + 1
+        bare = s[tok_lo:start].lower().rstrip(".").lstrip("([\"'")
         if bare in _ABBREVS:
             continue
         # single-letter initials: "A. Müller"
@@ -233,16 +268,15 @@ def split_sentences(s: str) -> list[str]:
             continue
         # "et al." — token is "al", previous token "et"
         if bare == "al":
-            prev = _token_before(s, m.start() - len(tok) - 1).lower().lstrip("([\"'")
-            if prev == "et":
+            prev_end = tok_lo - 1
+            prev = s[rfind(" ", 0, prev_end) + 1 : prev_end]
+            if prev.lower().lstrip("([\"'") == "et":
                 continue
-        cuts.append(m.end())
-    parts, lo = [], 0
-    for c in cuts:
-        part = s[lo:c].strip()
+        cut = m.end()
+        part = s[lo:cut].strip()
         if part:
             parts.append(part)
-        lo = c
+        lo = cut
     tail = s[lo:].strip()
     if tail:
         parts.append(tail)

@@ -49,6 +49,9 @@ _SKIP_TAGS = frozenset("script style noscript template svg iframe object".split(
 _CHROME_TAGS = frozenset("nav footer aside".split())
 _HEADINGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 _VOID_TAGS = frozenset("br img meta link input hr area base col embed source track wbr".split())
+# any other tag is inline to the handlers: it moves only the depth and
+# the link/bold/cite trackers (and <html> sets the page language)
+_STRUCT_TAGS = _BLOCK_TAGS | _VOID_TAGS
 MAX_CITES = 256  # <cite> harvest cap (references parity, datamodels.py:60-64)
 
 
@@ -127,6 +130,15 @@ def sniff_decode(raw: bytes) -> tuple[str, str, bool]:
     return unicodedata.normalize("NFC", text), enc, truncated
 
 
+def _span_val(v) -> int:
+    """colspan/rowspan attribute -> int in [1, 64]; 1 when absent or
+    malformed."""
+    try:
+        return max(1, min(64, int(v)))
+    except (TypeError, ValueError):
+        return 1
+
+
 def _norm_ws(s: str) -> str:
     # C-level whitespace collapse (~4x faster than re.sub on this path);
     # str.split also folds unicode spaces (NBSP), which is the desired
@@ -180,19 +192,14 @@ class _BlockParser(HTMLParser):
         if len(self.blocks) >= MAX_BLOCKS:
             self.truncated = True
             return
-        self.blocks.append(
-            Block(
-                idx=len(self.blocks),
-                text=text,
-                tag=self._buf_tag,
-                heading=self._buf_heading,
-                n_chars=len(text),
-                n_link_chars=min(link_chars, len(text)),
-                n_bold_chars=min(bold_chars, len(text)),
-                in_chrome=self._chrome_depth > 0,
-                depth=self._depth,
-            )
-        )
+        n = len(text)
+        # fields in declaration order: positional arguments cost half
+        # of a keyword call to the dataclass __init__
+        self.blocks.append(Block(
+            len(self.blocks), text, self._buf_tag, self._buf_heading, n,
+            min(link_chars, n), min(bold_chars, n), self._chrome_depth > 0,
+            self._depth,
+        ))
 
     def _flush_cell(self) -> None:
         t = self._tstack[-1]
@@ -221,10 +228,26 @@ class _BlockParser(HTMLParser):
             return
         if self._skip_depth:
             return
-        ad = dict(attrs)
-        if tag == "html" and ad.get("lang"):
-            self.html_lang = (ad.get("lang") or "").strip().lower()[:8]
+        if tag not in _STRUCT_TAGS:
+            # inline element (a, span, b, em, cite, html, ...): only the
+            # link/bold/cite trackers and the depth move
+            if tag == "a":
+                self._link_depth += 1
+            elif tag == "b" or tag == "strong":
+                # bold span tracking: the DOM signal replacing the
+                # reference's font-size header heuristic (text_api.py:285-356)
+                self._bold_depth += 1
+            elif tag == "cite":
+                self._cite_parts = []
+            elif tag == "html":
+                lang = dict(attrs).get("lang")
+                if lang:
+                    self.html_lang = lang.strip().lower()[:8]
+            if self._depth < 10_000:
+                self._depth += 1
+            return
         if tag == "meta":
+            ad = dict(attrs)
             key = (ad.get("name") or ad.get("property") or "").strip().lower()
             if key and ad.get("content") is not None:
                 # first value wins except repeatable author tags
@@ -244,7 +267,7 @@ class _BlockParser(HTMLParser):
             self._in_title = True
             return
         if tag == "img":
-            src = (ad.get("src") or "").strip()
+            src = (dict(attrs).get("src") or "").strip()
             if self._fig is not None and not self._fig["src"]:
                 self._fig["src"] = src
             elif self._fig is None and src and len(self.figures) < MAX_FIGURES:
@@ -253,34 +276,27 @@ class _BlockParser(HTMLParser):
                 # (reference requires a description block, image_api.py:88-101)
                 self.figures.append(FigureCap(anchor=len(self.blocks), src=src, caption=""))
             return
-        if tag in _VOID_TAGS and tag != "br":
-            return
+        if tag not in _BLOCK_TAGS:
+            return  # void element other than <br>
 
-        if tag in _BLOCK_TAGS:
-            if self._tstack:
-                # block boundary inside a table cell: space-join
-                t = self._tstack[-1]
-                if t["cell_parts"] is not None:
-                    t["cell_parts"].append(" ")
-                elif t["in_caption"]:
-                    t["cap_parts"].append(" ")
-            else:
-                self._flush()
-            if tag in _HEADINGS:
-                self._buf_heading = _HEADINGS[tag]
-                self._buf_tag = tag
-            elif tag != "br":
-                self._buf_heading = 0
-                self._buf_tag = tag
+        if self._tstack:
+            # block boundary inside a table cell: space-join
+            t = self._tstack[-1]
+            if t["cell_parts"] is not None:
+                t["cell_parts"].append(" ")
+            elif t["in_caption"]:
+                t["cap_parts"].append(" ")
+        else:
+            self._flush()
+        if tag in _HEADINGS:
+            self._buf_heading = _HEADINGS[tag]
+            self._buf_tag = tag
+        elif tag == "br":
+            return  # void: no depth change
+        else:
+            self._buf_heading = 0
+            self._buf_tag = tag
 
-        if tag == "cite":
-            self._cite_parts = []
-        if tag == "a":
-            self._link_depth += 1
-        elif tag in ("b", "strong"):
-            # bold span tracking: the DOM signal replacing the
-            # reference's font-size header heuristic (text_api.py:285-356)
-            self._bold_depth += 1
         if tag in _CHROME_TAGS:
             self._chrome_depth += 1
         if tag == "table":
@@ -296,19 +312,13 @@ class _BlockParser(HTMLParser):
             t = self._tstack[-1]
             if tag == "tr":
                 self._flush_row()
-            elif tag in ("td", "th"):
+            elif tag == "td" or tag == "th":
                 self._flush_cell()
                 t["cell_parts"] = []
                 t["cell_th"] = tag == "th"
-
-                def _ival(v, lo=1, hi=64):
-                    try:
-                        return max(lo, min(hi, int(v)))
-                    except (TypeError, ValueError):
-                        return 1
-
-                t["colspan"] = _ival(ad.get("colspan"))
-                t["rowspan"] = _ival(ad.get("rowspan"))
+                ad = dict(attrs)
+                t["colspan"] = _span_val(ad.get("colspan"))
+                t["rowspan"] = _span_val(ad.get("rowspan"))
             elif tag == "caption":
                 t["in_caption"] = True
         if tag == "figure":
@@ -316,8 +326,8 @@ class _BlockParser(HTMLParser):
             self._fig = dict(anchor=len(self.blocks), src="", cap_parts=[])
         elif tag == "figcaption" and self._fig is not None:
             self._in_figcaption = True
-        if tag not in _VOID_TAGS:
-            self._depth = min(self._depth + 1, 10_000)
+        if self._depth < 10_000:
+            self._depth += 1
 
     def handle_startendtag(self, tag, attrs):
         self.handle_starttag(tag, attrs)
@@ -330,26 +340,33 @@ class _BlockParser(HTMLParser):
             return
         if self._skip_depth:
             return
+        if tag not in _STRUCT_TAGS:
+            if self._depth:
+                self._depth -= 1
+            if tag == "a":
+                if self._link_depth:
+                    self._link_depth -= 1
+            elif tag == "b" or tag == "strong":
+                if self._bold_depth:
+                    self._bold_depth -= 1
+            elif tag == "cite" and self._cite_parts is not None:
+                text = _norm_ws("".join(self._cite_parts))
+                if text and len(self.cites) < MAX_CITES:
+                    self.cites.append(text)
+                self._cite_parts = None
+            return
         if tag == "title":
             self._in_title = False
             return
-        if tag in _VOID_TAGS:
-            return
-        self._depth = max(0, self._depth - 1)
-        if tag in _BLOCK_TAGS and not self._tstack:
+        if tag not in _BLOCK_TAGS or tag == "br":
+            return  # void element
+        if self._depth:
+            self._depth -= 1
+        if not self._tstack:
             self._flush()
             if tag in _HEADINGS:
                 self._buf_heading = 0
                 self._buf_tag = "p"
-        if tag == "cite" and self._cite_parts is not None:
-            text = _norm_ws("".join(self._cite_parts))
-            if text and len(self.cites) < MAX_CITES:
-                self.cites.append(text)
-            self._cite_parts = None
-        if tag == "a":
-            self._link_depth = max(0, self._link_depth - 1)
-        elif tag in ("b", "strong"):
-            self._bold_depth = max(0, self._bold_depth - 1)
         if tag in _CHROME_TAGS:
             self._chrome_depth = max(0, self._chrome_depth - 1)
         if self._tstack:
@@ -360,7 +377,7 @@ class _BlockParser(HTMLParser):
                 self._tstack.pop()
             elif tag == "tr":
                 self._flush_row()
-            elif tag in ("td", "th"):
+            elif tag == "td" or tag == "th":
                 self._flush_cell()
             elif tag == "caption":
                 t["in_caption"] = False
@@ -396,10 +413,12 @@ class _BlockParser(HTMLParser):
             self._fig["cap_parts"].append(data)
             return
         self._buf.append(data)
-        if self._link_depth > 0:
-            self._buf_link_chars += len(_norm_ws(data))
-        if self._bold_depth > 0:
-            self._buf_bold_chars += len(_norm_ws(data))
+        if self._link_depth > 0 or self._bold_depth > 0:
+            n = len(_norm_ws(data))
+            if self._link_depth > 0:
+                self._buf_link_chars += n
+            if self._bold_depth > 0:
+                self._buf_bold_chars += n
         if self._cite_parts is not None:
             self._cite_parts.append(data)
 
@@ -430,7 +449,7 @@ _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
 )
 # tags whose attributes the block parser actually reads
-_ATTR_TAGS = frozenset("meta img html td th a".split())
+_ATTR_TAGS = frozenset("meta img html td th".split())
 # raw-text elements: content is never parsed as markup.  Exactly
 # html.parser's CDATA_CONTENT_ELEMENTS (script/style) for parity —
 # stdlib parses textarea/title content as markup.
@@ -461,49 +480,47 @@ def _fast_feed(p: _BlockParser, text: str) -> None:
     """Drive the _BlockParser handlers via regex tokenization.  Matches
     stdlib html.parser behaviour for the constructs the block parser
     consumes (tags, data with charrefs decoded, raw-text elements)."""
+    finditer = _TOKEN_RE.finditer
+    unescape = _html_mod.unescape
+    handle_data = p.handle_data
+    starttag, endtag = p.handle_starttag, p.handle_endtag
     pos = 0
-    n = len(text)
-    while pos < n:
-        m = _TOKEN_RE.search(text, pos)
-        if m is None:
+    while True:
+        for m in finditer(text, pos):
+            start = m.start()
+            if start > pos:
+                data = text[pos:start]
+                handle_data(unescape(data) if "&" in data else data)
+            pos = m.end()
+            end, tag, attrs, selfclose = m.groups()
+            if tag is None:
+                continue  # comment/doctype/pi: ignored (stdlib parity)
+            tag_l = tag.lower()
+            if end:
+                endtag(tag_l)
+                continue
+            attrs = _parse_attrs(attrs) if tag_l in _ATTR_TAGS else []
+            if selfclose:
+                p.handle_startendtag(tag_l, attrs)
+                continue
+            starttag(tag_l, attrs)
+            if tag_l in _RAW_TEXT:
+                break
+        else:
             data = text[pos:]
             if data:
-                p.handle_data(_html_mod.unescape(data) if "&" in data else data)
-            break
-        if m.start() > pos:
-            data = text[pos:m.start()]
-            p.handle_data(_html_mod.unescape(data) if "&" in data else data)
-        tag = m.group("tag")
-        if tag is None:
-            pos = m.end()  # comment/doctype/pi: ignored (stdlib parity)
-            continue
-        tag_l = tag.lower()
-        if m.group("end"):
-            p.handle_endtag(tag_l)
-            pos = m.end()
-            continue
-        attrs = _parse_attrs(m.group("attrs")) if tag_l in _ATTR_TAGS else []
-        if m.group("selfclose"):
-            p.handle_startendtag(tag_l, attrs)
-            pos = m.end()
-            continue
-        p.handle_starttag(tag_l, attrs)
-        pos = m.end()
-        if tag_l in _RAW_TEXT:
-            # consume raw content up to the real closing tag without
-            # interpreting '<' inside (script/style/title semantics)
-            em = _RAW_END[tag_l].search(text, pos)
-            if em is None:
-                raw = text[pos:]
-                if raw:
-                    p.handle_data(raw)
-                p.handle_endtag(tag_l)
-                break
-            raw = text[pos:em.start()]
-            if raw:
-                p.handle_data(raw)
-            p.handle_endtag(tag_l)
-            pos = em.end()
+                handle_data(unescape(data) if "&" in data else data)
+            return
+        # raw-text element: consume its content up to the real closing
+        # tag without interpreting '<' inside, then resume the scan
+        em = _RAW_END[tag_l].search(text, pos)
+        raw = text[pos:em.start() if em else len(text)]
+        if raw:
+            handle_data(raw)
+        endtag(tag_l)
+        if em is None:
+            return
+        pos = em.end()
 
 
 def parse_html(raw: bytes, engine: str = "fast") -> ParseResult:

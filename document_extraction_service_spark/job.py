@@ -30,7 +30,8 @@ Scale design (north_rule requirements, mapped):
     .observe() was measured 2x slower on the write stage and removed),
     collected once as Arrow and written back as a single-task
     LocalTableScan.  The returned dict carries plan_ms, write_ms
-    (wall_ms = plan + write) and lineage_ms.  Without --resume or
+    (wall_ms = plan + write), lineage_ms and total_ms (plan + write +
+    lineage, the whole call's cost).  Without --resume or
     --wet a run launches only the write job, the lineage aggregation
     and the lineage write: bucket dirs are listed on the driver
     (session.py), never by a listing job.
@@ -256,7 +257,7 @@ def run_job(
     )
     writer.partitionBy("bucket").parquet(output_path)
     t_written = time.time()
-    wall_ms = int((time.time() - t0) * 1000)
+    wall_ms = int((t_written - t0) * 1000)
 
     # per-bucket lineage from the committed output (column-pruned scan:
     # reads only bucket + input_fp + status.ok, never the extraction
@@ -320,7 +321,8 @@ def run_job(
     spark.createDataFrame(lineage_tbl, lineage.schema).coalesce(1).write.mode(
         "append"
     ).parquet(lineage_path)
-    lineage_ms = int((time.time() - t_written) * 1000)
+    t_done = time.time()
+    lineage_ms = int((t_done - t_written) * 1000)
 
     totals = {c: pc.sum(lineage_tbl[c]).as_py() or 0
               for c in ("n_ok", "n_failed", "n_truncated", "n_fallback")}
@@ -336,6 +338,7 @@ def run_job(
         "plan_ms": int((t_plan - t0) * 1000),
         "write_ms": int((t_written - t_plan) * 1000),
         "lineage_ms": lineage_ms,
+        "total_ms": int((t_done - t0) * 1000),
         "docs_per_sec": n_rows / max(wall_ms / 1000.0, 1e-9),
         "skipped_buckets": sorted(skip),
     }
@@ -369,6 +372,9 @@ def main(argv: list[str] | None = None) -> None:
             wet_path=args.wet,
         )
         print(metrics)
+        print(f"{metrics['n_rows']} docs: wall {metrics['wall_ms']} ms"
+              f" (plan + write), total {metrics['total_ms']} ms"
+              f" (with lineage {metrics['lineage_ms']} ms)")
     finally:
         spark.stop()
 

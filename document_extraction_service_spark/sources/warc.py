@@ -262,8 +262,19 @@ def _list_warc_paths(spark: SparkSession, path: str) -> DataFrame:
     neither reads file bytes nor applies its 2 GB/file cap — the scan
     is metadata-only, while partition packing (weighted by file size)
     still gives one task per ~1 GB crawl file.  Asserted in
-    tests/test_warc_source.py::test_warc_listing_scan_prunes_content."""
-    return spark.read.format("binaryFile").load(path).select("path")
+    tests/test_warc_source.py::test_warc_listing_scan_prunes_content.
+
+    A glob is expanded on the driver with Hadoop's globStatus (the glob
+    syntax Spark itself applies) and the matched paths are loaded: a
+    glob handed to the reader makes FileStreamSink.hasMetadata log a
+    FileNotFoundException stack trace at WARN on every read.  A glob
+    matching nothing is loaded as given, so it fails as before."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    matched = fs.globStatus(hpath)
+    paths = [st.getPath().toString() for st in matched] if matched else [path]
+    return spark.read.format("binaryFile").load(paths).select("path")
 
 
 class _GzipStream:

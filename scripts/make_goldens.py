@@ -7,6 +7,7 @@ the review surface.  Pinned ids: first N of each family (FIXTURES.md
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -20,6 +21,10 @@ GOLDEN_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file
 PER_FAMILY = {"article": 10, "boilerplate": 8, "tabular": 8, "figure": 8,
               "metadata": 8, "edge": 8, "adversarial": 10}
 SCAN_LIMIT = 3000
+# whole-corpus pin: sha256 of every extract_document result over the
+# first CORPUS_PAGES pages of each seed (all 7 families appear in each)
+CORPUS_SEEDS = (7, 42, 1234)
+CORPUS_PAGES = 2000
 
 
 def pinned_ids() -> list[int]:
@@ -54,11 +59,24 @@ def main() -> None:
     write_corpus_invariants()
 
 
+def corpus_digest(seed: int, n: int = CORPUS_PAGES) -> str:
+    """sha256 over the extract_document results of pages 0..n-1 of
+    `seed`, each as sorted-key JSON plus a newline."""
+    h = hashlib.sha256()
+    for i in range(n):
+        row = fx.gen_page(i, seed)
+        res = extract_document(row["html"], row["url"], row["lang"], row["text"])
+        h.update(json.dumps(res, ensure_ascii=False, sort_keys=True).encode("utf-8"))
+        h.update(b"\n")
+    return h.hexdigest()
+
+
 def write_corpus_invariants(n: int = 500) -> None:
     """Pin per-family corpus invariants (the extract_corpus oracle):
     pure-Python replay of the same extract_document the Spark UDF runs,
     over the same pure-(seed,i) corpus — so the pinned VALUES are an
-    engine-independent expectation, not a copy of Spark output."""
+    engine-independent expectation, not a copy of Spark output.  Also
+    pins the whole-corpus digests (corpus_digest per CORPUS_SEEDS)."""
     agg: dict[str, dict] = {}
     for i in range(n):
         row = fx.gen_page(i)
@@ -72,10 +90,20 @@ def write_corpus_invariants(n: int = 500) -> None:
         a["n_images"] += res["status"]["n_images"]
         a["sum_text_len"] += len(res["extraction"]["extracted_text"])
     rows = [agg[k] for k in sorted(agg)]
+    for seed in CORPUS_SEEDS:
+        fams = {fx.family_of(i, seed) for i in range(CORPUS_PAGES)}
+        if fams != set(fx.FAMILIES):
+            raise SystemExit(f"seed {seed}: only families {sorted(fams)}")
+    digests = {
+        "pages": CORPUS_PAGES,
+        "sha256": {str(seed): corpus_digest(seed) for seed in CORPUS_SEEDS},
+    }
     path = os.path.join(GOLDEN_DIR, "corpus_invariants.json")
     with open(path, "w", encoding="utf-8") as f:
-        json.dump(rows, f, indent=1, sort_keys=True)
-    print(f"wrote corpus invariants ({len(rows)} families) to {path}")
+        json.dump({"families": rows, "extract_digest": digests}, f,
+                  indent=1, sort_keys=True)
+    print(f"wrote corpus invariants ({len(rows)} families, "
+          f"{len(CORPUS_SEEDS)} corpus digests) to {path}")
 
 
 if __name__ == "__main__":

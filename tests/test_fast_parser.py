@@ -39,6 +39,13 @@ ADVERSARIAL = [
     b"<meta name=author content=Jane><meta name='author' content='Bob'>",
     b"<script src=x.js>",  # unclosed raw-text element
     b"</\xef\xbf\xbdtd><td\xef\xbf\xbd>bogus tags</td>",
+    # <a> attributes are not parsed by the fast engine (the block parser
+    # never reads them); the tag boundaries must still match stdlib
+    b'<p>before <a href="x>y" title=\'a>b\'>quoted gt</a> after</p>',
+    b"<p>open <a href='unterminated>link</a> text</p><p>next block</p>",
+    b'<p><a href="?a=1&amp;b=2&lt;3" title="&quot;t&quot; &#62;">entity</a> attr</p>',
+    b"<P>upper <A HREF=/x.html CLASS=k>LINK TEXT</A> tail</P>",
+    b"<table><tr><a href='#'><td colspan=3>wrapped cell</td></a></tr></table>",
 ]
 
 

@@ -23,6 +23,8 @@ def test_full_run_counts(spark, dirs):
     m = run_job(spark, f"synthetic:{N}", out, lin, "t-full", n_buckets=BUCKETS)
     assert m["n_rows"] == N
     assert m["n_ok"] == N
+    # total_ms is the whole call: plan + write (wall_ms) plus lineage
+    assert m["total_ms"] >= m["wall_ms"] + m["lineage_ms"] - 1
     df = spark.read.parquet(out)
     assert df.count() == N
     assert df.select("url").distinct().count() == N

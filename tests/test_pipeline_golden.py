@@ -42,3 +42,15 @@ def test_golden(path):
         "extraction": g["extraction"],
         "status": g["status"],
     }
+
+
+def test_corpus_digest():
+    """The whole-corpus pin: every extract_document result over the
+    first 2,000 pages of three seeds (all 7 families), hashed, equals
+    the digest scripts/make_goldens.py recorded."""
+    from scripts.make_goldens import corpus_digest
+
+    pinned = _load(os.path.join(GOLDEN_DIR, "corpus_invariants.json"))["extract_digest"]
+    assert len(pinned["sha256"]) == 3
+    for seed, want in sorted(pinned["sha256"].items()):
+        assert corpus_digest(int(seed), pinned["pages"]) == want, f"seed {seed}"

@@ -270,6 +270,146 @@ def test_fuzzy_budget_is_deterministic():
     assert out1 == _doc(html)["extracted_text"]
 
 
+# --- _merge_fuzzy_groups pinned against the plain pairwise loop ------------
+
+def _merge_fuzzy_groups_oracle(groups):
+    """Reference copy of the plain pairwise fuzzy merge: every candidate
+    pair in (i, j) scan order, a Counter L1 bound per pair, and the same
+    comparison budget.  _merge_fuzzy_groups must match it exactly."""
+    from collections import Counter
+
+    keys = sorted((k for k in groups if k), key=lambda k: (len(k), k))
+    if len(keys) < 2:
+        return
+    parent = {k: k for k in keys}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    cnts = [Counter(k) for k in keys]
+    max_k = (4 * X.FUZZY_KEY_LEN - 1) // 20  # keys <= 2*FUZZY_KEY_LEN chars
+    budget = X.FUZZY_MAX_COMPARISONS
+    for i, a in enumerate(keys):
+        if budget <= 0:
+            break
+        ca = cnts[i]
+        la = len(a)
+        for j in range(i + 1, len(keys)):
+            b = keys[j]
+            if len(b) - la > max_k:
+                break
+            kmax = (la + len(b) - 1) // 20
+            if len(b) - la > kmax:
+                continue
+            cb = cnts[j]
+            d_lb = sum(abs(cnt - cb.get(ch, 0)) for ch, cnt in ca.items())
+            d_lb += sum(cnt for ch, cnt in cb.items() if ch not in ca)
+            if d_lb > kmax:
+                continue
+            budget -= 1
+            if X.fuzzy_close(a, b):
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[rb] = ra
+            if budget <= 0:
+                break
+    for k in keys:
+        r = find(k)
+        if r != k:
+            groups[r].extend(groups.pop(k))
+    for idxs in groups.values():
+        idxs.sort()
+
+
+def _fuzzy_merged(texts):
+    """Group block indices by fuzzy key, merge; return (engine, oracle)."""
+    import copy
+
+    from document_extraction_service_spark.extract.text import _merge_fuzzy_groups
+
+    groups = {}
+    for k, t in enumerate(texts):
+        groups.setdefault(X.fuzzy_key(t), []).append(k)
+    want = copy.deepcopy(groups)
+    _merge_fuzzy_groups_oracle(want)
+    _merge_fuzzy_groups(groups)
+    return groups, want
+
+
+def test_fuzzy_merge_counter_variants():
+    row = "Posted by the editors on the front page with {} comments so far"
+    got, want = _fuzzy_merged([row.format(3), "unrelated", row.format(4)])
+    assert got == want
+    assert sorted(got.values()) == [[0, 2], [1]]
+
+
+def test_fuzzy_merge_numbered_headers_stay_apart():
+    got, want = _fuzzy_merged(["1 Introduction", "4 Introduction"])
+    assert got == want
+    assert sorted(got.values()) == [[0], [1]]
+
+
+def test_fuzzy_merge_non_ascii_keys():
+    de = "Größenänderung der Einstellungen für alle Benutzer mit {} Kommentaren"
+    cjk = "东京大学的研究人员今天发表了一篇关于深度学习模型压缩方法的新论文共有{}条评论"
+    texts = [de.format(3), de.format(4), cjk.format(3), cjk.format(4),
+             cjk.format(3).replace("东", "伜")]  # U+4E1C / U+4F1C: same low byte
+    got, want = _fuzzy_merged(texts)
+    assert got == want
+    assert sorted(got.values()) == [[0, 1], [2, 3, 4]]
+
+
+def test_fuzzy_merge_same_low_byte_keys_spend_no_budget():
+    """Keys equal modulo 256 per code point pass the coarse bound but not
+    the exact one: they must not spend the comparison budget, so a true
+    near-duplicate pair scanned after them still merges."""
+    # 60 keys, one 256-code-point block each, with the same low bytes:
+    # 1,770 same-length pairs at coarse L1 0 and exact L1 96
+    far = ["".join(chr(0x4E00 + 256 * r + c * 5) for c in range(48))
+           for r in range(60)]
+    near = "z" * 50 + "{}comments"
+    got, want = _fuzzy_merged(far + [near.format(3), near.format(4)])
+    assert got == want
+    assert got[X.fuzzy_key(near.format(3))] == [60, 61]
+
+
+def test_fuzzy_merge_budget_cuts_like_the_oracle():
+    """An adversarial page with more than FUZZY_MAX_COMPARISONS pairs
+    inside the bound (anagram keys: L1 0, edit distance far above kmax)
+    must cut exactly the pairs the oracle cuts: a near-duplicate pair
+    scanned right after them merges as the budget's last comparison and
+    stays apart one comparison later."""
+    import random
+
+    rnd = random.Random(11)
+
+    def anagrams(letters, n):
+        out = []
+        for _ in range(n):
+            chars = list(letters)
+            rnd.shuffle(chars)
+            out.append("".join(chars))
+        return out
+
+    letters_a = "abcdefghijklmnopqrstuvwxy" * 2
+    letters_b = "0123456789" * 5
+    letters_c = "klmnopqrstuvwxyz" * 3 + "kl"
+    near = "ÿ" * 48 + "{}x"  # same length, sorts after every anagram
+    assert X.FUZZY_MAX_COMPARISONS == 1_000
+    # 990 + 6 + 3 = 999 pairs first: the near pair is the 1,000th;
+    # 990 + 10 = 1,000 pairs first: it is the 1,001st
+    for n_b, n_c, merged in ((4, 3, True), (5, 0, False)):
+        texts = (anagrams(letters_a, 45) + anagrams(letters_b, n_b)
+                 + anagrams(letters_c, n_c))
+        texts += [near.format(1), near.format(2)]
+        got, want = _fuzzy_merged(texts)
+        assert got == want
+        assert (len(got[X.fuzzy_key(near.format(1))]) == 2) == merged
+
+
 def test_text_fallback_on_null_html():
     from document_extraction_service_spark.extract.pipeline import extract_document
     r = extract_document(None, "http://x/n", "de", "Line one here.\n\n  Line   two.  ")

@@ -4,10 +4,13 @@ corrupt record must never kill a file's task."""
 
 import datetime
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from document_extraction_service_spark import fixtures
 from document_extraction_service_spark.sources.warc import (
+    _list_warc_paths,
     _parse_warc_bytes,
     read_warc,
     write_warc,
@@ -295,3 +298,26 @@ def test_warc_skips_non_response_and_malformed():
     )
     got = list(_parse_warc_bytes(buf))
     assert [(u, h) for u, _, h in got] == [("https://x.test/good", good)]
+
+
+def test_listing_expands_globs_on_the_driver(spark, tmp_path):
+    """_list_warc_paths expands a glob with Hadoop globStatus and lists
+    exactly the files binaryFile lists for the glob itself (files,
+    directories matched by the glob, brace sets); a glob matching
+    nothing still fails."""
+    for d in ("a", "b"):
+        (tmp_path / d).mkdir()
+        for i in range(2):
+            write_warc(str(tmp_path / d / f"c{i}.warc"), _fixture_records()[:1])
+    (tmp_path / "a" / "notes.txt").write_text("not a warc")
+
+    def listed(df):
+        return sorted(r.path for r in df.collect())
+
+    for spec in (f"{tmp_path}/a/*.warc", f"{tmp_path}/*/c1.warc",
+                 f"{tmp_path}/{{a,b}}", f"{tmp_path}/a/c0.warc"):
+        want = listed(spark.read.format("binaryFile").load(spec).select("path"))
+        assert want
+        assert listed(_list_warc_paths(spark, spec)) == want, spec
+    with pytest.raises(AnalysisException):
+        _list_warc_paths(spark, f"{tmp_path}/missing/*.warc")
