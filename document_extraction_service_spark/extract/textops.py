@@ -237,11 +237,8 @@ _ABBREVS = frozenset(
 # a run of [.!?] before a capitalized / numbered next word.  Spelled
 # [.!?][.!?]* rather than [.!?]+ (same matches): a pattern that opens
 # with a plain character class lets the regex engine skip ahead to the
-# next candidate character in C.  Text without '!' and '?' (most blocks)
-# uses the '.'-only twin, which opens with a literal and scans faster
-# still.
+# next candidate character in C.
 _SPLIT_CAND = re.compile(r"[.!?][.!?]*(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])")
-_SPLIT_CAND_DOT = re.compile(r"\.\.*(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])")
 
 
 def split_sentences(s: str) -> list[str]:
@@ -255,9 +252,8 @@ def split_sentences(s: str) -> list[str]:
     # block text is whitespace-normalized upstream (single spaces), so
     # the token before a position starts after the last space before it
     rfind = s.rfind
-    cand = _SPLIT_CAND if "!" in s or "?" in s else _SPLIT_CAND_DOT
     parts, lo = [], 0
-    for m in cand.finditer(s):
+    for m in _SPLIT_CAND.finditer(s):
         start = m.start()
         tok_lo = rfind(" ", 0, start) + 1
         bare = s[tok_lo:start].lower().rstrip(".").lstrip("([\"'")

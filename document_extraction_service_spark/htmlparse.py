@@ -276,8 +276,8 @@ class _BlockParser(HTMLParser):
                 # (reference requires a description block, image_api.py:88-101)
                 self.figures.append(FigureCap(anchor=len(self.blocks), src=src, caption=""))
             return
-        if tag not in _BLOCK_TAGS:
-            return  # void element other than <br>
+        if tag in _VOID_TAGS and tag != "br":
+            return  # void element (<hr> too): no block, no depth change
 
         if self._tstack:
             # block boundary inside a table cell: space-join
@@ -358,8 +358,8 @@ class _BlockParser(HTMLParser):
         if tag == "title":
             self._in_title = False
             return
-        if tag not in _BLOCK_TAGS or tag == "br":
-            return  # void element
+        if tag in _VOID_TAGS:
+            return  # void element (</br>, </hr>): ignored
         if self._depth:
             self._depth -= 1
         if not self._tstack:

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import datetime
 import itertools
+import re
 from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
@@ -256,6 +257,10 @@ def write_wet(df: DataFrame, path: str) -> None:
     )
 
 
+# Hadoop glob metacharacters (the set Spark's isGlobPath tests for)
+_GLOB_CHARS = re.compile(r"[\\\[\]{}*?]")
+
+
 def _list_warc_paths(spark: SparkSession, path: str) -> DataFrame:
     """Distributed file LISTING via binaryFile pruned to `path`: the
     content column is never in the required schema, so the format
@@ -267,13 +272,16 @@ def _list_warc_paths(spark: SparkSession, path: str) -> DataFrame:
     A glob is expanded on the driver with Hadoop's globStatus (the glob
     syntax Spark itself applies) and the matched paths are loaded: a
     glob handed to the reader makes FileStreamSink.hasMetadata log a
-    FileNotFoundException stack trace at WARN on every read.  A glob
+    FileNotFoundException stack trace at WARN on every read.  The
+    reader globs every path it loads again, so glob characters in a
+    matched name (`crawl[1].warc`) are backslash-escaped first.  A glob
     matching nothing is loaded as given, so it fails as before."""
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     matched = fs.globStatus(hpath)
-    paths = [st.getPath().toString() for st in matched] if matched else [path]
+    paths = [_GLOB_CHARS.sub(r"\\\g<0>", st.getPath().toString())
+             for st in matched or ()] or [path]
     return spark.read.format("binaryFile").load(paths).select("path")
 
 

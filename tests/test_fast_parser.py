@@ -53,3 +53,36 @@ ADVERSARIAL = [
 def test_adversarial_equivalence(idx):
     payload = ADVERSARIAL[idx]
     assert parse_html(payload, "fast") == parse_html(payload, "stdlib")
+
+
+# <hr> is both a block tag and a void element: it neither splits the
+# block nor opens a depth level, and </hr> (like </br>) is ignored.
+# Expected (text, tag, heading, depth, in_chrome) per block, and table
+# rows, as recorded from the parser before its inline-tag fast path —
+# pinned here rather than against the stdlib engine, which shares
+# _BlockParser and would agree with any handler change.
+VOID_PINNED = [
+    (b"<p>foo<hr>bar</p>", [("foobar", "p", 0, 0, False)], []),
+    (b"<p>foo<hr/>bar</p>", [("foobar", "p", 0, 0, False)], []),
+    (b"<p>foo</hr>bar</p>", [("foobar", "p", 0, 0, False)], []),
+    (b"<div>a<hr>b</div><p>c</p>",
+     [("ab", "div", 0, 0, False), ("c", "p", 0, 0, False)], []),
+    (b"<table><tr><td>x<hr>y</td></tr></table><p>after text</p>",
+     [("after text", "p", 0, 0, False)], [[[("xy", False, 1, 1)]]]),
+    (b"<h2>Head<hr>ing</h2><p>body</p>",
+     [("Heading", "h2", 2, 0, False), ("body", "p", 0, 0, False)], []),
+    (b"<nav>menu<hr>more</nav><p>main</p>",
+     [("menumore", "nav", 0, 0, True), ("main", "p", 0, 0, False)], []),
+    (b"<p>br<br>split</p><p>x</br>y</p>",
+     [("br", "p", 0, 1, False), ("split", "p", 0, 0, False),
+      ("xy", "p", 0, 0, False)], []),
+]
+
+
+@pytest.mark.parametrize("engine", ["fast", "stdlib"])
+@pytest.mark.parametrize("idx", range(len(VOID_PINNED)))
+def test_void_block_tags_pinned(idx, engine):
+    payload, blocks, tables = VOID_PINNED[idx]
+    r = parse_html(payload, engine)
+    assert [(b.text, b.tag, b.heading, b.depth, b.in_chrome) for b in r.blocks] == blocks
+    assert [t.rows for t in r.tables] == tables

@@ -88,6 +88,50 @@ class TestFuzzyKey:
         assert m == ["10.1234/abc.def-5"]
 
 
+# --- boilerplate gate == plain pattern scan -----------------------------------
+
+def _boiler_scan(text):
+    return any(p.search(text) for p, _, _ in X.BOILER_PATTERNS)
+
+
+BOILER_PROBES = [
+    "We use COOKIES here", "Cookie", "ALL RIGHTS RESERVED", "Share On twitter",
+    "LOG IN", "Login", "SIGN UP now", "Subscribe", "PRIVACY", "Terms of use",
+    "IMPRINT", "© 2024 Foo", "(C) 2024 Foo", "(c) 20x4", "Mail: A.B+C@EXAMPLE.ORG",
+    "user@host", "HTTPS://EXAMPLE.COM/X", "http://x y", "Please Cite this",
+    "plain prose with no chrome words at all",
+    # non-ASCII case folds re.I accepts: Kelvin sign, long s, dotted I
+    "Coo\u212aie notice", "\u017fhare on", "Pr\u0130vacy", "\u017fign up",
+    "\u017eure privacy", "L\u0130vre de \u017fu\u017fcribe",
+    "ALL RIGHT\u017f RE\u017fERVED", "pl\u0117ase cite", "d\u00e4t\u00e4@b\u00fccher.de",
+    "\u00a9 Verlag", "\u2163 share on", "\u0131mprint",
+]
+
+
+def test_is_boilerplate_equals_pattern_scan():
+    """is_boilerplate's literal pre-gate may only skip scans that cannot
+    match: it must agree with a plain scan of every pattern on every
+    block of the fixture corpus (all families), on their upper-,
+    swapped-case and case-folded variants, and on handmade probes."""
+    from document_extraction_service_spark import fixtures as fx
+    from document_extraction_service_spark.htmlparse import parse_html
+
+    texts, families = list(BOILER_PROBES), set()
+    for i in range(400):
+        page = fx.gen_page(i)
+        families.add(fx.family_of(i))
+        texts.extend(b.text for b in parse_html(page["html"]).blocks if b.n_chars <= 300)
+    assert families == set(fx.FAMILIES)
+    hits = 0
+    for t in texts:
+        for v in (t, t.upper(), t.swapcase(), t.replace("s", "\u017f"),
+                  t.replace("k", "\u212a"), t.replace("i", "\u0130")):
+            want = _boiler_scan(v)
+            assert X.is_boilerplate(v) == want, v
+            hits += want
+    assert hits > 100
+
+
 # --- non-markup header detection (X6, reference text_api.py:285-356) --------
 
 def _doc(html: bytes):

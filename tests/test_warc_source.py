@@ -303,13 +303,16 @@ def test_warc_skips_non_response_and_malformed():
 def test_listing_expands_globs_on_the_driver(spark, tmp_path):
     """_list_warc_paths expands a glob with Hadoop globStatus and lists
     exactly the files binaryFile lists for the glob itself (files,
-    directories matched by the glob, brace sets); a glob matching
-    nothing still fails."""
+    directories matched by the glob, brace sets, names holding glob
+    characters); a glob matching nothing still fails."""
     for d in ("a", "b"):
         (tmp_path / d).mkdir()
         for i in range(2):
             write_warc(str(tmp_path / d / f"c{i}.warc"), _fixture_records()[:1])
     (tmp_path / "a" / "notes.txt").write_text("not a warc")
+    # glob characters in matched names: the reader must not glob them again
+    for name in ("c[1].warc", "c{x}.warc"):
+        write_warc(str(tmp_path / "a" / name), _fixture_records()[:1])
 
     def listed(df):
         return sorted(r.path for r in df.collect())
@@ -318,6 +321,8 @@ def test_listing_expands_globs_on_the_driver(spark, tmp_path):
                  f"{tmp_path}/{{a,b}}", f"{tmp_path}/a/c0.warc"):
         want = listed(spark.read.format("binaryFile").load(spec).select("path"))
         assert want
+        if spec.endswith("*.warc"):
+            assert any("c[1].warc" in p for p in want)
         assert listed(_list_warc_paths(spark, spec)) == want, spec
     with pytest.raises(AnalysisException):
         _list_warc_paths(spark, f"{tmp_path}/missing/*.warc")
