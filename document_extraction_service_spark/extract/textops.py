@@ -119,7 +119,6 @@ def is_common_header(text: str) -> bool:
         return False
     return header_norm(text) in COMMON_HEADERS
 
-_WORD_RE = re.compile(r"\S+")
 _NONWORD_RE = re.compile(r"[\W_]+", re.UNICODE)
 
 

@@ -27,8 +27,12 @@ MAX_BLOCKS = 5_000
 MAX_TABLES = 64
 MAX_FIGURES = 256
 MAX_CELLS_PER_TABLE = 4_096
+# A start/end tag with no closing '>' is text, found by a scan to the
+# end of the page from its '<'.  After failed scans worth this many
+# page lengths the rest of the page is text, so tag soup that fails
+# at every '<' stays linear.
+MAX_FAILED_TAG_SCANS = 16
 
-_WS_RE = re.compile(r"[ \t\r\n\f\v]+")
 _META_CHARSET_RE = re.compile(
     rb"""<meta[^>]+charset\s*=\s*["']?\s*([a-zA-Z0-9_\-]+)""", re.I
 )
@@ -440,8 +444,15 @@ _TOKEN_RE = re.compile(
       | \?[^>]*>?                        # processing instruction
       | /(?![a-zA-Z])[^>]*>?             # bogus end tag -> bogus comment (stdlib parity)
       | (?P<end>/)?(?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*)  # tolerant tag name (stdlib charset)
-        (?P<attrs>(?:[^>"']|"[^"]*"|'[^']*')*)
+        # a quote opens a value only right after '=' (elsewhere it is
+        # part of a name, as in stdlib); possessive, so a tag with no
+        # closing '>' fails without backtracking
+        (?P<attrs>(?:[^>=]+|=+\s*(?:"[^"]*"|'[^']*'|(?!["'])[^>\s]*))*+)
         (?P<selfclose>/)?>
+      # unterminated tag: text through the next '>' (stdlib's recovery);
+      # with no '>' left the rest is text in one match, not one failed
+      # scan per later '<'
+      | (?P<stray>/?[a-zA-Z][^>]*>?)
     )""",
     re.S | re.X,
 )
@@ -455,7 +466,6 @@ _ATTR_TAGS = frozenset("meta img html td th".split())
 # stdlib parses textarea/title content as markup.
 _RAW_TEXT = {"script", "style"}
 _RAW_END = {t: re.compile(rf"</{t}\b[^>]*>", re.I) for t in _RAW_TEXT}
-_AMP_RE = re.compile(r"&")
 
 
 def _parse_attrs(s: str) -> list:
@@ -484,15 +494,25 @@ def _fast_feed(p: _BlockParser, text: str) -> None:
     unescape = _html_mod.unescape
     handle_data = p.handle_data
     starttag, endtag = p.handle_starttag, p.handle_endtag
+    n = len(text)
+    scan_budget = MAX_FAILED_TAG_SCANS * n
     pos = 0
     while True:
         for m in finditer(text, pos):
+            end, tag, attrs, selfclose, stray = m.groups()
+            if stray is not None:
+                scan_budget -= n - m.start()
+                if scan_budget >= 0:
+                    continue  # stays in the surrounding text
+                data = text[pos:]
+                handle_data(unescape(data) if "&" in data else data)
+                p.truncated = True
+                return
             start = m.start()
             if start > pos:
                 data = text[pos:start]
                 handle_data(unescape(data) if "&" in data else data)
             pos = m.end()
-            end, tag, attrs, selfclose = m.groups()
             if tag is None:
                 continue  # comment/doctype/pi: ignored (stdlib parity)
             tag_l = tag.lower()

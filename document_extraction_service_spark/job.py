@@ -70,7 +70,9 @@ DEFAULT_WRITE_OPTS: dict[str, str] = {
 }
 
 
-def input_fingerprint(spec: str, n_buckets: int = DEFAULT_BUCKETS) -> str:
+def input_fingerprint(
+    spec: str, n_buckets: int = DEFAULT_BUCKETS, spark: SparkSession | None = None
+) -> str:
     """Stable identity of the (input snapshot, bucketing) pair (SURVEY
     §4.4: Iceberg snapshot id; parquet fallback: recursive file
     listing).  n_buckets is folded in because bucket ids are only
@@ -78,17 +80,21 @@ def input_fingerprint(spec: str, n_buckets: int = DEFAULT_BUCKETS) -> str:
     into a B=64 run would silently skip wrong buckets.  Data files are
     hashed by relative path + size + mtime: regenerating input in
     place changes the fingerprint even at identical sizes (fails to
-    the safe side: work is redone, never wrongly skipped)."""
+    the safe side: work is redone, never wrongly skipped).  Reader
+    specs (warc:/jsonl:/wet:/wds:) hash the files the readers load, as
+    sources.warc._list_warc_paths lists them (Hadoop glob); only they
+    need `spark`."""
     h = hashlib.md5(f"{spec}|B={n_buckets}".encode())
     if spec.startswith("synthetic:"):
         return h.hexdigest()
     if spec.startswith(("warc:", "jsonl:", "wet:", "wds:")):
-        # fingerprint the files the glob resolves to (sorted -> stable)
-        import glob as _glob
+        from .sources.warc import _list_warc_paths
 
-        for p in sorted(_glob.glob(spec.split(":", 1)[1])):
-            st = os.stat(p)
-            h.update(f"{p}|{st.st_size}|{st.st_mtime_ns}".encode())
+        files = _list_warc_paths(
+            spark, spec.split(":", 1)[1], ("path", "length", "modificationTime")
+        ).collect()
+        for f in sorted(files):
+            h.update(f"{f.path}|{f.length}|{f.modificationTime}".encode())
         return h.hexdigest()
     if os.path.isdir(spec):
         for root, dirs, files in os.walk(spec):
@@ -197,7 +203,7 @@ def run_job(
 ) -> dict:
     """Returns job metrics dict. Idempotent per (input, bucket)."""
     t0 = time.time()
-    fp = input_fingerprint(input_spec, n_buckets)
+    fp = input_fingerprint(input_spec, n_buckets, spark)
     bucketed = is_bucketed_input(input_spec)
     pages = read_pages(spark, input_spec)
     if not bucketed:

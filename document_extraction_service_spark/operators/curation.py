@@ -22,12 +22,19 @@ from .tables import read_table
 from .textstats import (
     LANG_MARKERS,
     TOKEN_RE,
-    TOKEN_RE_SPARK,
     _dup_frac,
     _marker_hits,
     _max_run,
+    _sql_hits,
     _sql_ngrams,
     _word_ngrams,
+    alpha_count,
+    doc_fraction,
+    lang_guess,
+    quality_score,
+    text_hash,
+    token_count,
+    word_count,
 )
 
 QUALITY_MIN = 0.5   # floored score threshold (same floored value both engines)
@@ -35,7 +42,7 @@ QUALITY_MIN = 0.5   # floored score threshold (same floored value both engines)
 
 def curate_corpus(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
+    fp = text_hash()
     # canonical row per fp in ONE combine-enabled shuffle (r7): struct
     # comparison is lexicographic and doc_id leads, so min(struct)
     # picks the min-doc_id row — the partial aggregation reduces each
@@ -50,31 +57,15 @@ def curate_corpus(spark, sf_dir):
     )
 
     hits = {lg: _marker_hits(lg).alias(f"{lg}_hits") for lg in LANG_MARKERS}
-    n_words = F.size(F.split(F.trim(F.col("text")), " "))
-    n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
     scored = kept.select(
-        "doc_id", "source", n_words.alias("n_words"),
-        n_alpha.alias("n_alpha"),
-        F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
-        .alias("n_tokens"),
+        "doc_id", "source", word_count().alias("n_words"),
+        alpha_count().alias("n_alpha"), token_count().alias("n_tokens"),
         *hits.values(),
     )
-    best = F.greatest(*[F.col(f"{lg}_hits") for lg in LANG_MARKERS])
-    pred = (
-        F.when(best == 0, F.lit("unknown"))
-        .when(F.col("en_hits") == best, F.lit("en"))
-        .when(F.col("de_hits") == best, F.lit("de"))
-        .when(F.col("fr_hits") == best, F.lit("fr"))
-        .otherwise(F.lit("es"))
-    )
-    q = (
-        F.least(F.col("n_words") / F.lit(100.0), F.lit(1.0)) * 0.4
-        + F.least(F.col("en_hits") / F.col("n_words") * 5.0, F.lit(1.0)) * 0.4
-        + F.least((F.col("n_alpha") / F.col("n_words")) / F.lit(8.0), F.lit(1.0)) * 0.2
-    )
+    q = quality_score(F.col("n_words"), F.col("en_hits"), F.col("n_alpha"))
     per_doc = scored.select(
         "doc_id", "source", "n_tokens",
-        pred.alias("pred_lang"),
+        lang_guess().alias("pred_lang"),
         (F.floor(q * 1_000_000) / 1_000_000).alias("quality"),
     ).filter((F.col("pred_lang") == "en") & (F.col("quality") >= QUALITY_MIN))
 
@@ -91,11 +82,6 @@ def curate_corpus(spark, sf_dir):
     )
 
 
-_EN = r"\b(" + "|".join(LANG_MARKERS["en"]) + r")\b"
-_DE = r"\b(" + "|".join(LANG_MARKERS["de"]) + r")\b"
-_FR = r"\b(" + "|".join(LANG_MARKERS["fr"]) + r")\b"
-_ES = r"\b(" + "|".join(LANG_MARKERS["es"]) + r")\b"
-
 SQL_CURATE = f"""
 WITH f AS (SELECT *, md5(lower(trim(text))) AS fp FROM documents),
 c AS (SELECT fp, MIN(doc_id) AS canonical_id FROM f GROUP BY fp),
@@ -104,10 +90,10 @@ s AS (SELECT doc_id, source,
              len(string_split(trim(text), ' ')) AS n_words,
              length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
              len(regexp_extract_all(text, '{TOKEN_RE}')) AS n_tokens,
-             len(regexp_extract_all(lower(text), '{_EN}')) AS en_hits,
-             len(regexp_extract_all(lower(text), '{_DE}')) AS de_hits,
-             len(regexp_extract_all(lower(text), '{_FR}')) AS fr_hits,
-             len(regexp_extract_all(lower(text), '{_ES}')) AS es_hits
+             {_sql_hits('en')} AS en_hits,
+             {_sql_hits('de')} AS de_hits,
+             {_sql_hits('fr')} AS fr_hits,
+             {_sql_hits('es')} AS es_hits
       FROM kept),
 p AS (SELECT doc_id, source, n_tokens,
              CASE WHEN greatest(en_hits, de_hits, fr_hits, es_hits) = 0 THEN 'unknown'
@@ -135,6 +121,14 @@ SAMPLE_RATES = {"en": 0.5, "de": 0.5, "fr": 0.25, "es": 0.25}
 SAMPLE_DEFAULT_RATE = 0.1
 
 
+def _by_lang(values: dict, default):
+    """Column: values[lang] for the `lang` column, else `default`."""
+    out = default
+    for lg, v in sorted(values.items()):
+        out = F.when(F.col("lang") == lg, F.lit(v)).otherwise(out)
+    return out
+
+
 def curate_sample_stratified(spark, sf_dir):
     """Deterministic stratified sampling by language — the step that
     turns a curated pool into a training MIX.  The sampling decision is
@@ -145,18 +139,11 @@ def curate_sample_stratified(spark, sf_dir):
     xxhash64 for speed; md5 keeps the oracle exact in SQL — same
     engine-independent-hash reasoning as text_fingerprint.)"""
     d = read_table(spark, sf_dir, "documents")
-    frac = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") / F.lit(4294967296.0)
-    )
-    rate = F.lit(SAMPLE_DEFAULT_RATE)
-    for lg, r in sorted(SAMPLE_RATES.items()):
-        rate = F.when(F.col("lang") == lg, F.lit(r)).otherwise(rate)
     return (
         d.select(
             "doc_id", "lang",
-            frac.alias("_frac"),
-            rate.alias("_rate"),
+            doc_fraction().alias("_frac"),
+            _by_lang(SAMPLE_RATES, F.lit(SAMPLE_DEFAULT_RATE)).alias("_rate"),
         )
         .filter(F.col("_frac") < F.col("_rate"))
         .select(
@@ -229,11 +216,7 @@ def curate_quality_gate(spark, sf_dir):
     )
 
 
-_GATE_HITS = " + ".join(
-    "len(regexp_extract_all(lower(text), '\\b("
-    + "|".join(LANG_MARKERS[lg]) + r")\b'))"
-    for lg in LANG_MARKERS
-)
+_GATE_HITS = " + ".join(_sql_hits(lg) for lg in LANG_MARKERS)
 SQL_QUALITY_GATE = f"""
 WITH g AS (
   SELECT doc_id, string_split(text, ' ') AS t,
@@ -368,29 +351,20 @@ N_QUALITY_BINS = 32
 def curate_token_budget(spark, sf_dir):
     """(doc_id, qbin, n_tokens, kept): kept docs total ~
     TOKEN_BUDGET_FRACTION of corpus tokens, chosen best-quality-first
-    (same quality formula as curate_corpus).  Deterministic: the
-    boundary bin samples by md5(doc_id) fraction (the
-    curate_sample_stratified pattern), so reruns select the same
-    docs."""
+    (textstats.quality_score, as in curate_corpus).  Deterministic: the
+    boundary bin samples by doc_fraction (the curate_sample_stratified
+    pattern), so reruns select the same docs."""
     from pyspark.sql import Window
 
     d = read_table(spark, sf_dir, "documents")
-    n_words = F.size(F.split(F.trim(F.col("text")), " "))
-    n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
-    en_hits = _marker_hits("en")
-    q = (
-        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.4
-        + F.least(en_hits / n_words * 5.0, F.lit(1.0)) * 0.4
-        + F.least((n_alpha / n_words) / F.lit(8.0), F.lit(1.0)) * 0.2
-    )
+    q = quality_score(word_count(), _marker_hits("en"), alpha_count())
     # (doc_id, n_tokens, qbin) feeds BOTH the bin aggregation and the
     # final rule join: localCheckpoint (lazy) computes the regex-heavy
     # token count + quality map once instead of once per consumer
     # (r7 — the line_dedup shared-build pattern; 3 small ints per row)
     per_doc = d.select(
         "doc_id",
-        F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
-        .alias("n_tokens"),
+        token_count().alias("n_tokens"),
         F.least(
             F.floor(q * N_QUALITY_BINS).cast("int"), F.lit(N_QUALITY_BINS - 1)
         ).alias("qbin"),
@@ -414,15 +388,11 @@ def curate_token_budget(spark, sf_dir):
         .otherwise((F.col("budget") - F.col("taken")) / F.col("bt"))
         .alias("keep_frac"),
     )
-    frac = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") / F.lit(4294967296.0)
-    )
     return (
         per_doc.join(F.broadcast(rule), "qbin")
         .select(
             "doc_id", "qbin", "n_tokens",
-            (frac < F.col("keep_frac")).alias("kept"),
+            (doc_fraction() < F.col("keep_frac")).alias("kept"),
         )
     )
 
@@ -432,7 +402,7 @@ WITH s AS (SELECT doc_id,
                   len(regexp_extract_all(text, '{TOKEN_RE}')) AS n_tokens,
                   len(string_split(trim(text), ' ')) AS n_words,
                   length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-                  len(regexp_extract_all(lower(text), '{_EN}')) AS en_hits
+                  {_sql_hits('en')} AS en_hits
            FROM documents),
 p AS (SELECT doc_id, n_tokens,
              LEAST(CAST(FLOOR((least(n_words / 100.0, 1.0) * 0.4
@@ -488,18 +458,11 @@ def curate_domain_mixture(spark, sf_dir):
     arithmetic both engines); the keep decision is a pure function of
     doc_id."""
     d = read_table(spark, sf_dir, "documents")
-    per_doc = d.select(
-        "doc_id", "lang",
-        F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
-        .alias("n_tokens"),
-    )
-    tgt = F.lit(None).cast("double")
-    for lg, t in sorted(MIXTURE_TARGET.items()):
-        tgt = F.when(F.col("lang") == lg, F.lit(t)).otherwise(tgt)
+    per_doc = d.select("doc_id", "lang", token_count().alias("n_tokens"))
     avail = (
         per_doc.groupBy("lang")
         .agg(F.sum("n_tokens").alias("avail"))
-        .withColumn("tgt", tgt)
+        .withColumn("tgt", _by_lang(MIXTURE_TARGET, F.lit(None).cast("double")))
         .filter(F.col("tgt").isNotNull())
     )
     budget = avail.agg(F.min(F.col("avail") / F.col("tgt")).alias("t_max"))
@@ -513,16 +476,12 @@ def curate_domain_mixture(spark, sf_dir):
             ) / 1_000_000).alias("rate"),
         )
     )
-    frac = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") / F.lit(4294967296.0)
-    )
     return (
         per_doc.join(F.broadcast(rates), "lang", "left")
         .select(
             "doc_id", "lang", "n_tokens",
             F.coalesce(F.col("rate"), F.lit(0.0)).alias("rate"),
-            (frac < F.coalesce(F.col("rate"), F.lit(0.0))).alias("kept"),
+            (doc_fraction() < F.coalesce(F.col("rate"), F.lit(0.0))).alias("kept"),
         )
     )
 
@@ -583,8 +542,7 @@ def curate_pack_sequences(spark, sf_dir):
     per_doc = d.select(
         "doc_id",
         (F.col("doc_id") % PACK_SHARDS).alias("shard"),
-        F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
-        .alias("n_tokens"),
+        token_count().alias("n_tokens"),
     )
     w = Window.partitionBy("shard").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, -1
@@ -654,24 +612,17 @@ def curate_epoch_plan(spark, sf_dir):
     constant-size.  Integer arithmetic except the floored epochs
     ratio (identical double division both engines)."""
     d = read_table(spark, sf_dir, "documents")
-    per_doc = d.select(
-        "lang",
-        F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
-        .alias("n_tokens"),
-    )
+    per_doc = d.select("lang", token_count().alias("n_tokens"))
     total = per_doc.agg(
         F.expr(
             f"CAST(({EPOCH_BUDGET_NUM} * SUM(n_tokens))"
             f" DIV {EPOCH_BUDGET_DEN} AS LONG)"
         ).alias("budget")
     )
-    tgt = F.lit(None).cast("double")
-    for lg, t in sorted(MIXTURE_TARGET.items()):
-        tgt = F.when(F.col("lang") == lg, F.lit(t)).otherwise(tgt)
     avail = (
         per_doc.groupBy("lang")
         .agg(F.sum("n_tokens").alias("avail_tokens"))
-        .withColumn("tgt", tgt)
+        .withColumn("tgt", _by_lang(MIXTURE_TARGET, F.lit(None).cast("double")))
         .filter(F.col("tgt").isNotNull())
     )
     need = F.floor(F.col("tgt") * F.col("budget")).cast("long")
@@ -1043,8 +994,7 @@ def curate_length_dist(spark, sf_dir):
     from pyspark.sql import Window
 
     d = read_table(spark, sf_dir, "documents")
-    n = F.size(F.split(F.trim(F.col("text")), " "))
-    t = d.select(n.alias("n_tokens")).select(
+    t = d.select(word_count().alias("n_tokens")).select(
         F.expr(_len_bucket_case("n_tokens")).cast("long").alias("bucket"),
         "n_tokens",
     )

@@ -36,6 +36,19 @@ from .similarity import (
     _vnorm,
 )
 from .tables import read_table, table_rows
+from .textstats import (
+    ROLL_BASE,
+    ROLL_MOD,
+    ROLL_SEED,
+    _marker_hits,
+    _roll_token_value,
+    _sql_hits,
+    _word_ngrams,
+    alpha_count,
+    quality_score,
+    text_hash,
+    word_count,
+)
 
 SHINGLE_K = 3          # 3-word shingles
 JACCARD_THRESHOLD = 0.5
@@ -74,8 +87,6 @@ def _shingle_array():
     never index the source array per element (element_at(toks, i)
     re-evaluates split(text) per element on the interpreted HOF path;
     see the _word_ngrams performance contract)."""
-    from .textstats import _word_ngrams
-
     return F.array_distinct(_word_ngrams(SHINGLE_K))
 
 
@@ -96,8 +107,6 @@ def _hashed_shingle_array():
     used where the shingle string itself matters: MinHash sketches
     (seeded xxhash64 over the STRING is the pinned value) and
     text_top_ngrams (the trigram string is the output)."""
-    from .textstats import _word_ngrams
-
     return F.array_distinct(
         F.transform(_word_ngrams(SHINGLE_K), lambda s: F.xxhash64(s))
     )
@@ -115,7 +124,7 @@ def dedup_exact(spark, sf_dir):
     Returns every doc with its fingerprint and duplicate-group size —
     at 10^12 rows this is a single shuffle on the hash key."""
     d = read_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
+    fp = text_hash()
     counts = (
         d.select(F.col("doc_id"), fp.alias("fp"))
         .groupBy("fp")
@@ -1123,8 +1132,6 @@ def _passage_fps():
     contract): every array is a HOF ARGUMENT, never indexed per element
     by a lambda, so the cost is O(W * n_tokens) per row with split(text)
     evaluated a constant number of times."""
-    from .textstats import ROLL_BASE, ROLL_MOD, ROLL_SEED, _roll_token_value
-
     toks = F.split(F.col("text"), " ")
     tok_val = F.transform(toks, _roll_token_value)
     n_win = F.greatest(F.size(toks) - PASSAGE_W + 1, F.lit(0))
@@ -1169,8 +1176,6 @@ def dedup_passage(spark, sf_dir):
 
 
 def _sql_passage() -> str:
-    from .textstats import ROLL_BASE, ROLL_MOD, ROLL_SEED
-
     val = ("CAST((length(t) * 31 + CASE WHEN t = '' THEN 0 ELSE unicode(t) END) * 31"
            " + CASE WHEN t = '' THEN 0"
            " ELSE unicode(substr(t, length(t), 1)) END AS BIGINT)")
@@ -1222,19 +1227,11 @@ def dedup_keep_best(spark, sf_dir):
     order."""
     from pyspark.sql import Window
 
-    from .textstats import _marker_hits
-
     d = read_table(spark, sf_dir, "documents", wide=True)
     clusters = connected_components(
         jaccard_pairs(d).select("doc_a", "doc_b")
     )
-    n_words = F.size(F.split(F.trim(F.col("text")), " "))
-    n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
-    score = (
-        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.4
-        + F.least(_marker_hits("en") / n_words * 5.0, F.lit(1.0)) * 0.4
-        + F.least((n_alpha / n_words) / F.lit(8.0), F.lit(1.0)) * 0.2
-    )
+    score = quality_score(word_count(), _marker_hits("en"), alpha_count())
     scored = d.select(
         "doc_id", (F.floor(score * 1_000_000) / 1_000_000).alias("quality")
     )
@@ -1248,17 +1245,9 @@ def dedup_keep_best(spark, sf_dir):
     )
 
 
-def _sql_kb_en_pat() -> str:
-    from .textstats import LANG_MARKERS
-
-    # single-backslash \b for DuckDB (Spark-side escaping is handled by
-    # _marker_hits; CLAUDE.md gotcha #2)
-    return "\\b(" + "|".join(LANG_MARKERS["en"]) + ")\\b"
-
-
 _SQL_KB_Q = f"""
   floor((least(len(string_split(trim(text), ' ')) / 100.0, 1.0) * 0.4
-         + least(len(regexp_extract_all(lower(text), '{_sql_kb_en_pat()}'))
+         + least({_sql_hits('en')}
                  * 1.0 / len(string_split(trim(text), ' ')) * 5.0, 1.0) * 0.4
          + least((length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
                   / len(string_split(trim(text), ' '))) / 8.0, 1.0) * 0.2)
@@ -1364,8 +1353,6 @@ def _chunk_array():
     Docs under LINE_CHUNK_WORDS words are one whole-text chunk; a
     ragged tail (sz % 10 != 0) becomes its own final chunk, so the
     chunks cover every word exactly once."""
-    from .textstats import _word_ngrams
-
     n = LINE_CHUNK_WORDS
     toks = F.split(F.col("text"), " ")
     sz = F.size(toks)
@@ -1537,7 +1524,7 @@ def dedup_bloom(spark, sf_dir):
     scanned once and never re-shuffled beyond the agg's map-side
     combine."""
     d = read_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
+    fp = text_hash()
     existing = d.filter(F.col("doc_id") % INCR_NEW_MOD != 0).select(
         fp.alias("fp")
     )
@@ -1629,7 +1616,6 @@ FROM hits
 
 
 SEM_K = 8          # centroid count; production scales this ~n/avg_cluster
-SEM_KEEP_LOWEST = True  # SemDeDup keep-policy: lowest centroid similarity
 
 
 def semantic_assign(e: DataFrame, k: int = SEM_K) -> DataFrame:

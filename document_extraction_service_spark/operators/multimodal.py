@@ -32,25 +32,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .dedup import bounded_postings, posting_pairs
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), True),       # image|audio|video|unknown
-        T.StructField("payload", T.BinaryType(), True),    # the opaque blob
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("n_bytes", T.LongType(), True),
-                    T.StructField("magic", T.StringType(), True),
-                    T.StructField("digest", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),

@@ -29,6 +29,14 @@ TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 TOKEN_RE_SPARK = TOKEN_RE.replace("\\", "\\\\")  # Spark SQL literal escaping
 
 
+# --- per-document features ---------------------------------------------------
+# Each Spark-side feature over the `text` / `doc_id` columns is defined
+# once here and shared by textstats, curation and dedup; a lint test
+# (test_operators_oracle.py::test_text_features_defined_once) keeps it
+# so.  The DuckDB oracles restate each formula on their own and never
+# import these.
+
+
 def _marker_hits(lang: str):
     # NOTE: Spark SQL string literals process backslash escapes, so the
     # regex needs doubled backslashes inside F.expr (DuckDB literals do
@@ -37,22 +45,70 @@ def _marker_hits(lang: str):
     return F.size(F.expr(f"regexp_extract_all(lower(text), '{pat}', 0)"))
 
 
-def text_langid(spark, sf_dir):
-    """N-gram/stopword language-ID heuristic: argmax of marker-word
-    hits with a fixed precedence tie-break (en > de > fr > es >
-    unknown).  At 10^12 rows this is a pure map — no shuffle."""
-    d = read_table(spark, sf_dir, "documents")
-    hits = {lang: _marker_hits(lang).alias(f"{lang}_hits") for lang in LANG_MARKERS}
-    scored = d.select("doc_id", *hits.values())
+def lang_guess():
+    """Column: argmax over the `{lang}_hits` columns with a fixed
+    precedence tie-break (en > de > fr > es; 'unknown' if no hits)."""
     best = F.greatest(*[F.col(f"{lg}_hits") for lg in LANG_MARKERS])
-    pred = (
+    return (
         F.when(best == 0, F.lit("unknown"))
         .when(F.col("en_hits") == best, F.lit("en"))
         .when(F.col("de_hits") == best, F.lit("de"))
         .when(F.col("fr_hits") == best, F.lit("fr"))
         .otherwise(F.lit("es"))
     )
-    return scored.select("doc_id", pred.alias("pred_lang"), "en_hits", "de_hits")
+
+
+def word_count():
+    """Column: words of the trimmed `text`, split on single spaces."""
+    return F.size(F.split(F.trim(F.col("text")), " "))
+
+
+def alpha_count():
+    """Column: ASCII letters in `text`."""
+    return F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
+
+
+def token_count():
+    """Column: TOKEN_RE tokens in `text` (letters / digits / single
+    punctuation)."""
+    return F.size(F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)"))
+
+
+def quality_score(n_words, en_hits, n_alpha):
+    """Column: unfloored quality score from length, English stopword
+    rate and mean word length — rational arithmetic only, so both
+    engines compute the same double.  Takes columns or expressions."""
+    return (
+        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.4
+        + F.least(en_hits / n_words * 5.0, F.lit(1.0)) * 0.4
+        + F.least((n_alpha / n_words) / F.lit(8.0), F.lit(1.0)) * 0.2
+    )
+
+
+def text_hash():
+    """Column: exact-dedup key, md5 of the lowercased trimmed `text`."""
+    return F.md5(F.lower(F.trim(F.col("text"))))
+
+
+def doc_fraction():
+    """Column: a pure function of `doc_id` in [0, 1) — the first 32
+    bits of md5(doc_id) — for deterministic sampling."""
+    return (
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
+        .cast("long") / F.lit(4294967296.0)
+    )
+
+
+def text_langid(spark, sf_dir):
+    """N-gram/stopword language-ID heuristic: argmax of marker-word
+    hits (lang_guess).  At 10^12 rows this is a pure map — no
+    shuffle."""
+    d = read_table(spark, sf_dir, "documents")
+    hits = {lang: _marker_hits(lang).alias(f"{lang}_hits") for lang in LANG_MARKERS}
+    scored = d.select("doc_id", *hits.values())
+    return scored.select(
+        "doc_id", lang_guess().alias("pred_lang"), "en_hits", "de_hits"
+    )
 
 
 def _sql_hits(lang: str) -> str:
@@ -80,15 +136,8 @@ def text_quality(spark, sf_dir):
     """Quality score from length / stopword ratio / mean word length —
     rational arithmetic only (cross-engine bit-identical)."""
     d = read_table(spark, sf_dir, "documents")
-    n_words = F.size(F.split(F.trim(F.col("text")), " "))
-    n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
-    stop_hits = _marker_hits("en")
-    mean_wlen = n_alpha / n_words
-    score = (
-        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.4
-        + F.least(stop_hits / n_words * 5.0, F.lit(1.0)) * 0.4
-        + F.least(mean_wlen / F.lit(8.0), F.lit(1.0)) * 0.2
-    )
+    n_words = word_count()
+    score = quality_score(n_words, _marker_hits("en"), alpha_count())
     # floor instead of round: ROUND ties break HALF_UP in Spark but
     # half-even in DuckDB; floor of the bit-identical double is safe
     return d.select(
@@ -98,12 +147,11 @@ def text_quality(spark, sf_dir):
     )
 
 
-_EN_PAT = r"\b(" + "|".join(LANG_MARKERS["en"]) + r")\b"
 SQL_QUALITY = f"""
 WITH s AS (SELECT doc_id,
                   len(string_split(trim(text), ' ')) AS n_words,
                   length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-                  len(regexp_extract_all(lower(text), '{_EN_PAT}')) AS stop_hits
+                  {_sql_hits('en')} AS stop_hits
            FROM documents)
 SELECT doc_id, n_words,
        floor((least(n_words / 100.0, 1.0) * 0.4
@@ -121,9 +169,7 @@ def text_tokens(spark, sf_dir):
     return d.select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens_ws"),
-        F.size(
-            F.expr(f"regexp_extract_all(text, '{TOKEN_RE_SPARK}', 0)")
-        ).alias("n_tokens_re"),
+        token_count().alias("n_tokens_re"),
     )
 
 

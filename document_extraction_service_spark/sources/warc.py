@@ -261,7 +261,9 @@ def write_wet(df: DataFrame, path: str) -> None:
 _GLOB_CHARS = re.compile(r"[\\\[\]{}*?]")
 
 
-def _list_warc_paths(spark: SparkSession, path: str) -> DataFrame:
+def _list_warc_paths(
+    spark: SparkSession, path: str, cols: tuple = ("path",)
+) -> DataFrame:
     """Distributed file LISTING via binaryFile pruned to `path`: the
     content column is never in the required schema, so the format
     neither reads file bytes nor applies its 2 GB/file cap — the scan
@@ -275,14 +277,16 @@ def _list_warc_paths(spark: SparkSession, path: str) -> DataFrame:
     FileNotFoundException stack trace at WARN on every read.  The
     reader globs every path it loads again, so glob characters in a
     matched name (`crawl[1].warc`) are backslash-escaped first.  A glob
-    matching nothing is loaded as given, so it fails as before."""
+    matching nothing is loaded as given, so it fails as before.  `cols`
+    picks binaryFile metadata columns (`length`, `modificationTime`)
+    beside `path`; never `content`."""
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     matched = fs.globStatus(hpath)
     paths = [_GLOB_CHARS.sub(r"\\\g<0>", st.getPath().toString())
              for st in matched or ()] or [path]
-    return spark.read.format("binaryFile").load(paths).select("path")
+    return spark.read.format("binaryFile").load(paths).select(*cols)
 
 
 class _GzipStream:

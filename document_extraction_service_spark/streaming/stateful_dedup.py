@@ -40,7 +40,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 N_SHARDS_DEFAULT = 64
 MAX_URLS_PER_SHARD = 100_000
-IDLE_TIMEOUT_MS = 24 * 3600 * 1000  # expire shards idle for a day
 
 DEDUP_OUT_SCHEMA = T.StructType(
     [

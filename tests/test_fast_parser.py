@@ -46,6 +46,16 @@ ADVERSARIAL = [
     b'<p><a href="?a=1&amp;b=2&lt;3" title="&quot;t&quot; &#62;">entity</a> attr</p>',
     b"<P>upper <A HREF=/x.html CLASS=k>LINK TEXT</A> tail</P>",
     b"<table><tr><a href='#'><td colspan=3>wrapped cell</td></a></tr></table>",
+    # a quote opens an attribute value only right after '='; a stray
+    # one is part of an attribute name and the tag still closes
+    b'<p>see <a href="x"">link</a> now</p>',
+    b'<p>a <span class="k" ">b</span> c</p>',
+    b'<p>a <img alt="x" "> c</p>',
+    b'<p>a <a b"c>d">e</p>',
+    b'<p>a <a x=y"z>w">e</p>',
+    b'<p>a <a x= "unterminated>e</p><p>next</p>',
+    # a tag with no closing '>' outside quotes is text through the next '>'
+    b'<p>x</p><a x="<b>y</b>',
 ]
 
 
@@ -86,3 +96,39 @@ def test_void_block_tags_pinned(idx, engine):
     r = parse_html(payload, engine)
     assert [(b.text, b.tag, b.heading, b.depth, b.in_chrome) for b in r.blocks] == blocks
     assert [t.rows for t in r.tables] == tables
+
+
+# '<'+letter runs with no closing '>' (also end tags and unterminated
+# quotes) parse in one pass, not one scan to the end of the page per '<'
+UNTERMINATED = [b"<a ", b"</a ", b'<a x="', b"<a '"]
+
+
+@pytest.mark.parametrize("unit", UNTERMINATED)
+def test_unterminated_tag_runs_parse_in_linear_time(unit):
+    import time
+
+    small = b"<p>x</p>" + unit * 2_000
+    assert parse_html(small, "fast") == parse_html(small, "stdlib")
+    big = b"<p>x</p>" + unit * 50_000
+    t0 = time.perf_counter()
+    r = parse_html(big, "fast")
+    assert time.perf_counter() - t0 < 2.0
+    assert [b.text for b in r.blocks][0] == "x"
+
+
+def test_failed_tag_scans_are_bounded():
+    """Every tag here hides its '>' in a quoted value, so each one
+    fails after a scan to the end of the page; past
+    MAX_FAILED_TAG_SCANS page lengths of such scans the rest is text
+    and the result is flagged truncated.  The blocks are stdlib's."""
+    import time
+
+    few = b"<p>x</p>" + b'<a x=">" ' * 3
+    assert parse_html(few, "fast") == parse_html(few, "stdlib")
+    small = b"<p>x</p>" + b'<a x=">" ' * 1_000
+    fast, ref = parse_html(small, "fast"), parse_html(small, "stdlib")
+    assert fast.blocks == ref.blocks
+    assert fast.truncated and not ref.truncated
+    t0 = time.perf_counter()
+    parse_html(b"<p>x</p>" + b'<a x=">" ' * 200_000, "fast")
+    assert time.perf_counter() - t0 < 2.0

@@ -101,6 +101,34 @@ def test_fingerprint_includes_n_buckets_and_mtime(tmp_path):
     assert input_fingerprint(str(tmp_path / "in"), 128) != fp2
 
 
+def test_reader_fingerprint_follows_the_hadoop_listing(spark, tmp_path):
+    """warc:/jsonl:/wet:/wds: fingerprints hash the files the readers
+    list (Hadoop glob): a brace set and a file:// URI, which Python's
+    glob matches nothing for, change fingerprint when a matched file
+    changes; a directory spec changes when a file is added to it."""
+    import os
+
+    from document_extraction_service_spark.job import input_fingerprint
+
+    d = tmp_path / "w"
+    d.mkdir()
+    a = d / "a.warc"
+    a.write_bytes(b"aaaa")
+    (d / "b.warc").write_bytes(b"bb")
+    specs = (f"warc:{d}/{{a,b}}.warc", f"warc:file://{d}/a.warc", f"warc:{d}")
+    before = {s: input_fingerprint(s, 8, spark) for s in specs}
+    assert before == {s: input_fingerprint(s, 8, spark) for s in specs}
+    assert len(set(before.values())) == 3
+    st = a.stat()
+    a.write_bytes(b"abcd")  # same size, regenerated in place
+    os.utime(a, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
+    after = {s: input_fingerprint(s, 8, spark) for s in specs}
+    assert all(after[s] != before[s] for s in specs)
+    (d / "c.warc").write_bytes(b"cc")
+    assert input_fingerprint(f"warc:{d}", 8, spark) != after[f"warc:{d}"]
+    assert input_fingerprint(f"warc:{d}/{{a,b}}.warc", 8, spark) == after[specs[0]]
+
+
 def test_lineage_excludes_stale_buckets_from_other_input(spark, dirs):
     """ADVICE r1: buckets committed from an older, different input must
     not leak into a later run's lineage/metrics (dynamic overwrite never

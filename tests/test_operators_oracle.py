@@ -433,6 +433,67 @@ def test_collects_only_in_bounded_postings():
     assert not offenders, "\n".join(offenders)
 
 
+def test_text_features_defined_once():
+    """Each Spark-side per-document feature in operators/ is built only
+    by its column function in textstats.py, so the copies used by
+    curation, dedup and textstats cannot drift apart.  Only Python
+    code is scanned: the DuckDB oracle strings restate the formulas on
+    purpose and are exempt."""
+    import ast
+    import pathlib
+
+    from document_extraction_service_spark import operators
+
+    def src(node):
+        return ast.unparse(node).replace('"', "'")
+
+    def call_name(node):
+        f = node.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    def feature(node):
+        """Name of the kernel that alone may build this node, or None."""
+        if isinstance(node, ast.Name) and node.id == "TOKEN_RE_SPARK" \
+                and isinstance(node.ctx, ast.Load):
+            return "token_count"
+        if isinstance(node, ast.BinOp) and isinstance(node.op, ast.Mult) \
+                and isinstance(node.right, ast.Constant) \
+                and node.right.value in (0.4, 0.2) \
+                and isinstance(node.left, ast.Call) \
+                and call_name(node.left) == "least":
+            return "quality_score"
+        if not isinstance(node, ast.Call):
+            return None
+        name, text = call_name(node), src(node)
+        if name == "md5" and text.startswith("F.md5(F.lower(F.trim(F.col('text'))"):
+            return "text_hash"
+        if name == "md5" and text == "F.md5(F.col('doc_id').cast('string'))":
+            return "doc_fraction"
+        if name == "size" and text.startswith("F.size(F.split(F.trim(F.col('text')), ' ')"):
+            return "word_count"
+        if name == "regexp_replace" and "'[^A-Za-z]'" in text:
+            return "alpha_count"
+        if name == "when" and text.startswith("F.when(") \
+                and isinstance(node.func.value, ast.Name) \
+                and "F.lit('unknown')" in text:
+            return "lang_guess"
+        return None
+
+    copies = {}
+    for path in sorted(pathlib.Path(operators.__file__).parent.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            owner = top.name if isinstance(top, ast.FunctionDef) else "<module>"
+            for node in ast.walk(top):
+                kernel = feature(node)
+                if kernel and not (path.name == "textstats.py" and owner == kernel):
+                    copies.setdefault((path.name, owner, kernel), set()).add(node.lineno)
+    offenders = [
+        f"{f}:{','.join(map(str, sorted(lines)))} ({owner}): copy of {kernel}"
+        for (f, owner, kernel), lines in sorted(copies.items())
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
 def test_python_stages_exchange_arrow():
     """Every executor-side Python stage in the package exchanges
     pyarrow batches (arrow_udf / mapInArrow / applyInArrow): no
