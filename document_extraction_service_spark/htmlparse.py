@@ -30,8 +30,10 @@ MAX_CELLS_PER_TABLE = 4_096
 # A start/end tag with no closing '>' is text, found by a scan to the
 # end of the page from its '<'.  After failed scans worth this many
 # page lengths the rest of the page is text, so tag soup that fails
-# at every '<' stays linear.
-MAX_FAILED_TAG_SCANS = 16
+# at every '<' stays linear.  A failed scan walks stdlib's attribute
+# grammar name by name; at 8 page lengths the worst-case page (1.8 MB
+# of such tags) parses in under a second on one core.
+MAX_FAILED_TAG_SCANS = 8
 
 _META_CHARSET_RE = re.compile(
     rb"""<meta[^>]+charset\s*=\s*["']?\s*([a-zA-Z0-9_\-]+)""", re.I
@@ -443,12 +445,23 @@ _TOKEN_RE = re.compile(
       | ![^>]*>?                         # doctype / other declarations
       | \?[^>]*>?                        # processing instruction
       | /(?![a-zA-Z])[^>]*>?             # bogus end tag -> bogus comment (stdlib parity)
-      | (?P<end>/)?(?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*)  # tolerant tag name (stdlib charset)
-        # a quote opens a value only right after '=' (elsewhere it is
-        # part of a name, as in stdlib); possessive, so a tag with no
-        # closing '>' fails without backtracking
-        (?P<attrs>(?:[^>=]+|=+\s*(?:"[^"]*"|'[^']*'|(?!["'])[^>\s]*))*+)
+        # end tag: ends at the first '>', quoted or not (stdlib parity)
+      | /(?P<end>[a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>
+      | (?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*)  # tolerant tag name (stdlib charset)
+        # stdlib's attribute grammar (locatestarttagend_tolerant), made
+        # possessive so a tag with no closing '>' fails without
+        # backtracking: a name starts after whitespace, '/' or a quote
+        # and may begin with '=' (a run of names without values is one
+        # step); a quote opens a value only right after '='; a '/'
+        # right before '>' is left to selfclose
+        (?P<attrs>(?:\s*+(?:/(?!>)\s*+)*+
+          (?<=['"\s/])[^\s/>][^\s/=>]*+(?:\s++[^\s/>=][^\s/=>]*+)*+
+          (?>\s*+=+\s*(?:'[^']*'|"[^"]*"|(?!['"])[^>\s]*))?)*+
+          \s*+(?:/(?!>)\s*+)*+)
         (?P<selfclose>/)?>
+        # a NUL right after the name ends the tag at once: its text
+        # stays text (stdlib parity), with no failed scan to charge
+      | (?P<nul>[a-zA-Z][^\t\n\r\f />\x00]*(?<!['"])(?=\x00))
       # unterminated tag: text through the next '>' (stdlib's recovery);
       # with no '>' left the rest is text in one match, not one failed
       # scan per later '<'
@@ -499,7 +512,9 @@ def _fast_feed(p: _BlockParser, text: str) -> None:
     pos = 0
     while True:
         for m in finditer(text, pos):
-            end, tag, attrs, selfclose, stray = m.groups()
+            end, tag, attrs, selfclose, nul, stray = m.groups()
+            if nul is not None:
+                continue  # stays in the surrounding text
             if stray is not None:
                 scan_budget -= n - m.start()
                 if scan_budget >= 0:
@@ -513,12 +528,12 @@ def _fast_feed(p: _BlockParser, text: str) -> None:
                 data = text[pos:start]
                 handle_data(unescape(data) if "&" in data else data)
             pos = m.end()
+            if end is not None:
+                endtag(end.lower())
+                continue
             if tag is None:
                 continue  # comment/doctype/pi: ignored (stdlib parity)
             tag_l = tag.lower()
-            if end:
-                endtag(tag_l)
-                continue
             attrs = _parse_attrs(attrs) if tag_l in _ATTR_TAGS else []
             if selfclose:
                 p.handle_startendtag(tag_l, attrs)

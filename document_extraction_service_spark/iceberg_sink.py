@@ -14,8 +14,8 @@ Mapping onto Iceberg primitives (vs the job.py stand-in):
   parquet stand-in (job.py)             Iceberg path (here)
   ------------------------------------  ----------------------------------
   bucket=NN partition dirs              PARTITIONED BY bucket column
-                                        (an explicit int column, same
-                                        pmod(xxhash64(url), B) as job.py —
+                                        (an explicit int column, the
+                                        same job.extraction_frame —
                                         portable to `bucket(B, url)`
                                         transform once DDL owns layout)
   dynamic partition overwrite           df.writeTo(t).overwritePartitions()
@@ -24,14 +24,20 @@ Mapping onto Iceberg primitives (vs the job.py stand-in):
   input file-listing fingerprint        input table's CURRENT SNAPSHOT ID
                                         (stable under file moves; changes
                                         iff data changes)
-  lineage parquet append                lineage Iceberg table .append()
-                                        with the OUTPUT snapshot id per
+  lineage parquet append                lineage Iceberg table .append():
+                                        the same job.lineage_rows columns
+                                        plus the OUTPUT snapshot id per
                                         committed batch
 
-Resume: lineage rows carry (input_fingerprint = snapshot-scoped id,
-bucket); a rerun with --resume skips buckets already committed for the
-SAME input snapshot, exactly like job.py — but the fingerprint now
-comes from the Iceberg catalog, not an os.walk.
+Everything else is job.py's, shared and not restated here: the
+extraction frame (bucket, scope, repartition, input_fp), the one bucket
+scope filter on the pages and on the committed re-read, the resume rule
+(job.finished_buckets: a rerun with resume=True skips buckets already
+committed for the SAME input snapshot) and the per-bucket counts, so
+the lineage columns are identical across sinks (run_id, bucket,
+input_fingerprint, n_ok, n_failed, n_truncated, n_fallback, wall_ms,
+committed_at), with output_snapshot_id added here.  Only the
+fingerprint comes from the Iceberg catalog instead of an os.walk.
 """
 
 from __future__ import annotations
@@ -39,11 +45,16 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .job import DEFAULT_BUCKETS
-from .udfs import extraction_col
+from .job import (
+    DEFAULT_BUCKETS,
+    committed,
+    extraction_frame,
+    finished_buckets,
+    lineage_rows,
+)
 
 CATALOG = "graft"
 JARS_ENV = "SPARK_GRAFT_ICEBERG_JARS"
@@ -96,31 +107,12 @@ def current_snapshot_id(spark: SparkSession, table: str) -> int | None:
     return int(rows[0][0]) if rows else None
 
 
-def _table_exists(spark: SparkSession, table: str) -> bool:
-    return spark.catalog.tableExists(table)
-
-
 def snapshot_fingerprint(spark: SparkSession, table: str, n_buckets: int) -> str:
     """Input identity for resume: the Iceberg snapshot id scoped by the
     bucket modulus (same reasoning as job.input_fingerprint — bucket ids
     are only comparable under one modulus)."""
     snap = current_snapshot_id(spark, table)
     return f"iceberg:{table}@{snap}|B={n_buckets}"
-
-
-def finished_buckets(
-    spark: SparkSession, lineage_table: str, fingerprint: str
-) -> list[int]:
-    if not _table_exists(spark, lineage_table):
-        return []
-    rows = (
-        spark.table(lineage_table)
-        .filter(F.col("input_fingerprint") == fingerprint)
-        .select("bucket")
-        .distinct()
-        .collect()  # bucket set <= n_buckets, driver-safe
-    )
-    return [r["bucket"] for r in rows]
 
 
 def run_job_iceberg(
@@ -137,29 +129,11 @@ def run_job_iceberg(
     Idempotent per (input snapshot, bucket)."""
     t0 = time.time()
     fp = snapshot_fingerprint(spark, input_table, n_buckets)
-    pages = spark.table(input_table).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
-
-    skip: set[int] = set(finished_buckets(spark, lineage_table, fp)) if resume else set()
-    if skip:
-        pages = pages.filter(~F.col("bucket").isin(sorted(skip)))
-
-    extracted = (
-        pages.repartition(n_buckets, "bucket")
-        .select("url", "warc_ts", "html", "lang", "text", "bucket")
-        .withColumn("_res", extraction_col())
-        .select(
-            "url",
-            "warc_ts",
-            "bucket",
-            F.lit(fp).alias("input_fp"),
-            F.col("_res.extraction").alias("extraction"),
-            F.col("_res.status").alias("status"),
-        )
-    )
-
-    if not _table_exists(spark, output_table):
+    exists = spark.catalog.tableExists
+    lin = spark.table(lineage_table) if exists(lineage_table) else None
+    skip = finished_buckets(lin, fp) if resume else []
+    extracted = extraction_frame(spark.table(input_table), fp, n_buckets, skip)
+    if not exists(output_table):
         # first run: create partitioned on the explicit bucket column
         extracted.writeTo(output_table).partitionedBy(F.col("bucket")).create()
     else:
@@ -169,47 +143,22 @@ def run_job_iceberg(
     out_snap = current_snapshot_id(spark, output_table)
     wall_ms = int((time.time() - t0) * 1000)
 
-    # lineage from the committed output, scoped to THIS input snapshot
-    out = spark.table(output_table).filter(F.col("input_fp") == fp)
-    if skip:
-        out = out.filter(~F.col("bucket").isin(sorted(skip)))
-    lineage = (
-        out.groupBy("bucket")
-        .agg(
-            F.sum(F.col("status.ok").cast("long")).alias("n_ok"),
-            F.sum((~F.col("status.ok")).cast("long")).alias("n_failed"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("input_fingerprint", F.lit(fp))
-        .withColumn("output_snapshot_id", F.lit(out_snap).cast("long"))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .select(
-            "run_id", "bucket", "input_fingerprint", "output_snapshot_id",
-            "n_ok", "n_failed", "wall_ms",
-        )
+    lineage, totals = lineage_rows(
+        spark, committed(spark.table(output_table), fp, skip), run_id, fp, wall_ms,
+        output_snapshot_id=F.lit(out_snap).cast("long"),
     )
-    if not _table_exists(spark, lineage_table):
+    if lin is None:
         lineage.writeTo(lineage_table).create()
     else:
         lineage.writeTo(lineage_table).append()
-
-    totals = (
-        spark.table(lineage_table)
-        .filter(
-            (F.col("input_fingerprint") == fp) & (F.col("run_id") == run_id)
-        )
-        .agg(F.sum(F.col("n_ok") + F.col("n_failed")).alias("n"),
-             F.sum("n_ok").alias("n_ok"))
-        .collect()[0]
-    )
     return {
         "run_id": run_id,
         "input_fingerprint": fp,
         "output_snapshot_id": out_snap,
-        "n_rows": int(totals["n"] or 0),
-        "n_ok": int(totals["n_ok"] or 0),
+        "n_rows": totals["n_ok"] + totals["n_failed"],
+        "n_ok": totals["n_ok"],
         "wall_ms": wall_ms,
-        "skipped_buckets": sorted(skip),
+        "skipped_buckets": skip,
     }
 
 

@@ -18,13 +18,20 @@ Scale design (north_rule requirements, mapped):
   * resumable checkpoints: each bucket is an atomic unit — dynamic
     partition overwrite makes task replays idempotent per bucket; the
     lineage table records (run_id, bucket, input_fingerprint, n_ok,
-    n_failed); --resume anti-joins finished buckets for the same input
-    fingerprint (SURVEY §4.4, Iceberg-snapshot semantics on a parquet
-    fallback — this container ships no Iceberg runtime jars).  The
-    REAL Iceberg path (writeTo create/overwritePartitions/append,
-    snapshot-id fingerprints, snapshot-checkpoint resume) is
-    iceberg_sink.run_job_iceberg, exercised end-to-end by
-    tests/test_iceberg.py whenever SPARK_GRAFT_ICEBERG_JARS is set.
+    n_failed, n_truncated, n_fallback, wall_ms, committed_at); --resume
+    skips buckets already committed for the same input fingerprint
+    (SURVEY §4.4, Iceberg-snapshot semantics on a parquet fallback —
+    this container ships no Iceberg runtime jars).  The REAL Iceberg
+    path (writeTo create/overwritePartitions/append, snapshot-id
+    fingerprints) is iceberg_sink.run_job_iceberg, exercised end-to-end
+    by tests/test_iceberg.py whenever SPARK_GRAFT_ICEBERG_JARS is set.
+  * one job plan for every sink: extraction_frame (bucket, scope,
+    repartition, input_fp, udfs.with_extraction), in_scope (the one
+    bucket-scope filter, on the pages and on the committed re-read),
+    finished_buckets (the resume rule) and lineage_rows (bucket_counts,
+    collected once as Arrow) are shared with run_job_iceberg, which
+    adds only its snapshot fingerprint, table commits and
+    output_snapshot_id.
   * metrics: n_ok/n_failed/n_truncated/n_fallback come from the lineage
     aggregation over the committed output (a column-pruned scan;
     .observe() was measured 2x slower on the write stage and removed),
@@ -34,7 +41,8 @@ Scale design (north_rule requirements, mapped):
     lineage, the whole call's cost).  Without --resume or
     --wet a run launches only the write job, the lineage aggregation
     and the lineage write: bucket dirs are listed on the driver
-    (session.py), never by a listing job.
+    (session.py), never by a listing job; --resume adds one job, the
+    declared-schema lineage probe.
 """
 
 from __future__ import annotations
@@ -46,11 +54,11 @@ import os
 import time
 
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema import PAGES_SCHEMA, bucketed_pages_schema
-from .udfs import extraction_col
+from .udfs import with_extraction
 
 DEFAULT_BUCKETS = 128
 
@@ -177,17 +185,129 @@ def read_pages(spark: SparkSession, spec: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(spec)
 
 
-def finished_buckets(spark: SparkSession, lineage_path: str, fingerprint: str) -> list[int]:
+COUNTS = ("n_ok", "n_failed", "n_truncated", "n_fallback")
+
+
+def resume_lineage(spark: SparkSession, lineage_path: str) -> DataFrame | None:
+    """The parquet lineage table as the resume rule reads it: only
+    bucket + input_fingerprint, under a declared schema (a bare read
+    runs a schema-inference job first, CLAUDE.md gotcha #21); None
+    before the first run."""
     if not os.path.isdir(lineage_path) or not os.listdir(lineage_path):
+        return None
+    return spark.read.schema("bucket INT, input_fingerprint STRING").parquet(lineage_path)
+
+
+def finished_buckets(lineage: DataFrame | None, fingerprint: str) -> list[int]:
+    """The resume rule of every sink: buckets the lineage records as
+    committed for this input fingerprint, sorted.  `lineage` is None
+    before the sink's first run.  One Spark job: the bucket list is
+    tiny (<= n_buckets per run), so it is de-duplicated on the driver."""
+    if lineage is None:
         return []
-    lin = spark.read.parquet(lineage_path)
-    rows = (
-        lin.filter(F.col("input_fingerprint") == fingerprint)
-        .select("bucket")
-        .distinct()
-        .collect()  # bucket set is tiny (<= n_buckets), driver-safe
+    rows = lineage.filter(F.col("input_fingerprint") == fingerprint).select("bucket").collect()
+    return sorted({r[0] for r in rows})
+
+
+def in_scope(df: DataFrame, skip: list[int], only_buckets: list[int] | None) -> DataFrame:
+    """A run's bucket scope, applied alike to the pages it reads and to
+    the committed output it counts: `only_buckets` (all when None)
+    minus the resumed `skip` buckets.  The lists are small:
+    broadcast-friendly isin, no shuffle."""
+    if only_buckets is not None:
+        df = df.filter(F.col("bucket").isin([int(b) for b in only_buckets]))
+    if skip:
+        df = df.filter(~F.col("bucket").isin(skip))
+    return df
+
+
+def extraction_frame(
+    pages: DataFrame,
+    fingerprint: str,
+    n_buckets: int,
+    skip: list[int],
+    only_buckets: list[int] | None = None,
+) -> DataFrame:
+    """pages -> the frame every sink writes: (url, warc_ts, bucket,
+    input_fp, extraction, status), scoped to this run's buckets.
+
+    Pages without a `bucket` column get bucket = pmod(xxhash64(url), B)
+    and are repartitioned on it before the UDF chain, ALIGNED with the
+    partitionBy("bucket") write: each task holds whole buckets, so the
+    write emits ~1 file per bucket instead of tasks x buckets small
+    files (measured 2x job throughput at 60k rows), and B >> cores
+    keeps giant-page stragglers overlapped.  Pages read from bucket=NN
+    dirs need NO shuffle at all: scan tasks follow the dir layout, so
+    the whole job is map-only (scan -> UDF -> write); at 10^12 rows
+    this is the difference between moving 100 TB of payload over the
+    network and moving nothing.
+
+    The input fingerprint is embedded per row (constant -> RLE'd to
+    ~nothing in parquet): the lineage count and any later audit scope
+    to THIS input without trusting the table state (stale buckets from
+    an older input are excluded by construction, not by set
+    arithmetic).  No .observe(): CollectMetrics measured 2x slower on
+    this write at local[32] (90s vs 48s); every count comes from
+    bucket_counts over the committed output instead."""
+    bucketed = "bucket" in pages.columns
+    if not bucketed:
+        pages = pages.withColumn(
+            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+        )
+    pages = in_scope(pages, skip, only_buckets)
+    if not bucketed:
+        pages = pages.repartition(n_buckets, "bucket")
+    return with_extraction(pages.withColumn("input_fp", F.lit(fingerprint)), "bucket", "input_fp")
+
+
+def committed(
+    out: DataFrame, fingerprint: str, skip: list[int], only_buckets: list[int] | None = None
+) -> DataFrame:
+    """The sink's committed rows of THIS run: this input's fingerprint
+    (bucket partitions left over from an older input are never touched
+    by a dynamic overwrite) and this run's bucket scope."""
+    return in_scope(out.filter(F.col("input_fp") == fingerprint), skip, only_buckets)
+
+
+def bucket_counts(out: DataFrame) -> DataFrame:
+    """Per-bucket (bucket, n_ok, n_failed, n_truncated, n_fallback) of
+    a committed output: a column-pruned scan of bucket + status only,
+    never the extraction payload."""
+    return out.groupBy("bucket").agg(
+        F.sum(F.col("status.ok").cast("long")).alias("n_ok"),
+        F.sum((~F.col("status.ok")).cast("long")).alias("n_failed"),
+        F.sum(F.col("status.truncated").cast("long")).alias("n_truncated"),
+        F.sum(F.col("status.fallback").cast("long")).alias("n_fallback"),
     )
-    return [r["bucket"] for r in rows]
+
+
+def lineage_rows(
+    spark: SparkSession, out: DataFrame, run_id: str, fingerprint: str, wall_ms: int,
+    **extra: Column,
+) -> tuple[DataFrame, dict[str, int]]:
+    """One lineage row per committed bucket, (run_id, bucket,
+    input_fingerprint, *extra, n_ok, n_failed, n_truncated, n_fallback,
+    wall_ms, committed_at), and the run's totals.
+
+    The table is <= n_buckets rows by construction: it is collected
+    ONCE as Arrow (driver-safe), totalled on the driver, and returned
+    as a frame over the collected table — one pass over the committed
+    output instead of two.  An Arrow table becomes a LocalTableScan,
+    written by one task as one file with no Python worker; a list of
+    Rows would be pickled through a Python RDD instead (128 rows at
+    local[4] on 4 vCPUs: 0.23 -> 0.085 s)."""
+    lineage = bucket_counts(out).select(
+        F.lit(run_id).alias("run_id"),
+        "bucket",
+        F.lit(fingerprint).alias("input_fingerprint"),
+        *(c.alias(name) for name, c in extra.items()),
+        *COUNTS,
+        F.lit(wall_ms).alias("wall_ms"),
+        F.lit(_dt.datetime.now(_dt.timezone.utc)).alias("committed_at"),
+    )
+    tbl = lineage.toArrow()
+    totals = {c: pc.sum(tbl[c]).as_py() or 0 for c in COUNTS}
+    return spark.createDataFrame(tbl, lineage.schema).coalesce(1), totals
 
 
 def run_job(
@@ -204,54 +324,8 @@ def run_job(
     """Returns job metrics dict. Idempotent per (input, bucket)."""
     t0 = time.time()
     fp = input_fingerprint(input_spec, n_buckets, spark)
-    bucketed = is_bucketed_input(input_spec)
-    pages = read_pages(spark, input_spec)
-    if not bucketed:
-        pages = pages.withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-        )
-
-    skip: set[int] = set(finished_buckets(spark, lineage_path, fp)) if resume else set()
-    if only_buckets is not None:
-        pages = pages.filter(F.col("bucket").isin([int(b) for b in only_buckets]))
-    if skip:
-        # bucket list is small: broadcast-friendly isin, no shuffle
-        pages = pages.filter(~F.col("bucket").isin(sorted(skip)))
-
-    if not bucketed:
-        # explicit url-hash repartitioning before the UDF chain, ALIGNED
-        # with the bucket column: with one partition per bucket each task
-        # holds whole buckets, so the partitionBy("bucket") write emits ~1
-        # file per bucket instead of tasks x buckets small files (measured
-        # 2x job throughput at 60k rows).  Buckets >> cores keeps
-        # giant-page stragglers overlapped.
-        pages = pages.repartition(n_buckets, "bucket")
-    # bucketed input: NO shuffle at all — scan tasks follow the bucket=NN
-    # dir layout, so the whole job is map-only (scan -> UDF -> write);
-    # at 10^12 rows this is the difference between moving 100 TB of
-    # payload over the network and moving nothing.
-
-    # NOTE: no .observe() here — CollectMetrics measured 2x slower on
-    # this write at local[32] (90s vs 48s); all metrics come from the
-    # lineage aggregation over the committed output instead (a
-    # column-pruned second scan that reads only bucket + status).
-    extracted = (
-        pages.select("url", "warc_ts", "html", "lang", "text", "bucket")
-        .withColumn("_res", extraction_col())
-        .select(
-            "url",
-            "warc_ts",
-            "bucket",
-            # snapshot identity embedded per row (constant -> RLE'd to
-            # ~nothing in parquet): the lineage scan below and any
-            # later audit can scope to THIS input without trusting the
-            # directory state (stale buckets from an older input are
-            # excluded by construction, not by set arithmetic)
-            F.lit(fp).alias("input_fp"),
-            F.col("_res.extraction").alias("extraction"),
-            F.col("_res.status").alias("status"),
-        )
-    )
+    skip = finished_buckets(resume_lineage(spark, lineage_path), fp) if resume else []
+    extracted = extraction_frame(read_pages(spark, input_spec), fp, n_buckets, skip, only_buckets)
 
     t_plan = time.time()
     writer = (
@@ -265,23 +339,13 @@ def run_job(
     t_written = time.time()
     wall_ms = int((t_written - t0) * 1000)
 
-    # per-bucket lineage from the committed output (column-pruned scan:
-    # reads only bucket + input_fp + status.ok, never the extraction
-    # payload).  Scoped to THIS input via the embedded input_fp —
-    # bucket partitions left over from an older input (dynamic
-    # overwrite never touches buckets absent from the current input)
-    # are excluded — and to this run's buckets via skip/only.  The
-    # output schema is the one this function just wrote, so it is
+    # the output schema is the one this function just wrote, so it is
     # passed explicitly: a bare spark.read.parquet runs one
     # schema-inference job over the footers first (CLAUDE.md gotcha
-    # #21) — pure overhead on the job's own table.
-    out = spark.read.schema(extracted.schema).parquet(output_path).filter(
-        F.col("input_fp") == fp
+    # #21) — pure overhead on the job's own table
+    out = committed(
+        spark.read.schema(extracted.schema).parquet(output_path), fp, skip, only_buckets
     )
-    if skip:
-        out = out.filter(~F.col("bucket").isin(sorted(skip)))
-    if only_buckets is not None:
-        out = out.filter(F.col("bucket").isin([int(b) for b in only_buckets]))
     if wet_path:
         # optional WET twin of the parquet sink: ok pages only, from the
         # COMMITTED output (column-pruned scan — url/bucket/text), so the
@@ -298,40 +362,11 @@ def run_job(
             wet_path,
         )
 
-    lineage = (
-        out.groupBy("bucket")
-        .agg(
-            F.sum(F.col("status.ok").cast("long")).alias("n_ok"),
-            F.sum((~F.col("status.ok")).cast("long")).alias("n_failed"),
-            F.sum(F.col("status.truncated").cast("long")).alias("n_truncated"),
-            F.sum(F.col("status.fallback").cast("long")).alias("n_fallback"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("input_fingerprint", F.lit(fp))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("committed_at", F.lit(_dt.datetime.now(_dt.timezone.utc)))
-        .select(
-            "run_id", "bucket", "input_fingerprint",
-            "n_ok", "n_failed", "n_truncated", "n_fallback",
-            "wall_ms", "committed_at",
-        )
-    )
-    # the lineage table is <= n_buckets rows by construction: collect
-    # it ONCE as Arrow (driver-safe, the finished_buckets contract),
-    # total it on the driver, and write the collected table back — one
-    # pass over the committed output instead of two.  An Arrow table
-    # becomes a LocalTableScan, written by one task as one file with no
-    # Python worker; a list of Rows would be pickled through a Python
-    # RDD instead (128 rows at local[4] on 4 vCPUs: 0.23 -> 0.085 s).
-    lineage_tbl = lineage.toArrow()
-    spark.createDataFrame(lineage_tbl, lineage.schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(lineage_path)
+    lineage, totals = lineage_rows(spark, out, run_id, fp, wall_ms)
+    lineage.write.mode("append").parquet(lineage_path)
     t_done = time.time()
     lineage_ms = int((t_done - t_written) * 1000)
 
-    totals = {c: pc.sum(lineage_tbl[c]).as_py() or 0
-              for c in ("n_ok", "n_failed", "n_truncated", "n_fallback")}
     n_rows = totals["n_ok"] + totals["n_failed"]
     return {
         "run_id": run_id,
@@ -346,7 +381,7 @@ def run_job(
         "lineage_ms": lineage_ms,
         "total_ms": int((t_done - t0) * 1000),
         "docs_per_sec": n_rows / max(wall_ms / 1000.0, 1e-9),
-        "skipped_buckets": sorted(skip),
+        "skipped_buckets": skip,
     }
 
 

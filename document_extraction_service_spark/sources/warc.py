@@ -212,17 +212,6 @@ def _iter_warc_stream(
         yield url.decode("utf-8", "replace"), ts, payload
 
 
-def _parse_warc_bytes(
-    content: bytes, want_type: bytes = b"response"
-) -> Iterator[tuple[str, object, bytes]]:
-    """In-memory twin of `_iter_warc_stream` (same code path via
-    BytesIO) — kept for tests and small-buffer callers; the Spark
-    sources never materialize file bytes, they stream."""
-    import io
-
-    yield from _iter_warc_stream(io.BytesIO(content), want_type=want_type)
-
-
 def write_wet(df: DataFrame, path: str) -> None:
     """WET sink — Common Crawl's extracted-text distribution format
     (WARC `conversion` records, one per page).  Input: a DataFrame

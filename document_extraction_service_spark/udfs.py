@@ -54,19 +54,16 @@ def extraction_col() -> Column:
     return extract_struct_udf("html", "url", "lang", "text")
 
 
-def with_extraction(df: DataFrame) -> DataFrame:
-    """pages df -> (url, warc_ts, extraction, status).
+def with_extraction(df: DataFrame, *carry: str) -> DataFrame:
+    """pages df -> (url, warc_ts, *carry, extraction, status): the one
+    place the RESULT struct is split into its two columns.
 
     The heavy `html` column is consumed here and not carried further —
     downstream stages and writes never shuffle page payloads.
     """
-    return df.select(
-        "url",
-        "warc_ts",
-        extraction_col().alias("_res"),
-    ).select(  # noqa: E501 — heavy html/text consumed in the projection above
-        "url",
-        "warc_ts",
+    keep = ("url", "warc_ts", *carry)
+    return df.select(*keep, extraction_col().alias("_res")).select(
+        *keep,
         F.col("_res.extraction").alias("extraction"),
         F.col("_res.status").alias("status"),
     )

@@ -56,6 +56,14 @@ ADVERSARIAL = [
     b'<p>a <a x= "unterminated>e</p><p>next</p>',
     # a tag with no closing '>' outside quotes is text through the next '>'
     b'<p>x</p><a x="<b>y</b>',
+    # '/>' closes the element it opens
+    b"<p>a <div/>b</p><p>c</p>",
+    # an end tag ends at its first '>', even inside quotes
+    b'<p>a <a href="x">t</a x=">"> tail</p>',
+    # '=' can start an attribute name
+    b"<p>x</p>" + b'<b =">"' * 3,
+    # a NUL after a tag name makes the tag text
+    b"<p>x<a\x00b>y</p><p>z<a\x00<b>w</b></p>",
 ]
 
 

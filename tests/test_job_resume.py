@@ -7,7 +7,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from document_extraction_service_spark.job import run_job
+from document_extraction_service_spark.job import finished_buckets, resume_lineage, run_job
 
 N = 200
 BUCKETS = 16
@@ -48,6 +48,17 @@ def test_kill_and_resume_equals_clean_run(spark, dirs, tmp_path):
     m1 = run_job(spark, f"synthetic:{N}", out, lin, "t-part",
                  n_buckets=BUCKETS, only_buckets=half)
     assert 0 < m1["n_rows"] < N
+
+    # the resume probe is one Spark job: a declared-schema read, with
+    # the bucket list de-duplicated on the driver
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-probe", "finished_buckets over the lineage")
+    try:
+        done = finished_buckets(resume_lineage(spark, lin), m1["input_fingerprint"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert done == half
+    assert len(sc.statusTracker().getJobIdsForGroup("resume-probe")) == 1
 
     m2 = run_job(spark, f"synthetic:{N}", out, lin, "t-resume",
                  n_buckets=BUCKETS, resume=True)
@@ -219,3 +230,31 @@ def test_job_budget_bucketed_input(spark, dirs, tmp_path):
     assert "HashAggregate" in agg_plan
     assert [tasks[j] for j in lin_jobs] == [[1]]
     assert "LocalTableScan" in lin_plan and "ExistingRDD" not in lin_plan
+
+
+def test_extraction_frame_split_only_in_udfs():
+    """Only udfs.py turns pages into the extraction frame: every other
+    module calls udfs.with_extraction instead of calling
+    extraction_col() or splitting the `_res` struct itself, so the
+    sinks, the streams and the driver entry cannot drift apart."""
+    import ast
+    import pathlib
+
+    import document_extraction_service_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "udfs.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                if (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")) \
+                        == "extraction_col":
+                    offenders.append(f"{rel}:{node.lineno} extraction_col()")
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str) \
+                    and node.value.split(".")[0] == "_res":
+                offenders.append(f"{rel}:{node.lineno} {node.value!r}")
+    assert not offenders, "\n".join(offenders)

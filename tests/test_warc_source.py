@@ -3,6 +3,7 @@ byte-identical extraction output to the parquet pages path, and one
 corrupt record must never kill a file's task."""
 
 import datetime
+import io
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -10,8 +11,8 @@ from pyspark.sql import functions as F
 
 from document_extraction_service_spark import fixtures
 from document_extraction_service_spark.sources.warc import (
+    _iter_warc_stream,
     _list_warc_paths,
-    _parse_warc_bytes,
     read_warc,
     write_warc,
 )
@@ -186,7 +187,7 @@ try:
                 {"url": u, "ts": None, "payload": b} for u, b in recs
             ])
             with open(p, "rb") as f:
-                got = list(_parse_warc_bytes(f.read()))
+                got = list(_iter_warc_stream(f))
         assert [(u, h) for u, _, h in got] == recs
 except ImportError:  # pragma: no cover - hypothesis is baked in
     pass
@@ -296,7 +297,7 @@ def test_warc_skips_non_response_and_malformed():
         b"WARC-Target-URI: https://x.test/bad\r\n"
         b"Content-Length: NOT_A_NUMBER\r\n\r\nxxxx\r\n\r\n"
     )
-    got = list(_parse_warc_bytes(buf))
+    got = list(_iter_warc_stream(io.BytesIO(buf)))
     assert [(u, h) for u, _, h in got] == [("https://x.test/good", good)]
 
 
